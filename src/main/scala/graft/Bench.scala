@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -98,15 +97,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Per-query shuffle-bytes-written meter: task metrics summed by a
     // listener, read as a settled delta around each query. Shuffle bytes
@@ -188,7 +179,7 @@ object Bench {
         // drop caches left by the previous query so timings are independent
         spark.catalog.clearCache()
         val isStream = SparkEntry.streamingQueries.contains(name)
-        // streaming telemetry is keyed by driveWaves' own drive names
+        // streaming telemetry is keyed by the harness's own drive names
         // (sfz_srol_42503), not SparkEntry names — attribute by the log
         // WINDOW around this query's invocation (drives run inside fn)
         val planMark = graft.streaming.DriveTelemetry.planLogSize
@@ -262,8 +253,8 @@ object Bench {
     val sbJson = shuffles.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")
-    // per-drive peak state-store rows (DriveTelemetry, recorded by
-    // driveWaves) — the bounded-state claim as a number; last pass wins
+    // per-drive peak state-store rows (DriveTelemetry, recorded by the
+    // wave harness) — the bounded-state claim as a number; last pass wins
     val peaksJson = graft.streaming.DriveTelemetry.peaks.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")

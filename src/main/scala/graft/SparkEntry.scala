@@ -45,7 +45,7 @@ object SparkEntry {
   val streamingQueries: Set[String] =
     // every EventOps wave drive, by construction: EventOps registers
     // drives through one drive() helper that feeds BOTH its query map
-    // and streamingQueryNames, and its harness trips at runtime if a
+    // and streamingQueryNames, and WaveHarness trips at runtime if a
     // batch-registered query ever reaches the wave machinery (closes
     // the r10 events_sessionize_window misclassification as a class)
     EventOps.streamingQueryNames ++

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.EventOps
+import graft.streaming.WaveHarness
 
 import scala.util.Random
 
@@ -12,7 +13,7 @@ import scala.util.Random
   * generators pick watermark delay, window geometry, and a RANDOM wave
   * carving of the events fixture (pure md5 shuffle, or time-buckets with
   * md5 jitter), drive the real micro-batch machinery through
-  * [[EventOps.driveWaves]], and check the finalized output against a
+  * [[WaveHarness.driveWaves]], and check the finalized output against a
   * DuckDB oracle that REPLAYS Spark's watermark semantics in plain SQL.
   *
   * Unlike the ascending-wave drives (where no row is ever late), random
@@ -156,14 +157,29 @@ object StreamFuzz {
           s" 1, 15) AS BIGINT) % 3 - 1), 0), ${nWaves - 1})"
     }
 
-  /** Fixture bounds CTE for jitter mode: the same lo / bucket-width the
-    * Scala side computes with one driver `agg` head.
+  /** The oracle's fixture CTEs up to `raw` (the DuckDB twin of
+    * [[carve]]): `raw` holds `event_id`, the `cols`, the event time as
+    * `ms`, and in jitter mode the carving bounds `lo` / bucket width `w`
+    * — computed by a `bounds` CTE over the same `where` subset, since
+    * the Scala side's bounds are over the projected subset too (one
+    * boundary row on the full-table bounds flips a wave).
     */
-  private def boundsCte(nWaves: Int): String =
-    s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-      |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-      |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-      |  FROM events),""".stripMargin
+  private def rawCtes(mode: String, nWaves: Int, cols: String,
+      where: String = ""): String = {
+    val ms = "epoch_us(CAST(ts AS TIMESTAMP)) // 1000"
+    val filter = if (where.isEmpty) "" else s"\n  WHERE $where"
+    if (mode == "jitter")
+      s"""bounds AS (SELECT MIN($ms) AS lo,
+        |  (MAX($ms) - MIN($ms)) // $nWaves + 1 AS w
+        |  FROM events$filter),
+        |raw AS (
+        |  SELECT event_id, $cols, $ms AS ms, bounds.lo AS lo, bounds.w AS w
+        |  FROM events CROSS JOIN bounds$filter)""".stripMargin
+    else
+      s"""raw AS (
+        |  SELECT event_id, $cols, $ms AS ms
+        |  FROM events$filter)""".stripMargin
+  }
 
   /** The lagged-watermark CTEs shared by both families' oracles:
     * `b` = per-(non-empty-)wave max ms — the batch sequence; `l` = the
@@ -178,6 +194,43 @@ object StreamFuzz {
       |          ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
       |          - $delayMs, 0), 0) AS lwm
       |      FROM b)""".stripMargin
+
+  /** A seed's carved fixture: the projected events with the seed's
+    * `wave` column, and the projection's max ms (the sentinel waves sit
+    * past it).
+    */
+  private case class Carved(rows: DataFrame, hi: Long)
+
+  /** Carve the events fixture for one seed: `project` maps the
+    * micro-timestamped events (`us`) to the family's columns, which
+    * must include `event_id` and `ms`; jitter mode buckets over the
+    * projection's own time bounds.
+    */
+  private def carve(spark: SparkSession, dir: String, seed: Long,
+      mode: String, nWaves: Int)(project: DataFrame => DataFrame): Carved = {
+    val ev = project(EventOps.withMicros(Tables.events(spark, dir)))
+    val bounds = WaveHarness.msBounds(ev, s"sfz_b${seed}_$dir")
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    Carved(ev.withColumn("wave",
+      carving(mode, seed, nWaves, lo, (hi - lo) / nWaves + 1)), hi)
+  }
+
+  /** Drive a seed's carved frame plus its two sentinel waves through
+    * the wave harness under `cfg`: the drive is named
+    * `sfz_<family>_<tag><seed>`, and every cfg of one seed shares one
+    * staging. `stateParts` is the family's default state width.
+    */
+  private def driveFamily(spark: SparkSession, dir: String, family: String,
+      seed: Long, cfg: DriveCfg, frame: DataFrame, schema: String,
+      nWaves: Int, stateParts: Int = 1)(
+      transform: DataFrame => DataFrame): DataFrame =
+    WaveHarness.driveWaves(spark, frame, schema, nWaves + 2L,
+      s"sfz_${family}_${cfg.tag}$seed",
+      statePartitions = cfg.statePartitions.getOrElse(stateParts),
+      filesPerWave = cfg.filesPerWave,
+      restartAfter = cfg.killAfter(nWaves),
+      stageKey = Some(WaveHarness.stageKeyFor(s"sfz_${family}_$seed", dir)))(
+      transform)
 
   /** Family A — streaming sliding-window aggregation under random
     * arrival. Geometry: width = m * slide (m in 1..2), so each kept row
@@ -210,26 +263,17 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("event_type"),
-          expr("us div 1000").as("ms"), col("value"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("event_type"),
+          expr("us div 1000").as("ms"), col("value")))
       val margin = delay + 3 * width + 10000000L
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           ("\u0000s1", hi + margin, 0.0, nWaves.toLong),
           ("\u0000s2", hi + 2 * margin, 0.0, nWaves + 1L))
           .toDF("event_type", "ms", "value", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "event_type STRING, ms LONG, value DOUBLE", nWaves + 2L,
-        s"sfz_agg_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_agg_$seed", dir))) { src =>
+      driveFamily(spark, dir, "agg", seed, cfg, frame,
+        "event_type STRING, ms LONG, value DOUBLE", nWaves) { src =>
         src.select(col("event_type"), timestamp_millis(col("ms")).as("t"),
             col("value"))
           .withWatermark("t", s"$delay milliseconds")
@@ -252,12 +296,7 @@ object StreamFuzz {
       .map(k => s"(ms // $slide) * $slide - ${k.toLong * slide}")
       .mkString("[", ", ", "]")
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms, value
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "event_type, value")},
         |e AS (SELECT event_type, ms, value, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |${lateWmCtes(delay)},
         |x AS (
@@ -305,28 +344,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
           expr("us div 1000").as("ms"),
-          coalesce(col("value"), lit(0.0)).as("value"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
+          coalesce(col("value"), lit(0.0)).as("value")))
       val margin = delay + 3 * bucket + 10000000L
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, hi + margin, 0.0, nWaves.toLong),
           (-2L, hi + 2 * margin, 0.0, nWaves + 1L))
           .toDF("key", "ms", "value", "wave"))
-      EventOps.withRocksDb(spark) {
-        EventOps.driveWaves(spark, frame,
-          "key LONG, ms LONG, value DOUBLE", nWaves + 2L,
-          s"sfz_quota_${cfg.tag}$seed",
-          statePartitions = cfg.statePartitions.getOrElse(4),
-          filesPerWave = cfg.filesPerWave,
-          restartAfter = cfg.killAfter(nWaves),
-          stageKey = Some(EventOps.stageKeyFor(s"sfz_quota_$seed", dir))) { src =>
+      WaveHarness.withRocksDb(spark) {
+        driveFamily(spark, dir, "quota", seed, cfg, frame,
+          "key LONG, ms LONG, value DOUBLE", nWaves, stateParts = 4) { src =>
           graft.streaming.TwsQuotaJob.quota(
             src.select(col("key"), timestamp_millis(col("ms")).as("eventTs"),
               col("value")).as[graft.streaming.KeyedEvent],
@@ -340,12 +370,7 @@ object StreamFuzz {
     }
 
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
         |e AS (SELECT user_id, ms, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |${lateWmCtes(delay)},
         |kept AS (
@@ -403,26 +428,17 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
           expr("us div 1000").as("ms"),
-          coalesce(col("value"), lit(0.0)).as("value"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+          coalesce(col("value"), lit(0.0)).as("value")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, hi + margin, 0.0, nWaves.toLong),
           (-2L, hi + 2 * margin, 0.0, nWaves + 1L))
           .toDF("key", "ms", "value", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "key LONG, ms LONG, value DOUBLE", nWaves + 2L,
-        s"sfz_sess_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_sess_$seed", dir))) { src =>
+      driveFamily(spark, dir, "sess", seed, cfg, frame,
+        "key LONG, ms LONG, value DOUBLE", nWaves) { src =>
         src.select(col("key"), timestamp_millis(col("ms")).as("t"),
             col("value"))
           .withWatermark("t", s"$delay milliseconds")
@@ -477,12 +493,7 @@ object StreamFuzz {
       .map(k => stage(k, if (k == 0) "s_init" else s"s${k - 1}"))
       .mkString(",\n")
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms, value
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id, value")},
         |e AS (SELECT user_id, ms, value, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |b0 AS (SELECT wave, MAX(ms) AS mx FROM e GROUP BY wave),
         |hb AS (SELECT MAX(ms) AS hi FROM e),
@@ -581,19 +592,15 @@ object StreamFuzz {
       seed: Long, nWaves: Int, delay: Long,
       keyed: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ev0 = EventOps.withMicros(Tables.events(spark, dir))
-    val ev = if (keyed)
-      ev0.select(col("event_id"), col("user_id").as("key"),
-        expr("us div 1000").as("ms"),
-        coalesce(col("value"), lit(0.0)).as("value"))
-    else
-      ev0.select(col("event_id"), col("event_type"),
-        expr("us div 1000").as("ms"), col("value"))
-    val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-    val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / nWaves + 1
-    val e = ev.withColumn("wave",
-      carving(mode, seed, nWaves, bounds.getLong(0), bWidth))
-      .drop("event_id")
+    val e = carve(spark, dir, seed, mode, nWaves) { ev0 =>
+      if (keyed)
+        ev0.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms"),
+          coalesce(col("value"), lit(0.0)).as("value"))
+      else
+        ev0.select(col("event_id"), col("event_type"),
+          expr("us div 1000").as("ms"), col("value"))
+    }.rows.drop("event_id")
     val wPrev2 = Window.orderBy(col("wave"))
       .rowsBetween(Window.unboundedPreceding, -2)
     val l = e.groupBy(col("wave")).agg(max(col("ms")).as("mx"))
@@ -711,18 +718,7 @@ object StreamFuzz {
     */
   private def joinKeptCtes(mode: String, seed: Long, nWaves: Int,
       delay: Long): String = {
-    val joinBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events WHERE event_type IN ('view', 'click')),""".stripMargin
-    s"""WITH ${if (mode == "jitter") joinBoundsCte else ""}
-      |raw AS (
-      |  SELECT event_id, user_id, event_type,
-      |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-      |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-      |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-      |  WHERE event_type IN ('view', 'click')),
+    s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
       |e AS (SELECT user_id, event_type, ms,
       |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
       |bw AS (SELECT wave,
@@ -749,28 +745,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_join_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_join_$seed", dir))) { src =>
+      driveFamily(spark, dir, "join", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("vuser"),
             timestamp_millis(col("ms")).as("view_ts"))
@@ -849,14 +836,10 @@ object StreamFuzz {
       : (SparkSession, String) => DataFrame =
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -951,28 +934,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_chain_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_chain_$seed", dir))) { src =>
+      driveFamily(spark, dir, "chain", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("vuser"),
             timestamp_millis(col("ms")).as("view_ts"))
@@ -1076,25 +1050,17 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms")))
       val margin = delay + 3 * bucket + 10000000L
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, hi + margin, nWaves.toLong),
           (-2L, hi + 2 * margin, nWaves + 1L))
           .toDF("key", "ms", "wave"))
-      EventOps.driveWaves(spark, frame, "key LONG, ms LONG", nWaves + 2L,
-        s"sfz_dedup_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_dedup_$seed", dir))) { src =>
+      driveFamily(spark, dir, "dedup", seed, cfg, frame,
+        "key LONG, ms LONG", nWaves) { src =>
         src.select(col("key"),
             timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
               .as("bt"))
@@ -1111,12 +1077,7 @@ object StreamFuzz {
     // CTEs apply unchanged; kept = strict > (inclusive drop), output =
     // plain DISTINCT (purity per the Scaladoc argument)
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
         |e AS (SELECT user_id, (ms // $bucket) * $bucket AS ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |${lateWmCtes(delay)},
@@ -1133,13 +1094,9 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = dedupP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms"))).rows
         .drop("event_id")
         .withColumn("bt", expr(s"(ms div ${p.bucket}L) * ${p.bucket}L"))
       val wPrev2 = Window.orderBy(col("wave"))
@@ -1221,15 +1178,11 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(p.mode, seed, nWaves, lo, bWidth)
+      val Carved(ev, hi) = carve(spark, dir, seed, p.mode, nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms")))
       val margin = 3 * p.delay + 10000000L
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val frame = ev.drop("event_id")
         .filter(presenceCol(seed))
         .withColumn("ms",
           (col("wave") + 1) * p.w0 + keyJitterCol(seed, jR))
@@ -1237,12 +1190,8 @@ object StreamFuzz {
           (-1L, (nWaves + 1L) * p.w0 + margin, nWaves.toLong),
           (-2L, (nWaves + 1L) * p.w0 + 2 * margin, nWaves + 1L))
           .toDF("key", "ms", "wave"))
-      EventOps.driveWaves(spark, frame, "key LONG, ms LONG", nWaves + 2L,
-        s"sfz_dwm_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_dwm_$seed", dir))) { src =>
+      driveFamily(spark, dir, "dwm", seed, cfg, frame,
+        "key LONG, ms LONG", nWaves) { src =>
         src.select(col("key"), timestamp_millis(col("ms")).as("t"))
           .withWatermark("t", s"${p.delay} milliseconds")
           .dropDuplicatesWithinWatermark("key")
@@ -1259,12 +1208,7 @@ object StreamFuzz {
     // expiry (emission: lwm >= expiry, probe-pinned inclusive; the
     // anchor always emits — no prior state, expiry seeded at -1)
     val sql =
-      s"""WITH RECURSIVE ${if (p.mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (p.mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (p.mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH RECURSIVE ${rawCtes(p.mode, nWaves, "user_id")},
         |c AS (SELECT user_id, ${waveSql(p.mode, seed, nWaves)} AS wave
         |      FROM raw),
         |e AS (SELECT DISTINCT user_id AS key,
@@ -1297,14 +1241,9 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = dedupWmP(seed); val jR = p.w0 / 2
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev
-        .withColumn("wave",
-          carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms"))).rows
         .filter(presenceCol(seed))
         .select(col("key"), col("wave"),
           ((col("wave") + 1) * p.w0 + keyJitterCol(seed, jR)).as("t"))
@@ -1368,28 +1307,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_union_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_union_$seed", dir))) { src =>
+      driveFamily(spark, dir, "union", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("event_type"), timestamp_millis(col("ms")).as("t"),
             col("user_id"))
@@ -1416,19 +1346,8 @@ object StreamFuzz {
 
     // family D's carve + per-side running maxes, with PER-SIDE delay
     // subtraction before the min (the multipleWatermarkPolicy=min value)
-    val joinBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events WHERE event_type IN ('view', 'click')),""".stripMargin
     val sql =
-      s"""WITH ${if (mode == "jitter") joinBoundsCte else ""}
-        |raw AS (
-        |  SELECT event_id, user_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-        |  WHERE event_type IN ('view', 'click')),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
         |e AS (SELECT user_id, event_type, ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |bw AS (SELECT wave,
@@ -1457,14 +1376,10 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = unionP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -1538,25 +1453,16 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("event_type"),
+          expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           ("\u0000s1", hi + margin, nWaves.toLong),
           ("\u0000s2", hi + 2 * margin, nWaves + 1L))
           .toDF("event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_aggagg_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_aggagg_$seed", dir))) { src =>
+      driveFamily(spark, dir, "aggagg", seed, cfg, frame,
+        "event_type STRING, ms LONG", nWaves) { src =>
         src.select(col("event_type"), timestamp_millis(col("ms")).as("t"))
           .withWatermark("t", s"$delay milliseconds")
           .groupBy(org.apache.spark.sql.functions
@@ -1578,12 +1484,7 @@ object StreamFuzz {
     // with the lagged watermark), re-grouped at w2: n counts kept rows,
     // n_fine counts the distinct fine windows inside each coarse one
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "event_type")},
         |e AS (SELECT event_type, ms, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |${lateWmCtes(delay)},
         |p AS (
@@ -1602,13 +1503,9 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = aggAggP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.select(col("event_id"), col("event_type"),
+          expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -1672,28 +1569,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_chain3_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_chain3_$seed", dir))) { src =>
+      driveFamily(spark, dir, "chain3", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("vuser"),
             timestamp_millis(col("ms")).as("view_ts"))
@@ -1800,25 +1688,17 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms")))
       val margin = delay + 3 * bucket + 3 * aggW + 10000000L
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, hi + margin, nWaves.toLong),
           (-2L, hi + 2 * margin, nWaves + 1L))
           .toDF("key", "ms", "wave"))
-      EventOps.driveWaves(spark, frame, "key LONG, ms LONG", nWaves + 2L,
-        s"sfz_dagg_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_dagg_$seed", dir))) { src =>
+      driveFamily(spark, dir, "dagg", seed, cfg, frame,
+        "key LONG, ms LONG", nWaves) { src =>
         src.select(col("key"),
             timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
               .as("bt"))
@@ -1837,12 +1717,7 @@ object StreamFuzz {
     }
 
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
         |e AS (SELECT user_id, (ms // $bucket) * $bucket AS ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |${lateWmCtes(delay)},
@@ -1863,13 +1738,9 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = dedupAggP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms"))).rows
         .drop("event_id")
         .withColumn("bt", expr(s"(ms div ${p.bucket}L) * ${p.bucket}L"))
       val wPrev2 = Window.orderBy(col("wave"))
@@ -1957,15 +1828,11 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click", "purchase"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click", "purchase"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
@@ -1974,13 +1841,8 @@ object StreamFuzz {
           (-2L, "click", hi + 2 * margin, nWaves + 1L),
           (-2L, "purchase", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_jj_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_jj_$seed", dir))) { src =>
+      driveFamily(spark, dir, "jj", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("vuser"),
             timestamp_millis(col("ms")).as("view_ts"))
@@ -2019,20 +1881,8 @@ object StreamFuzz {
           col("purchase_ms"))
     }
 
-    val tripleBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events
-        |  WHERE event_type IN ('view', 'click', 'purchase')),""".stripMargin
     val sql =
-      s"""WITH ${if (mode == "jitter") tripleBoundsCte else ""}
-        |raw AS (
-        |  SELECT event_id, user_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-        |  WHERE event_type IN ('view', 'click', 'purchase')),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click', 'purchase')")},
         |e AS (SELECT user_id, event_type, ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |bw AS (SELECT wave,
@@ -2074,14 +1924,10 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = joinJoinP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click", "purchase"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "click", "purchase"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -2173,28 +2019,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_dj_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_dj_$seed", dir))) { src =>
+      driveFamily(spark, dir, "dj", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("vuser"),
             timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
@@ -2218,19 +2055,8 @@ object StreamFuzz {
         .orderBy(col("user_id"), col("view_bt_ms"), col("click_ms"))
     }
 
-    val pairBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events WHERE event_type IN ('view', 'click')),""".stripMargin
     val sql =
-      s"""WITH ${if (mode == "jitter") pairBoundsCte else ""}
-        |raw AS (
-        |  SELECT event_id, user_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-        |  WHERE event_type IN ('view', 'click')),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
         |e AS (SELECT user_id, event_type,
         |        CASE WHEN event_type = 'view'
         |             THEN (ms // $bucket) * $bucket ELSE ms END AS fms,
@@ -2269,14 +2095,10 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = dedupJoinP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
         .withColumn("fms", when(col("event_type") === "view",
           expr(s"(ms div ${p.bucket}L) * ${p.bucket}L")).otherwise(col("ms")))
@@ -2357,24 +2179,16 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, hi + margin, nWaves.toLong),
           (-2L, hi + 2 * margin, nWaves + 1L))
           .toDF("key", "ms", "wave"))
-      EventOps.driveWaves(spark, frame, "key LONG, ms LONG", nWaves + 2L,
-        s"sfz_dsess_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_dsess_$seed", dir))) { src =>
+      driveFamily(spark, dir, "dsess", seed, cfg, frame,
+        "key LONG, ms LONG", nWaves) { src =>
         src.select(col("key"),
             timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
               .as("bt"))
@@ -2427,12 +2241,7 @@ object StreamFuzz {
       .map(k => stage(k, if (k == 0) "s_init" else s"s${k - 1}"))
       .mkString(",\n")
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
         |e AS (SELECT user_id, (ms // $bucket) * $bucket AS ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |b0 AS (SELECT wave, MAX(ms) AS mx FROM e GROUP BY wave),
@@ -2472,15 +2281,11 @@ object StreamFuzz {
       import org.apache.spark.sql.expressions.Window
       val p = dedupSessP(seed)
       val margin = p.delay + 3 * p.gap + 3 * p.bucket + 10000000L
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
       // carving reads the RAW time (`ms`); the watermarked column is
       // the bucket floor, which REPLACES ms for everything downstream
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.select(col("event_id"), col("user_id"),
+          expr("us div 1000").as("ms"))).rows
         .withColumn("ms", expr(s"(ms div ${p.bucket}L) * ${p.bucket}L"))
         .drop("event_id")
       val realMx: Map[Long, Long] = e.groupBy(col("wave"))
@@ -2584,28 +2389,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_jd_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_jd_$seed", dir))) { src =>
+      driveFamily(spark, dir, "jd", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("vuser"),
             timestamp_millis(col("ms")).as("view_ts"))
@@ -2631,20 +2427,9 @@ object StreamFuzz {
         .orderBy(col("user_id"), col("click_ms"))
     }
 
-    val pairBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events WHERE event_type IN ('view', 'click')),""".stripMargin
     val keyExpr = if (p.raw) "c.ms" else s"(c.ms // $bucket) * $bucket"
     val sql =
-      s"""WITH ${if (mode == "jitter") pairBoundsCte else ""}
-        |raw AS (
-        |  SELECT event_id, user_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-        |  WHERE event_type IN ('view', 'click')),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
         |e AS (SELECT user_id, event_type, ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |bw AS (SELECT wave,
@@ -2678,14 +2463,10 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = joinDedupP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -2776,29 +2557,20 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.withRocksDb(spark) {
-        EventOps.driveWaves(spark, frame,
-          "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-          s"sfz_twsjoin_${cfg.tag}$seed",
-          statePartitions = cfg.statePartitions.getOrElse(1),
-          filesPerWave = cfg.filesPerWave,
-          restartAfter = cfg.killAfter(nWaves),
-          stageKey = Some(EventOps.stageKeyFor(s"sfz_twsjoin_$seed", dir))) {
+      WaveHarness.withRocksDb(spark) {
+        driveFamily(spark, dir, "twsjoin", seed, cfg, frame,
+          "user_id LONG, event_type STRING, ms LONG", nWaves) {
           src =>
           val admitted = graft.streaming.TwsAdmitJob.admitFirst(
             src.filter(col("event_type") === "view")
@@ -2854,14 +2626,10 @@ object StreamFuzz {
       dir: String): String = {
     import org.apache.spark.sql.expressions.Window
     val p = twsJoinP(seed)
-    val ev = EventOps.withMicros(Tables.events(spark, dir))
-      .filter(col("event_type").isin("view", "click"))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("us div 1000").as("ms"))
-    val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-    val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-    val e = ev.withColumn("wave",
-      carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+    val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+      _.filter(col("event_type").isin("view", "click"))
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          expr("us div 1000").as("ms"))).rows
       .drop("event_id")
     val wPrev2 = Window.orderBy(col("wave"))
       .rowsBetween(Window.unboundedPreceding, -2)
@@ -2895,14 +2663,10 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = twsJoinP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -3015,29 +2779,19 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "click", hi + margin, nWaves.toLong),
           (-2L, "view", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_aj${if (outer) "o" else ""}_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(
-          s"sfz_aj${if (outer) "o" else ""}_$seed", dir))) { src =>
+      driveFamily(spark, dir, if (outer) "ajo" else "aj", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val v = src.filter(col("event_type") === "view")
           .select(col("user_id"), timestamp_millis(col("ms")).as("vt"))
           .withWatermark("vt", s"$delay milliseconds")
@@ -3062,19 +2816,8 @@ object StreamFuzz {
         .orderBy(col("user_id"), col("window_start_ms"))
     }
 
-    val pairBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events WHERE event_type IN ('view', 'click')),""".stripMargin
     val sql =
-      s"""WITH ${if (mode == "jitter") pairBoundsCte else ""}
-        |raw AS (
-        |  SELECT event_id, user_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-        |  WHERE event_type IN ('view', 'click')),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
         |e AS (SELECT user_id, event_type, ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |bw AS (SELECT wave,
@@ -3122,14 +2865,10 @@ object StreamFuzz {
       : (SparkSession, String) => DataFrame =
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -3198,15 +2937,11 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "signup", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type").isin("view", "signup", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, "view", hi + margin, nWaves.toLong),
           (-1L, "signup", hi + margin, nWaves.toLong),
@@ -3215,13 +2950,8 @@ object StreamFuzz {
           (-2L, "signup", hi + 2 * margin, nWaves + 1L),
           (-2L, "click", hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "event_type", "ms", "wave"))
-      EventOps.driveWaves(spark, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves + 2L,
-        s"sfz_uj_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_uj_$seed", dir))) { src =>
+      driveFamily(spark, dir, "uj", seed, cfg, frame,
+        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
         val views = src.filter(col("event_type") === "view")
           .select(col("user_id").as("euser"),
             col("event_type").as("etype"),
@@ -3247,19 +2977,8 @@ object StreamFuzz {
         .orderBy(col("user_id"), col("etype"), col("ems"), col("click_ms"))
     }
 
-    val triBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events WHERE event_type IN ('view', 'signup', 'click')),""".stripMargin
     val sql =
-      s"""WITH ${if (mode == "jitter") triBoundsCte else ""}
-        |raw AS (
-        |  SELECT event_id, user_id, event_type,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-        |  WHERE event_type IN ('view', 'signup', 'click')),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'signup', 'click')")},
         |e AS (SELECT user_id, event_type, ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |bw AS (SELECT wave,
@@ -3295,14 +3014,10 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = unionJoinP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type").isin("view", "signup", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type").isin("view", "signup", "click"))
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -3384,27 +3099,18 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.filter(col("event_type") === "view")
+          .select(col("event_id"), col("user_id"),
+            expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, hi + margin, nWaves.toLong),
           (-2L, hi + 2 * margin, nWaves + 1L))
           .toDF("user_id", "ms", "wave"))
-      EventOps.withRocksDb(spark) {
-        EventOps.driveWaves(spark, frame,
-          "user_id LONG, ms LONG", nWaves + 2L,
-          s"sfz_twsagg_${cfg.tag}$seed",
-          statePartitions = cfg.statePartitions.getOrElse(1),
-          filesPerWave = cfg.filesPerWave,
-          restartAfter = cfg.killAfter(nWaves),
-          stageKey = Some(EventOps.stageKeyFor(s"sfz_twsagg_$seed", dir))) {
+      WaveHarness.withRocksDb(spark) {
+        driveFamily(spark, dir, "twsagg", seed, cfg, frame,
+          "user_id LONG, ms LONG", nWaves) {
           src =>
           graft.streaming.TwsAdmitJob.admitFirst(
             src.select(col("user_id").as("key"),
@@ -3424,19 +3130,8 @@ object StreamFuzz {
         .orderBy(col("window_start_ms"))
     }
 
-    val viewBoundsCte =
-      s"""bounds AS (SELECT MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000) AS lo,
-        |  (MAX(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)
-        |   - MIN(epoch_us(CAST(ts AS TIMESTAMP)) // 1000)) // $nWaves + 1 AS w
-        |  FROM events WHERE event_type = 'view'),""".stripMargin
     val sql =
-      s"""WITH ${if (mode == "jitter") viewBoundsCte else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}
-        |  WHERE event_type = 'view'),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id", "event_type = 'view'")},
         |e AS (SELECT user_id, ms,
         |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |${lateWmCtes(delay)},
@@ -3464,14 +3159,10 @@ object StreamFuzz {
     (spark, dir) => {
       import org.apache.spark.sql.expressions.Window
       val p = twsAggP(seed)
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val bWidth = (bounds.getLong(1) - bounds.getLong(0)) / p.nWaves + 1
-      val e = ev.withColumn("wave",
-        carving(p.mode, seed, p.nWaves, bounds.getLong(0), bWidth))
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
+        _.filter(col("event_type") === "view")
+          .select(col("event_id"), col("user_id"),
+            expr("us div 1000").as("ms"))).rows
         .drop("event_id")
       val wPrev2 = Window.orderBy(col("wave"))
         .rowsBetween(Window.unboundedPreceding, -2)
@@ -3537,24 +3228,16 @@ object StreamFuzz {
 
     val build = (spark: SparkSession, dir: String) => {
       import spark.implicits._
-      val ev = EventOps.withMicros(Tables.events(spark, dir))
-        .select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))
-      val bounds = EventOps.msBounds(ev, s"sfz_b${seed}_$dir")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val bWidth = (hi - lo) / nWaves + 1
-      val waveCol = carving(mode, seed, nWaves, lo, bWidth)
-      val frame = ev.withColumn("wave", waveCol).drop("event_id")
+      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+        _.select(col("event_id"), col("user_id").as("key"),
+          expr("us div 1000").as("ms")))
+      val frame = ev.drop("event_id")
         .unionByName(Seq(
           (-1L, hi + margin, nWaves.toLong),
           (-2L, hi + 2 * margin, nWaves + 1L))
           .toDF("key", "ms", "wave"))
-      EventOps.driveWaves(spark, frame, "key LONG, ms LONG", nWaves + 2L,
-        s"sfz_srol_${cfg.tag}$seed",
-        statePartitions = cfg.statePartitions.getOrElse(1),
-        filesPerWave = cfg.filesPerWave,
-        restartAfter = cfg.killAfter(nWaves),
-        stageKey = Some(EventOps.stageKeyFor(s"sfz_srol_$seed", dir))) { src =>
+      driveFamily(spark, dir, "srol", seed, cfg, frame,
+        "key LONG, ms LONG", nWaves) { src =>
         src.select(col("key"), timestamp_millis(col("ms")).as("t"))
           .withWatermark("t", s"$delay milliseconds")
           .groupBy(session_window(col("t"), s"$gap milliseconds"),
@@ -3606,12 +3289,7 @@ object StreamFuzz {
       .map(k => stage(k, if (k == 0) "s_init" else s"s${k - 1}"))
       .mkString(",\n")
     val sql =
-      s"""WITH ${if (mode == "jitter") boundsCte(nWaves) else ""}
-        |raw AS (
-        |  SELECT event_id, user_id,
-        |         epoch_us(CAST(ts AS TIMESTAMP)) // 1000 AS ms
-        |         ${if (mode == "jitter") ", bounds.lo AS lo, bounds.w AS w" else ""}
-        |  FROM events${if (mode == "jitter") " CROSS JOIN bounds" else ""}),
+      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
         |e AS (SELECT user_id, ms, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
         |b0 AS (SELECT wave, MAX(ms) AS mx FROM e GROUP BY wave),
         |hb AS (SELECT MAX(ms) AS hi FROM e),

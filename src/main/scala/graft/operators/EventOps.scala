@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.streaming.{KeyedEvent, StatefulSessionJob}
+import graft.streaming.WaveHarness.{batch, drive, driveSides, driveWaves,
+  msBounds, stageKeyFor, withRocksDb}
 
 /** Event-stream analytics over the `events` table: JSON property
   * extraction, sessionization, and time-bucketed pivots — the batch twins
@@ -208,502 +210,6 @@ object EventOps {
     */
   val StatefulChunks = 2
 
-  /** The flatMapGroupsWithState session job (StatefulSessionJob), driven
-    * END-TO-END through the DuckDB oracle: the events table is staged
-    * into [[StatefulChunks]] time-bucketed parquet waves (each a
-    * distributed write — the corpus never touches the driver), a
-    * file-source stream consumes them one wave per micro-batch, and two
-    * far-future sentinel waves push the watermark past every open
-    * session so the event-time timeouts emit the tails. Ascending
-    * time-bucket arrival means no row is ever late, so the oracle is
-    * plain gap sessionization at the job's millisecond resolution.
-    *
-    * This closes the custom-state operator's evidence gap: in-batch gap
-    * splits, cross-batch merges, AND timeout-driven tail emission all
-    * land in one result DuckDB reproduces. Scale shape: the operator
-    * itself is hash-partitioned by key with O(1) state per key; the
-    * memory sink + per-wave `repartition(1)` here are the oracle
-    * harness's arrival simulation, not the production path (any
-    * distributed sink works, waves arrive as real files).
-    */
-  /** Stage every arrival wave in ONE partitioned write, then release
-    * waves into the watched source dir by file RENAME (a driver-side
-    * metadata op — the cheap half of the harness; the expensive half,
-    * the corpus scan, runs exactly once). Returns wave id -> staged
-    * files.
-    */
-  private def stageWaves(df: DataFrame, stage: String,
-      filesPerWave: Int = 1): Unit =
-    if (filesPerWave <= 1)
-      df.repartition(1).write.partitionBy("wave").parquet(stage)
-    else {
-      // multi-file waves: scatter each wave's rows across a deterministic
-      // content-hash salt so the dynamic-partition write emits several
-      // files per wave directory — one released wave is STILL one
-      // micro-batch (all its files land before processAllAvailable; no
-      // maxFilesPerTrigger), but the source now plans multi-file,
-      // multi-partition batches. Hash salting (not round-robin) keeps
-      // the carving reproducible run to run. The salt is a real
-      // PARTITION COLUMN, not just a repartition key: hash-partition
-      // placement can collide two salts of one wave into one task
-      // partition, but partitionBy still writes each (wave, salt) into
-      // its own directory — the per-wave file split is structural, never
-      // silently collapsed by placement (releaseWave flattens the salt
-      // level away when releasing, so the source sees plain files).
-      val salt = pmod(hash(df.columns.map(col): _*), lit(filesPerWave))
-      df.withColumn("salt", salt)
-        .repartition(col("wave"), col("salt"))
-        .write.partitionBy("wave", "salt").parquet(stage)
-    }
-
-  /** JVM-lifetime keep area for restart-drive outputs: the harness
-    * scratch dir dies with the drive, so the returned DataFrame's files
-    * move here instead of being collect()ed onto the driver. One root,
-    * one shutdown hook — per-drive subdirs are name-keyed and tiny
-    * (finalized agg rows).
-    */
-  private lazy val keepRootDir: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_keep_")
-    sys.addShutdownHook(deleteHarnessDir(p.toString))
-    p
-  }
-
-  private def keepDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(keepRootDir, name).toString
-
-  /** Recursively delete a harness scratch root once its drive is done —
-    * the staged waves and checkpoint often live on tmpfs (RAM), and the
-    * memory sink already holds the results.
-    */
-  private def deleteHarnessDir(root: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(rec)
-      f.delete()
-    }
-    rec(new java.io.File(root))
-  }
-
-  /** Release one staged wave into a drive's source dir. A private
-    * staging is consumed (move); a SHARED staging is retained for the
-    * next drive of the same seed — hard-link (same tmpfs, zero copy),
-    * falling back to a copy if the link fails.
-    */
-  private def releaseWave(stage: String, srcDir: String, wave: Long,
-      retainStage: Boolean = false): Unit = {
-    val wd = new java.io.File(s"$stage/wave=$wave")
-    // multi-file staging nests a salt=N partition level under each wave
-    // dir; release flattens it so the file source sees plain files
-    def parquets(d: java.io.File): Array[java.io.File] =
-      Option(d.listFiles).getOrElse(Array.empty[java.io.File]).flatMap { f =>
-        if (f.isDirectory) parquets(f)
-        else if (f.getName.endsWith(".parquet")) Array(f)
-        else Array.empty[java.io.File]
-      }
-    parquets(wd).sortBy(_.getPath).zipWithIndex
-      .foreach { case (f, k) =>
-        val dst = java.nio.file.Paths.get(s"$srcDir/w${wave}_$k.parquet")
-        if (retainStage)
-          try java.nio.file.Files.createLink(dst, f.toPath)
-          catch { case _: Exception =>
-            java.nio.file.Files.copy(f.toPath, dst)
-          }
-        else java.nio.file.Files.move(f.toPath, dst)
-      }
-  }
-
-  /** JVM-lifetime shared staging for wave drives whose carved frame is
-    * identical across several registered drives: the restart/multi-file
-    * re-drives of a fuzz seed, and the four sessionize oracles that all
-    * stage [[sessionWaveFrame]]. The carving is deterministic per seed,
-    * so the first drive stages and the rest hard-link — the distributed
-    * staging write (a full pass over the carved fixture) runs once per
-    * (key, filesPerWave), not once per drive. Keyed dirs live until JVM
-    * exit; at bench scale that is a few MB of parquet per seed on tmpfs.
-    */
-  private lazy val sharedStageRoot: String = {
-    val p = harnessTempDir("graft_stage_")
-    sys.addShutdownHook(deleteHarnessDir(p))
-    p
-  }
-
-  private val stagedKeys = scala.collection.mutable.Map.empty[String, String]
-
-  /** Memoized MIN/MAX(ms) Row of a wave frame — the scalar every drive
-    * builder reads before carving. The frame's time bounds are a pure
-    * function of the fixture subset (never of the carving seed or drive
-    * config), so the one-row agg job runs once per (frame, sf dir) per
-    * JVM instead of once per drive AND per bench pass — the same
-    * in-session staging principle as [[sharedStage]]; nothing persists
-    * across runs. The cache key is the frame's CANONICALIZED analyzed
-    * plan (VERDICT r15 #4): label uniqueness used to be convention-only,
-    * so a future caller reusing a label over a differently-filtered
-    * frame would have silently served the wrong bounds and mis-carved
-    * every wave — plan-keyed, two semantically different frames can
-    * never collide (exact plan equality, not a hash), and conversely
-    * semantically IDENTICAL frames now share one bounds job regardless
-    * of label: a fuzz family's frame does not depend on the carving
-    * seed, so ~70 per-seed one-row agg scans per bench pass collapse to
-    * one per (family projection, fixture). The label parameter remains
-    * for call-site readability/debugging only.
-    */
-  private val msBoundsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]
-
-  private[graft] def msBounds(ev: DataFrame, label: String): org.apache.spark.sql.Row = {
-    // the canonicalized plan text distinguishes projections/filters but
-    // OMITS the scan path (LogicalRelation prints as `Relation[...]
-    // parquet`), and suites drive the same frames at several scale
-    // factors in one JVM — the input-file list is the fixture identity
-    val key = ev.queryExecution.analyzed.canonicalized.toString + "#" +
-      ev.inputFiles.sorted.mkString(",")
-    msBoundsCache.computeIfAbsent(key,
-      _ => ev.agg(min(col("ms")), max(col("ms"))).head())
-  }
-
-  /** Shared-staging keys must be unique per (logical frame, sf dir) —
-    * suites drive the same frames at several scale factors in one JVM.
-    * The sanitized dir alone is NOT injective (`data-sf` and `data_sf`
-    * collapse to the same key and the second drive would silently reuse
-    * waves carved from the wrong fixture), so a hash of the raw string
-    * is appended.
-    */
-  private[graft] def stageKeyFor(base: String, dir: String): String =
-    base + "_" + dir.replaceAll("[^A-Za-z0-9.]", "_") +
-      "_" + Integer.toHexString(dir.hashCode)
-
-  private def sharedStage(rows: DataFrame, key: String,
-      filesPerWave: Int): String = stagedKeys.synchronized {
-    stagedKeys.getOrElseUpdate(s"${key}_f$filesPerWave", {
-      val dir = s"$sharedStageRoot/${key}_f$filesPerWave"
-      stageWaves(rows, dir, filesPerWave)
-      dir
-    })
-  }
-
-  /** Scratch root for the streaming-harness staging + checkpoints:
-    * tmpfs when available — the per-micro-batch cost at harness scale is
-    * checkpoint fsync latency (offset WAL + state deltas), which tmpfs
-    * removes. Production checkpoints go on durable storage; this is the
-    * oracle harness, whose checkpoint dies with the query anyway.
-    */
-  private def harnessTempDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix).toString
-    else java.nio.file.Files.createTempDirectory(prefix).toString
-  }
-
-  /** The shared single-source wave drive: stage `rows` (must carry a
-    * `wave` column) in one partitioned write, stream them wave-by-wave
-    * through `transform` into a memory sink, and return the sink table.
-    * Ascending time-bucket waves mean no row is ever late, which is what
-    * makes every drive's oracle expressible as plain batch SQL.
-    */
-  /** Streaming plan-regression channel (VERDICT r13 #1): record the
-    * query's LAST micro-batch executed plan, normalized with the
-    * run-scoped file lists scrubbed. Best-effort by contract — a
-    * telemetry failure must never fail the drive itself. Shared by
-    * driveWaves and the inline two-source attribution harnesses.
-    */
-  private[graft] def recordLastPlan(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      name: String): Unit =
-    try org.apache.spark.sql.graft.GraftSqlShim.lastMicroBatchPlan(q)
-      .foreach(p => graft.streaming.DriveTelemetry.recordPlan(name,
-        graft.tools.PlanFingerprint.fingerprintStreaming(p)))
-    catch { case e: Exception =>
-      System.err.println(s"[drive] $name plan fp failed: ${e.getMessage}") }
-
-  /** Full telemetry for the inline (non-driveWaves) attribution drives:
-    * per-batch state-row series (peaks + micro-batch-count
-    * normalization) and the last-plan fingerprint.
-    */
-  private def recordInlineDrive(
-      q: org.apache.spark.sql.streaming.StreamingQuery, name: String): Unit = {
-    try graft.streaming.DriveTelemetry.record(name,
-      q.recentProgress.toSeq.sortBy(_.batchId).map { p =>
-        if (p.stateOperators == null || p.stateOperators.isEmpty) 0L
-        else p.stateOperators.map(_.numRowsTotal).sum
-      })
-    catch { case _: Exception => () }
-    recordLastPlan(q, name)
-  }
-
-  /** Env-gated phase timing for optimization work (SPARK_GRAFT_DRIVE_TIMING=1):
-    * prints where a drive's wall time goes (staging vs query start vs each
-    * micro-batch vs teardown). Pure observability — no behavior change.
-    */
-  private val driveTiming =
-    sys.env.get("SPARK_GRAFT_DRIVE_TIMING").exists(Set("1", "2"))
-
-  private[graft] def driveWaves(spark: SparkSession, rows: DataFrame,
-      schema: String, nWaves: Long, name: String,
-      statePartitions: Int = 1, filesPerWave: Int = 1,
-      restartAfter: Option[Long] = None,
-      stageKey: Option[String] = None,
-      codegen: Boolean = false)(
-      transform: DataFrame => DataFrame): DataFrame = {
-    val tDrive0 = System.nanoTime()
-    def mark(label: String, t0: Long): Long = {
-      val now = System.nanoTime()
-      if (driveTiming)
-        System.err.println(f"[drive-timing] $name $label ${(now - t0) / 1e9}%.3f s")
-      now
-    }
-    val root = harnessTempDir(s"graft_${name}_")
-    val srcDir = s"$root/src"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
-    // with a stageKey, the staged waves are shared across every drive of
-    // the same deterministic frame (staged once per JVM); without, they
-    // are private to this drive and consumed as waves release
-    val tStage0 = System.nanoTime()
-    val stage = stageKey match {
-      case Some(k) => sharedStage(rows, k, filesPerWave)
-      case None =>
-        val s = s"$root/stage"
-        stageWaves(rows, s, filesPerWave)
-        s
-    }
-    mark("stage", tStage0)
-    try {
-      withHarnessConf(spark, statePartitions, codegen) {
-        // restart drives write to the exactly-once FILE sink (the memory
-        // sink is not fault-tolerant: a recovered batch is never re-added
-        // to its table, so post-crash equality could not be asserted);
-        // plain drives keep the memory sink the specs and SparkEntry read
-        def startQuery() = {
-          val src = spark.readStream.schema(schema).parquet(srcDir)
-          val w = transform(src).writeStream.outputMode("append")
-            .queryName(name)
-            .option("checkpointLocation", s"$root/ckpt")
-          (if (restartAfter.isEmpty) w.format("memory")
-           else w.format("parquet").option("path", s"$root/out")).start()
-        }
-        val tStart0 = System.nanoTime()
-        var q = startQuery()
-        mark("start", tStart0)
-        // pre-crash progress snapshots for restart drives: the post-crash
-        // query's ring buffer starts at the recovery batch, so without
-        // this the recorded state-peak series would miss the pre-crash
-        // peak and carry a batch-id gap
-        var preCrash: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] =
-          Nil
-        try {
-          (0L until nWaves).foreach { w =>
-            val tWave0 = System.nanoTime()
-            releaseWave(stage, srcDir, w, retainStage = stageKey.isDefined)
-            restartAfter match {
-              case Some(k) if w == k + 1 =>
-                // crash point: wave k+1's files are on disk but the batch
-                // is NOT awaited — stop() lands before or mid-flight, so
-                // the offset log holds no commit for it and the restarted
-                // query must replay it; the file sink's metadata log makes
-                // that replay exactly-once regardless of where the stop
-                // actually interrupted
-                preCrash = q.recentProgress.toSeq
-                q.stop()
-                q = startQuery()
-                q.processAllAvailable()
-              case _ => q.processAllAvailable()
-            }
-            mark(s"wave$w", tWave0)
-          }
-          // per-batch state-store row totals (summed across state
-          // operators) for this drive, read off the query's progress ring
-          // buffer — synchronous by the time processAllAvailable returns.
-          // Restart drives merge the pre-crash snapshots; a batch id seen
-          // on both sides (the replayed batch) takes the post-restart
-          // entry (ps.last)
-          graft.streaming.DriveTelemetry.record(name,
-            (preCrash ++ q.recentProgress.toSeq)
-              .groupBy(_.batchId).toSeq.sortBy(_._1)
-              .map { case (_, ps) =>
-                val p = ps.last
-                if (p.stateOperators == null || p.stateOperators.isEmpty) 0L
-                else p.stateOperators.map(_.numRowsTotal).sum
-              })
-          // timing mode additionally dumps Spark's own per-trigger
-          // duration attribution (queryPlanning vs addBatch vs WAL
-          // commits) — the ground truth for where micro-batch wall time
-          // goes (guide §1: measure before changing)
-          if (driveTiming) (preCrash ++ q.recentProgress.toSeq)
-            .groupBy(_.batchId).toSeq.sortBy(_._1).foreach { case (bid, ps) =>
-              val d = ps.last.durationMs
-              System.err.println(s"[drive-timing] $name batch$bid durationMs=" +
-                d.entrySet().toArray.mkString(","))
-              // SPARK_GRAFT_DRIVE_TIMING=2 additionally dumps the full
-              // progress JSON (state-operator commit/update times, RocksDB
-              // custom metrics) — the inside-addBatch attribution
-              if (sys.env.get("SPARK_GRAFT_DRIVE_TIMING").contains("2"))
-                System.err.println(s"[drive-progress] $name batch$bid ${ps.last.json}")
-            }
-          recordLastPlan(q, name)
-        } finally { val t = System.nanoTime(); q.stop(); mark("stop", t) }
-        if (restartAfter.isEmpty) spark.table(name)
-        else {
-          // move the file-sink output off the harness scratch dir before
-          // it is deleted, and re-read from the survivor — a distributed
-          // scan, never a driver collect. The metadata-aware read's
-          // inputFiles IS the committed set (the _spark_metadata log is
-          // what filters out orphan part-files from the crashed attempt),
-          // so copying exactly those files and re-listing without the log
-          // preserves exactly-once; the log itself cannot move because it
-          // records absolute paths into the dying scratch dir. File-count
-          // driver work, not row-count.
-          val out = spark.read.parquet(s"$root/out")
-          val kept = java.nio.file.Paths.get(keepDir(name))
-          out.inputFiles.foreach { uri =>
-            val src = java.nio.file.Paths.get(new java.net.URI(uri).getPath)
-            java.nio.file.Files.copy(src, kept.resolve(src.getFileName.toString),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          }
-          spark.read.schema(out.schema).parquet(kept.toString)
-        }
-      }
-    } finally { deleteHarnessDir(root); mark("total", tDrive0) }
-  }
-
-  /** Runs `body` with the RocksDB state store provider (required by the
-    * transformWithState drives — the new API does not run on the
-    * HDFS-backed default), restoring the caller's provider after.
-    */
-  private[graft] def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val keys = Seq("spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set(keys(0), "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    // changelog checkpointing: commit the per-batch delta instead of a
-    // full RocksDB snapshot upload every micro-batch — the supported
-    // fault-tolerant mode (restart drives replay the changelog), and the
-    // per-batch commit cost drops from O(state) to O(delta)
-    spark.conf.set(keys(1), "true")
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Runs `body` under the streaming-harness session conf, restoring the
-    * caller's values after: 1 shuffle/state partition (per-wave slices
-    * are tiny — a 32-partition state store is 32x the commit overhead
-    * for zero parallelism gain), no no-data micro-batches (the sentinel
-    * waves carry the watermark, so the extra empty batch per wave buys
-    * nothing), and interpreted expressions (each micro-batch would
-    * otherwise recompile codegen for ~100-row inputs). Production state
-    * sizing belongs to the cluster conf, not the operator.
-    */
-  /** The registered-query name currently executing, plus whether it was
-    * registered as a streaming drive. Set by the [[batch]]/[[drive]]
-    * wrappers around every EventOps registry entry; [[withHarnessConf]]
-    * consults it so a wave drive registered under a batch name fails at
-    * its first execution (Verify/Bench/specs all trip it) instead of
-    * silently billing micro-batch wall time to the batch headline —
-    * the r10 `events_sessionize_window` misclassification, closed as a
-    * class. None means a direct call (specs, fuzz harness), which is
-    * always allowed: StreamFuzz registers every generated name into
-    * `queryNames`, so its drives cannot drift by construction.
-    */
-  private val activeRegistration =
-    new scala.util.DynamicVariable[Option[(String, Boolean)]](None)
-
-  /** Registry-entry wrappers: every EventOps query is registered through
-    * exactly one of these, so the map itself records the batch/drive
-    * split and [[streamingQueryNames]] cannot fall out of sync with it.
-    */
-  private def batch(name: String, f: (SparkSession, String) => DataFrame)
-      : (String, (SparkSession, String) => DataFrame) =
-    name -> ((s: SparkSession, d: String) =>
-      activeRegistration.withValue(Some((name, false)))(f(s, d)))
-
-  private def drive(name: String, f: (SparkSession, String) => DataFrame)
-      : (String, (SparkSession, String) => DataFrame) =
-    name -> ((s: SparkSession, d: String) =>
-      activeRegistration.withValue(Some((name, true)))(f(s, d)))
-
-  /** Test hooks for BenchSplitSpec's tripwire proof: run `body` as if it
-    * were a registry entry, and touch the harness chokepoint, without
-    * paying for a real drive.
-    */
-  private[graft] def runAsRegistered[A](name: String, isDrive: Boolean)(
-      body: => A): A =
-    activeRegistration.withValue(Some((name, isDrive)))(body)
-
-  private[graft] def harnessProbe(spark: SparkSession): Unit =
-    withHarnessConf(spark)(())
-
-  /** `codegen`: dev-only escape hatch (never set by a registered drive —
-    * r15 measured whole-stage codegen as a net LOSS for the wave drives:
-    * watermark literals inline into the generated code text, so every
-    * micro-batch recompiles its stages, and an interleaved min-of-3 A/B
-    * showed no family where the compile cost amortized — forced ON it
-    * was ~+0.9 s median across 12 probed drives, and the one apparent
-    * win (tws-join, single-run probe) did not survive the controlled
-    * re-measurement. OPTIMIZATION_r15.md §streaming has the A/B tables.)
-    */
-  private def withHarnessConf[A](spark: SparkSession,
-      statePartitions: Int = 1, codegen: Boolean = false)(body: => A): A = {
-    activeRegistration.value.foreach { case (qname, isDrive) =>
-      require(isDrive, s"registered query '$qname' reached the streaming " +
-        "wave-drive harness but was registered via batch(); register it " +
-        "via drive() so Bench bills it to streaming_sec")
-    }
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.noDataMicroBatches.enabled",
-      "spark.sql.codegen.wholeStage",
-      "spark.sql.streaming.minBatchesToRetain",
-      "spark.sql.streaming.numRecentProgressUpdates",
-      "spark.sql.codegen.factoryMode")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    // dev-only experiment overrides (optimization-round measurement):
-    // SPARK_GRAFT_HARNESS_STATE_PARTS forces every drive's state width,
-    // SPARK_GRAFT_HARNESS_CODEGEN=1 leaves whole-stage codegen on
-    val expParts = sys.env.get("SPARK_GRAFT_HARNESS_STATE_PARTS")
-      .map(_.toInt).getOrElse(statePartitions)
-    // "1" forces codegen ON for every drive, "0" forces it OFF (overrides
-    // the per-drive parameter), unset leaves the per-drive choice
-    val expCodegen = sys.env.get("SPARK_GRAFT_HARNESS_CODEGEN")
-    // default 1 state partition (tiny per-wave slices — a 32-partition
-    // store is 32x commit overhead for nothing); drives whose per-key
-    // state work GROWS with the fixture (the timer-sweeping quota job)
-    // pass a small >1 width so key processing parallelizes while commit
-    // overhead stays bounded
-    spark.conf.set(keys(0), expParts.toString)
-    spark.conf.set(keys(1), "false")
-    val codegenOn = expCodegen.map(_ == "1").getOrElse(codegen)
-    spark.conf.set(keys(2), codegenOn.toString)
-    // r16 negative result, pinned so round 17 doesn't re-walk it: with
-    // whole-stage off, NON-whole-stage codegen still Janino-compiles
-    // every watermark-literal-bearing predicate fresh each micro-batch
-    // (the literal lands in the generated code text). factoryMode=
-    // NO_CODEGEN removes those compiles, and a first interleaved
-    // min-of-3 (agg/tws-join/join-join) measured task time -13..-34% —
-    // but the confirmation A/B on the compute-heavier families
-    // (agg-join 40004, join-dedup 42010, tws-join 17502) measured the
-    // OPPOSITE (interpreted per-row eval over 5-16k-row waves costs
-    // more than the compiles save), and a full-bench NC run showed no
-    // streaming win over r15 once host noise was normalized out.
-    // Family-dependent sign + under the host's noise floor = NOT
-    // shipped; FALLBACK (Spark default) stays, and the dev hook
-    // SPARK_GRAFT_EXTRA_CONF can still force either mode for A/Bs.
-    spark.conf.set(keys(5), "FALLBACK")
-    // retain 2 checkpoint batches instead of the production 100: the
-    // harness runs <=10 micro-batches per drive, and the restart drives
-    // resume from the LATEST committed batch — a shorter retention only
-    // trims offset/commit-log compaction work per batch
-    spark.conf.set(keys(3), "2")
-    // progress ring buffer sized ABOVE any possible wave count (ADVICE
-    // r14): batchLog micro-batch counts and state-peak series read
-    // q.recentProgress, whose default 100-entry cap would silently
-    // truncate a long drive and mis-normalize its time ratio
-    spark.conf.set(keys(4), "200")
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** The (key, ms, value) wave frame shared by the sessionize drives:
     * real rows bucketed into [[StatefulChunks]] ascending time waves,
     * plus two far-future sentinel rows in their own waves — the first
@@ -726,6 +232,24 @@ object EventOps {
         .toDF("key", "ms", "value", "wave"))
   }
 
+  /** The flatMapGroupsWithState session job (StatefulSessionJob), driven
+    * END-TO-END through the DuckDB oracle: the events table is staged
+    * into [[StatefulChunks]] time-bucketed parquet waves (each a
+    * distributed write — the corpus never touches the driver), a
+    * file-source stream consumes them one wave per micro-batch, and two
+    * far-future sentinel waves push the watermark past every open
+    * session so the event-time timeouts emit the tails. Ascending
+    * time-bucket arrival means no row is ever late, so the oracle is
+    * plain gap sessionization at the job's millisecond resolution.
+    *
+    * This closes the custom-state operator's evidence gap: in-batch gap
+    * splits, cross-batch merges, AND timeout-driven tail emission all
+    * land in one result DuckDB reproduces. Scale shape: the operator
+    * itself is hash-partitioned by key with O(1) state per key; the
+    * memory sink + per-wave `repartition(1)` here are the oracle
+    * harness's arrival simulation, not the production path (any
+    * distributed sink works, waves arrive as real files).
+    */
   def eventsSessionizeStateful(spark: SparkSession, dir: String): DataFrame = {
     val gapMs = SessionGapMicros / 1000L
     driveWaves(spark, sessionWaveFrame(spark, dir),
@@ -1375,53 +899,51 @@ object EventOps {
     * underneath. Complements [[eventsAttribution]], the batch twin of
     * the DROP side of the same watermark semantics.
     */
-  def eventsAttributionStream(spark: SparkSession, dir: String): DataFrame = {
-    val ev = withMicros(Tables.events(spark, dir))
-      .filter(col("event_type").isin("view", "click"))
-      .select(col("user_id"), col("event_type"), expr("us div 1000").as("ms"))
-    val bounds = msBounds(ev, "attr_stream_" + dir)
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = (hi - lo) / StatefulChunks + 1
-    val root = harnessTempDir("graft_ssj_")
-    val sides = Seq("view" -> s"$root/views", "click" -> s"$root/clicks")
-    sides.foreach { case (_, d) =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-    }
-    // ONE staged write for both sides: partitioned by (side, wave), so
-    // the corpus scan runs once and release is a rename either way
-    ev.withColumn("wave", expr(s"(ms - $lo) div $width"))
-      .select(col("event_type").as("side"), col("user_id"), col("ms"),
-        col("wave"))
-      .repartition(1).write.partitionBy("side", "wave")
-      .parquet(s"$root/stage")
-    try withHarnessConf(spark) {
-      val Seq(vDir, cDir) = sides.map(_._2)
-      val views = spark.readStream.schema("user_id LONG, ms LONG")
-        .parquet(vDir)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("view_ts"))
-      val clicks = spark.readStream.schema("user_id LONG, ms LONG")
-        .parquet(cDir)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("click_ts"))
-      val q = graft.streaming.SessionStreamJob
+  def eventsAttributionStream(spark: SparkSession, dir: String): DataFrame =
+    attributionDrive(spark, dir, "ssj_attr", Nil) {
+      (views, clicks) => graft.streaming.SessionStreamJob
         .attributeClicks(views, clicks, "4 hours", "10 minutes")
-        .writeStream.outputMode("append").format("memory")
-        .queryName("ssj_attr")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try {
-        (0L until StatefulChunks.toLong).foreach { w =>
-          sides.foreach { case (tpe, d) =>
-            releaseWave(s"$root/stage/side=$tpe", d, w)
-          }
-          q.processAllAvailable()
-        }
-        recordInlineDrive(q, "ssj_attr")
-      } finally q.stop()
-    } finally deleteHarnessDir(root)
-    spark.table("ssj_attr")
+    }
       .select(col("user_id"), unix_millis(col("view_ts")).as("view_ms"),
         unix_millis(col("click_ts")).as("click_ms"))
       .orderBy(col("user_id"), col("view_ms"), col("click_ms"))
+
+  /** The two-sided wave drive shared by the attribution drives: views
+    * and clicks carved into [[StatefulChunks]] ascending time waves, one
+    * file stream per side (projected to `user_id` + `view_ts` /
+    * `click_ts`), and one sentinel wave per `sentinelOffsetsMs` entry on
+    * BOTH sides at `hi + offset` — the join watermark is the min over
+    * inputs, so a one-sided sentinel would never advance it. Sentinel
+    * rows carry negative user ids. Returns the drive's sink table.
+    */
+  private def attributionDrive(spark: SparkSession, dir: String,
+      name: String, sentinelOffsetsMs: Seq[Long])(
+      query: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    import spark.implicits._
+    val ev = withMicros(Tables.events(spark, dir))
+      .filter(col("event_type").isin("view", "click"))
+      .select(col("user_id"), col("event_type"), expr("us div 1000").as("ms"))
+    val bounds = msBounds(ev, "attribution_" + dir)
+    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
+    val width = (hi - lo) / StatefulChunks + 1
+    val sentinels = sentinelOffsetsMs.zipWithIndex.flatMap { case (off, i) =>
+      Seq("view", "click").map(side =>
+        (side, -(i + 1L), hi + off, StatefulChunks + i.toLong))
+    }.toDF("side", "user_id", "ms", "wave")
+    // ONE staged write for both sides: partitioned by (side, wave), so
+    // the corpus scan runs once and release is a rename either way
+    val frame = ev.withColumn("wave", expr(s"(ms - $lo) div $width"))
+      .select(col("event_type").as("side"), col("user_id"), col("ms"),
+        col("wave"))
+      .unionByName(sentinels)
+    val sideSchema = "user_id LONG, ms LONG"
+    driveSides(spark, frame, Seq("view" -> sideSchema, "click" -> sideSchema),
+      StatefulChunks + sentinelOffsetsMs.size.toLong, name) {
+      case Seq(views, clicks) =>
+        query(
+          views.select(col("user_id"), timestamp_millis(col("ms")).as("view_ts")),
+          clicks.select(col("user_id"), timestamp_millis(col("ms")).as("click_ts")))
+    }
   }
 
   /** The LEFT OUTER stream-stream interval join, driven end-to-end:
@@ -1434,57 +956,12 @@ object EventOps {
     * the emitted set equals the plain batch left join.
     */
   def eventsAttributionOuter(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = withMicros(Tables.events(spark, dir))
-      .filter(col("event_type").isin("view", "click"))
-      .select(col("user_id"), col("event_type"), expr("us div 1000").as("ms"))
-    val bounds = msBounds(ev, "attr_outer_" + dir)
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = (hi - lo) / StatefulChunks + 1
     val winMs = AttributionWindowMicros / 1000L
-    val root = harnessTempDir("graft_ssjo_")
-    val sides = Seq("view" -> s"$root/views", "click" -> s"$root/clicks")
-    sides.foreach { case (_, d) =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-    }
-    val sentinels = Seq(
-      ("view", -1L, hi + 3 * winMs, StatefulChunks.toLong),
-      ("click", -1L, hi + 3 * winMs, StatefulChunks.toLong),
-      ("view", -2L, hi + 6 * winMs, StatefulChunks + 1L),
-      ("click", -2L, hi + 6 * winMs, StatefulChunks + 1L))
-      .toDF("side", "user_id", "ms", "wave")
-    ev.withColumn("wave", expr(s"(ms - $lo) div $width"))
-      .select(col("event_type").as("side"), col("user_id"), col("ms"),
-        col("wave"))
-      .unionByName(sentinels)
-      .repartition(1).write.partitionBy("side", "wave")
-      .parquet(s"$root/stage")
-    try withHarnessConf(spark) {
-      val Seq(vDir, cDir) = sides.map(_._2)
-      val views = spark.readStream.schema("user_id LONG, ms LONG")
-        .parquet(vDir)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("view_ts"))
-      val clicks = spark.readStream.schema("user_id LONG, ms LONG")
-        .parquet(cDir)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("click_ts"))
-      val q = graft.streaming.SessionStreamJob
+    attributionDrive(spark, dir, "ssjo_attr", Seq(3 * winMs, 6 * winMs)) {
+      (views, clicks) => graft.streaming.SessionStreamJob
         .attributeClicks(views, clicks, "4 hours", "10 minutes",
           joinType = "leftOuter")
-        .writeStream.outputMode("append").format("memory")
-        .queryName("ssjo_attr")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try {
-        (0L until StatefulChunks + 2L).foreach { w =>
-          sides.foreach { case (tpe, d) =>
-            releaseWave(s"$root/stage/side=$tpe", d, w)
-          }
-          q.processAllAvailable()
-        }
-        recordInlineDrive(q, "ssjo_attr")
-      } finally q.stop()
-    } finally deleteHarnessDir(root)
-    spark.table("ssjo_attr")
+    }
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_millis(col("view_ts")).as("view_ms"),
         unix_millis(col("click_ts")).as("click_ms"))
@@ -1514,62 +991,15 @@ object EventOps {
     * join + day rollup.
     */
   def eventsAttributionRollup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ev = withMicros(Tables.events(spark, dir))
-      .filter(col("event_type").isin("view", "click"))
-      .select(col("user_id"), col("event_type"), expr("us div 1000").as("ms"))
-    val bounds = msBounds(ev, "attr_rollup_" + dir)
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val width = (hi - lo) / StatefulChunks + 1
     val winMs = AttributionWindowMicros / 1000L
-    val root = harnessTempDir("graft_ssjr_")
-    val sides = Seq("view" -> s"$root/views", "click" -> s"$root/clicks")
-    sides.foreach { case (_, d) =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
-    }
-    val sentinels = Seq(
-      ("view", -1L, hi + 5 * winMs, StatefulChunks.toLong),
-      ("click", -1L, hi + 5 * winMs, StatefulChunks.toLong),
-      ("view", -2L, hi + 10 * winMs, StatefulChunks + 1L),
-      ("click", -2L, hi + 10 * winMs, StatefulChunks + 1L))
-      .toDF("side", "user_id", "ms", "wave")
-    ev.withColumn("wave", expr(s"(ms - $lo) div $width"))
-      .select(col("event_type").as("side"), col("user_id"), col("ms"),
-        col("wave"))
-      .unionByName(sentinels)
-      .repartition(1).write.partitionBy("side", "wave")
-      .parquet(s"$root/stage")
-    try withHarnessConf(spark) {
-      val Seq(vDir, cDir) = sides.map(_._2)
-      val views = spark.readStream.schema("user_id LONG, ms LONG")
-        .parquet(vDir)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("view_ts"))
-      val clicks = spark.readStream.schema("user_id LONG, ms LONG")
-        .parquet(cDir)
-        .select(col("user_id"), timestamp_millis(col("ms")).as("click_ts"))
-      val joined = graft.streaming.SessionStreamJob
+    attributionDrive(spark, dir, "ssjr_rollup", Seq(5 * winMs, 10 * winMs)) {
+      (views, clicks) => graft.streaming.SessionStreamJob
         .attributeClicks(views, clicks, "4 hours", "10 minutes")
-      val q = joined
-        .groupBy(col("user_id"),
-          window(col("click_ts"), "1 day").as("day"))
+        .groupBy(col("user_id"), window(col("click_ts"), "1 day").as("day"))
         .agg(count(lit(1)).as("n_attributed"))
         .select(col("user_id"), col("day.start").as("day_start"),
           col("n_attributed"))
-        .writeStream.outputMode("append").format("memory")
-        .queryName("ssjr_rollup")
-        .option("checkpointLocation", s"$root/ckpt")
-        .start()
-      try {
-        (0L until StatefulChunks + 2L).foreach { w =>
-          sides.foreach { case (tpe, d) =>
-            releaseWave(s"$root/stage/side=$tpe", d, w)
-          }
-          q.processAllAvailable()
-        }
-        recordInlineDrive(q, "ssjr_rollup")
-      } finally q.stop()
-    } finally deleteHarnessDir(root)
-    spark.table("ssjr_rollup")
+    }
       .filter(col("user_id") >= 0L)
       .select(col("user_id"), unix_millis(col("day_start")).as("day_ms"),
         col("n_attributed"))
@@ -2433,7 +1863,7 @@ object EventOps {
   /** The wave drives — every registered query whose wall time is
     * micro-batch machinery. Registered via [[drive]] so membership here
     * IS membership in [[streamingQueryNames]] (one registration, both
-    * surfaces), and the [[withHarnessConf]] tripwire enforces the
+    * surfaces), and the harness's registration tripwire enforces the
     * converse at first execution.
     */
   private val driveQueries: Map[String, (SparkSession, String) => DataFrame] =

@@ -353,7 +353,7 @@ object SourceOps {
           // normalizer, so the fingerprint is stable across runs
           try {
             q2.processAllAvailable()
-            EventOps.recordLastPlan(q2, "source_jsonl_stream_rt")
+            graft.streaming.WaveHarness.recordLastPlan(q2, "source_jsonl_stream_rt")
           } finally q2.stop()
           streamRtPaths.put(key, dest)
           out = dest

@@ -14,7 +14,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent
   */
 class StreamMetrics(maxBatchesPerQuery: Int = 256) extends StreamingQueryListener {
 
-  /** One micro-batch's digest. */
+  /** One micro-batch's digest; `durationMs` is the batch's
+    * `triggerExecution` time, which already spans every other phase.
+    */
   case class BatchMetrics(queryName: String, batchId: Long, numInputRows: Long,
       processedRowsPerSecond: Double, durationMs: Long, stateRows: Long)
 
@@ -26,15 +28,10 @@ class StreamMetrics(maxBatchesPerQuery: Int = 256) extends StreamingQueryListene
   override def onQueryProgress(event: QueryProgressEvent): Unit = synchronized {
     val p = event.progress
     val name = Option(p.name).getOrElse(p.id.toString)
-    val stateRows =
-      if (p.stateOperators == null || p.stateOperators.isEmpty) 0L
-      else p.stateOperators.map(_.numRowsTotal).sum
-    val duration = Option(p.durationMs)
-      .map(m => m.values().toArray.map(_.asInstanceOf[java.lang.Long].longValue()).sum)
-      .getOrElse(0L)
+    val duration = DriveTelemetry.phases(p).getOrElse("triggerExecution", 0L)
     val buf = batches.getOrElseUpdate(name, mutable.ArrayDeque.empty)
     buf.append(BatchMetrics(name, p.batchId, p.numInputRows,
-      p.processedRowsPerSecond, duration, stateRows))
+      p.processedRowsPerSecond, duration, DriveTelemetry.stateRows(p)))
     if (buf.size > maxBatchesPerQuery) buf.removeHead()
   }
 

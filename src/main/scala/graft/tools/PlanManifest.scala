@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Emits `plan_manifest.json` — one normalized [[PlanFingerprint]] per
   * query — the committed baseline the Bench plan tripwire diffs against
   * (VERDICT r12 #1: the wall-time/shuffle-bytes tripwires cried wolf
@@ -16,12 +14,12 @@ import org.apache.spark.sql.SparkSession
   * fingerprinted at its INITIAL physical plan — deliberately pre-AQE-
   * replan; final plans proved run-varying (PlanFingerprint.fingerprint
   * doc has the r14 evidence). Streaming drives (VERDICT r13 #1) run
-  * once; driveWaves records the last micro-batch's normalized plan into
-  * DriveTelemetry, which is read back here. Since r15 the two drives
-  * outside the wave harness (`weather_e2e_poll`, `source_jsonl_stream_rt`)
-  * record a fingerprint too (through recordLastPlan in their inline
-  * harnesses), so "UNFINGERPRINTED" now only appears when telemetry
-  * silently failed — and coverageGaps treats it as a GAP (ADVICE r14).
+  * once; the wave harness (graft.streaming.WaveHarness) records the last
+  * micro-batch's normalized plan into DriveTelemetry, which is read back
+  * here. The two drives outside the wave harness (`weather_e2e_poll`,
+  * `source_jsonl_stream_rt`) record a fingerprint too, so
+  * "UNFINGERPRINTED" only appears when telemetry silently failed — and
+  * coverageGaps treats it as a GAP (ADVICE r14).
   *
   * `SPARK_GRAFT_PLAN_DEBUG=<dir>` additionally writes the normalized
   * token list per batch query, for diffing a flagged fingerprint by eye.
@@ -55,15 +53,7 @@ object PlanManifest {
     val sfDir = args(0)
     val outFile = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val streaming = graft.SparkEntry.streamingQueries
     val batchOnly = sys.env.get("SPARK_GRAFT_MANIFEST_BATCH_ONLY").contains("1")
@@ -78,7 +68,7 @@ object PlanManifest {
       val fn = graft.SparkEntry.queries(name)
       val fp = try {
         if (streaming.contains(name)) {
-          // the drive runs inside the build; driveWaves records the
+          // the drive runs inside the build; the harness records the
           // last micro-batch fingerprint as a side channel, keyed by
           // its own drive name — attribute by the log window around
           // this invocation (same convention as Bench)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev measurement harness for optimization rounds (guide §1): for each
   * named query, capture `.explain("formatted")` to a file and time the
   * computation in isolation with the noop sink (guide §1.4 — eager, every
@@ -16,7 +14,13 @@ import org.apache.spark.sql.SparkSession
   *
   * Prints one line per query: name, noop-sink seconds (min over reps, plus
   * the full series), count() seconds for comparability with Bench's timed
-  * action, and the Exchange/Join-operator census of the initial plan.
+  * action, and the Exchange/Join-operator census of the initial plan. A
+  * streaming drive's line instead carries its job/task census and its
+  * micro-batches' trigger phases (Spark's `durationMs`: latestOffset,
+  * queryPlanning, addBatch, walCommit, ...) summed over the last timed
+  * run — read from [[graft.streaming.DriveTelemetry]], which the wave
+  * harness fills on every drive. `triggerExecution` is the batches' total
+  * and spans the other phases.
   * Dev tooling only — never on a query path.
   */
 object QueryMeter {
@@ -29,14 +33,7 @@ object QueryMeter {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "before")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val builder = graft.GraftSession.builder(cpus)
     // dev experiment hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets config
     // A/B runs vary session confs without a recompile. Malformed entries
     // are NAMED on stderr (ADVICE r15: a typo'd A/B must not silently
@@ -111,17 +108,22 @@ object QueryMeter {
               // a streaming drive already ran end-to-end while building
               // df0; time the drive itself (the thing Bench times)
               val c0 = census()
+              var phaseMark = 0
               val times = (1 to math.min(reps, 2)).map { _ =>
+                phaseMark = graft.streaming.DriveTelemetry.batchLogSize
                 val t0 = System.nanoTime()
                 fn(spark, sfDir).count()
                 (System.nanoTime() - t0) / 1e9
               }
               val c1 = census()
+              val phases = graft.streaming.DriveTelemetry
+                .phaseTotalsSince(phaseMark).toSeq.sorted
+                .map { case (k, v) => s"$k:$v" }.mkString(",")
               println(f"[meter] $name%-28s drive=${times.min}%7.3f s " +
                 s"series=${times.map(t => f"$t%.3f").mkString(",")} " +
                 s"jobs=${c1._1 - c0._1} stages=${c1._2 - c0._2} " +
                 s"tasks=${c1._3 - c0._3} taskRunMs=${c1._4 - c0._4} " +
-                s"taskSerMs=${c1._5 - c0._5}")
+                s"taskSerMs=${c1._5 - c0._5} phaseMs=$phases")
             } else {
               once() // warm
               val series = (1 to reps).map(_ => once())

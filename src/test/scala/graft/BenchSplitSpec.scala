@@ -28,14 +28,14 @@ class BenchSplitSpec extends AnyFunSuite {
     // go red at the first execution instead of silently billing drive
     // wall time to batch_sec
     val ex = intercept[IllegalArgumentException] {
-      graft.operators.EventOps.runAsRegistered("bogus_drive", isDrive = false) {
-        graft.operators.EventOps.harnessProbe(TestSpark.spark)
+      graft.streaming.WaveHarness.runAsRegistered("bogus_drive", isDrive = false) {
+        graft.streaming.WaveHarness.harnessProbe(TestSpark.spark)
       }
     }
     assert(ex.getMessage.contains("bogus_drive"))
     // and a drive() registration passes the same chokepoint
-    graft.operators.EventOps.runAsRegistered("real_drive", isDrive = true) {
-      graft.operators.EventOps.harnessProbe(TestSpark.spark)
+    graft.streaming.WaveHarness.runAsRegistered("real_drive", isDrive = true) {
+      graft.streaming.WaveHarness.harnessProbe(TestSpark.spark)
     }
   }
 

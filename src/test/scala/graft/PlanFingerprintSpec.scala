@@ -73,7 +73,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
 
   private def streamAggFp(name: String, parts: Int): String = {
     import org.apache.spark.sql.functions._
-    graft.operators.EventOps.driveWaves(spark, miniRows(spark),
+    graft.streaming.WaveHarness.driveWaves(spark, miniRows(spark),
       "key LONG, ms LONG, value DOUBLE", 4L, name,
       statePartitions = parts) { src =>
       src.withColumn("ts", timestamp_millis(col("ms")))
@@ -87,7 +87,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
 
   private def streamJoinFp(name: String, joinType: String): String = {
     import org.apache.spark.sql.functions._
-    graft.operators.EventOps.driveWaves(spark, miniRows(spark),
+    graft.streaming.WaveHarness.driveWaves(spark, miniRows(spark),
       "key LONG, ms LONG, value DOUBLE", 4L, name) { src =>
       val ts = src.withColumn("ts", timestamp_millis(col("ms")))
       val l = ts.filter(col("key") % 2 === 0).withWatermark("ts", "10 seconds")
@@ -124,7 +124,7 @@ class PlanFingerprintSpec extends AnyFunSuite {
 
   test("streaming: a SparkEntry drive's fingerprint attributes via the " +
       "log window (drive names differ from query names)") {
-    // the r14 first-regen bug class: driveWaves records under its own
+    // the r14 first-regen bug class: the harness records under its own
     // drive name (sfz_srol_42503), so a name-keyed lookup on the
     // SparkEntry name (fuzz_q42503) silently found nothing — Bench and
     // PlanManifest attribute by the log window around the invocation

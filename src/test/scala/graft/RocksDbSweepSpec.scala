@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.fuzz.StreamFuzz
-import graft.operators.EventOps
+import graft.streaming.WaveHarness
 
 /** State-store-provider sweep: the streaming results must be identical
   * under the default HDFS-backed provider and RocksDB — the provider a
@@ -41,7 +41,7 @@ class RocksDbSweepSpec extends AnyFunSuite {
     test(s"fuzz seed $s drive matches its batch twin under RocksDB") {
       // the drive executes eagerly inside build(), so the provider conf
       // must wrap the build, not the collect
-      val drive = EventOps.withRocksDb(spark) {
+      val drive = WaveHarness.withRocksDb(spark) {
         StreamFuzz.generate(s, DriveCfg(tag = "rdb")).build(spark, dir)
           .collect()
       }
@@ -69,7 +69,7 @@ class RocksDbSweepSpec extends AnyFunSuite {
     test(s"hand drive $name is provider-invariant (default vs RocksDB)") {
       val fn = SparkEntry.queries(name)
       val base = fn(spark, dir).collect().map(_.toString).sorted
-      val rdb = EventOps.withRocksDb(spark) {
+      val rdb = WaveHarness.withRocksDb(spark) {
         fn(spark, dir).collect()
       }.map(_.toString).sorted
       assert(base.nonEmpty, s"$name: vacuous (0 rows)")

@@ -5,7 +5,7 @@ import graft.fuzz.StreamFuzz
 import graft.streaming.DriveTelemetry
 
 /** Watermark-horizon state eviction OBSERVED, not argued: every
-  * driveWaves run records its per-micro-batch state-store row totals
+  * wave-harness drive records its per-micro-batch state-store row totals
   * into [[DriveTelemetry]]; for three distinct state machines (windowed
   * aggregation, transformWithState quota, stream-stream interval join)
   * the series must peak mid-drive and DROP once the sentinel waves push
@@ -40,6 +40,14 @@ class StateTelemetrySpec extends AnyFunSuite {
         assert(s.max > 0L, s"no state ever recorded: $s")
         assert(s.last < s.max,
           s"state did not drop after the sentinel waves: $s")
+        // the same drive's recorded trigger phases: one entry per batch,
+        // each carrying triggerExecution, which spans every other phase
+        val phases = DriveTelemetry.phaseSeries(name).getOrElse(Nil)
+        assert(phases.length == s.length &&
+          phases.forall(ph => ph.get("triggerExecution")
+            .exists(total => ph.values.forall(_ <= total))),
+          s"recorded phases not one triggerExecution-bounded map per " +
+            s"batch: $phases")
       }
     }
 

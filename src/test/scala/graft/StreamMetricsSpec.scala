@@ -35,5 +35,14 @@ class StreamMetricsSpec extends AnyFunSuite {
     assert(rows == 3, s"expected 3 input rows observed, got $rows")
     assert(batches >= 2, s"expected >=2 batches, got $batches")
     assert(maxState == 3, s"expected 3 state rows (3 distinct keys), got $maxState")
+    // a batch's duration is its triggerExecution time, which already
+    // spans the other phases — never the sum of the whole durationMs map
+    val triggerMs = q.recentProgress.toSeq.map(p =>
+      p.batchId -> p.durationMs.get("triggerExecution").longValue)
+    metrics.forQuery("metered").foreach { b =>
+      assert(triggerMs.contains(b.batchId -> b.durationMs),
+        s"batch ${b.batchId}: durationMs ${b.durationMs} is not its " +
+          s"triggerExecution (${triggerMs.filter(_._1 == b.batchId)})")
+    }
   }
 }

@@ -7,19 +7,12 @@ import org.apache.spark.sql.SparkSession
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    // production install path: GraftSession loads the extensions class by
+    // NAME via reflection at context/session creation — every suite runs
+    // against an extensions-installed session, and the dedicated
+    // SortedIntersectSpec case proves resolution in a clean newSession()
+    val s = GraftSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // production install path: the extensions class is loaded by NAME
-      // via reflection at context/session creation — every suite runs
-      // against an extensions-installed session, and the dedicated
-      // SortedIntersectSpec case proves resolution in a clean newSession()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .getOrCreate()
