@@ -174,6 +174,7 @@ object Bench {
     // dirs).
     val planFps = scala.collection.mutable.Map.empty[String, String]
     val batchCounts = scala.collection.mutable.Map.empty[String, Long]
+    val drivePhases = scala.collection.mutable.Map.empty[String, Map[String, Long]]
     def onePass(fingerprint: Boolean = false): Map[String, (Double, Long)] =
       SparkEntry.queries.map { case (name, fn) =>
         // drop caches left by the previous query so timings are independent
@@ -203,6 +204,11 @@ object Bench {
         if (isStream && dfOpt.isDefined) {
           val b = graft.streaming.DriveTelemetry.batchesSince(batchMark)
           if (b > 0) batchCounts(name) = b
+          // per-phase ms over the query's micro-batches; triggerExecution
+          // is their total, not a phase
+          val ph = graft.streaming.DriveTelemetry.phaseTotalsSince(batchMark) -
+            "triggerExecution"
+          if (ph.nonEmpty) drivePhases(name) = ph
           graft.streaming.DriveTelemetry.combinedFp(
             graft.streaming.DriveTelemetry.planLogSince(planMark).map(_._2))
             .foreach(planFps(name) = _)
@@ -220,12 +226,11 @@ object Bench {
       }
     // The per-query map outgrew what log capture reliably holds (r5's
     // record kept 78/181 entries), so the FULL record goes to a file —
-    // bench_detail.json next to the working dir, overridable — and the
+    // bench_detail.json in the working dir, overridable — and the
     // stdout line stays a compact summary that can never be cut mid-map.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "/root/repo/bench_detail.json")
-    val repoDir = Option(java.nio.file.Paths.get(detailPath).getParent)
-      .map(_.toString).getOrElse("/root/repo")
+      java.nio.file.Paths.get("bench_detail.json").toAbsolutePath.toString)
+    val repoDir = java.nio.file.Paths.get(detailPath).toAbsolutePath.getParent.toString
     // Baseline guard on the recorded sf: comparing an sf0.1 round against
     // a leftover sf0.01 dev run would flag every query as a fake 10x
     // regression.
@@ -308,12 +313,16 @@ object Bench {
       .map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")
     val bcJson = batchCounts.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val phJson = drivePhases.toSeq.sortBy(_._1).map { case (k, ph) =>
+      s""""$k":""" + ph.toSeq.sortBy(_._1)
+        .map { case (p, v) => s""""$p":$v""" }.mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
     // raw (uncalibrated) flag counts + noise_alert: a calibration scalar
     // masking a uniform regression must itself be a visible signal
     // (ADVICE r13 #4) — a reader sees scalar >1.3 on a quiet host and
     // investigates instead of trusting zero flags
     val summary = s""""sf":"$sfDir","n_queries":${results.size},"n_failed":$failed,"batch_sec":${r3(batchSec)},"streaming_sec":${r3(streamSec)},"regressions":$regressions,"baseline_source":"$baselineSource","plan_baseline_source":"$planBaselineSource","host_noise_scalar":${r3(flags.batchScalar)},"stream_noise_scalar":${r3(flags.streamScalar)},"raw_time_flags":{"batch":${flags.rawBatchTimeFlags},"streaming":${flags.rawStreamTimeFlags}},"noise_alert":${flags.noiseAlert},"calib_sec":${r3(calibSec)},"shuffle_settle_timeouts":${settleTimeouts.get()},"total_sec":${r3(total)}"""
-    val detail = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"shuffle_bytes":$sbJson,"plan_fp":$fpJson,"state_peaks":$peaksJson,"batch_counts":$bcJson,"streaming_queries":$streamNames,$summary}"""
+    val detail = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"shuffle_bytes":$sbJson,"plan_fp":$fpJson,"state_peaks":$peaksJson,"batch_counts":$bcJson,"drive_phases":$phJson,"streaming_queries":$streamNames,$summary}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
       (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception =>

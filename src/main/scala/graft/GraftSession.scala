@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.streaming.ForkFreeCheckpointFileManager
 
 /** The one place the engine's local session conf is written down; every
   * entry point (Bench, Verify, the tools, the test session) builds from
@@ -13,6 +14,8 @@ object GraftSession {
     * installed. `nanosAsLong` reads a parquet TIMESTAMP(NANOS) `events.ts`
     * as Long nanos (current fixtures are timestamp[us], where the flag
     * is a no-op; `Tables.eventMicros` dispatches on the actual type).
+    * Streaming checkpoints go through
+    * [[graft.streaming.ForkFreeCheckpointFileManager]].
     */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
@@ -23,4 +26,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(ForkFreeCheckpointFileManager.ConfKey,
+        classOf[ForkFreeCheckpointFileManager].getName)
 }

@@ -35,7 +35,7 @@ object WaveHarness {
       // multi-file waves: scatter each wave's rows across a deterministic
       // content-hash salt so the dynamic-partition write emits several
       // files per wave directory — one released wave is STILL one
-      // micro-batch (all its files land before processAllAvailable; no
+      // micro-batch (releaseWave publishes all its files in one step; no
       // maxFilesPerTrigger), but the source now plans multi-file,
       // multi-partition batches. Hash salting (not round-robin) keeps
       // the carving reproducible run to run. The salt is a real
@@ -80,13 +80,34 @@ object WaveHarness {
     rec(new java.io.File(root))
   }
 
-  /** Release one staged wave into a drive's source dir. A private
-    * staging is consumed (move); a SHARED staging is retained for the
-    * next drive of the same seed — hard-link (same tmpfs, zero copy),
-    * falling back to a copy if the link fails.
+  /** A drive's watched source dir: a symlink to the directory holding
+    * the files released so far (see [[releaseWave]]).
+    */
+  private def createSourceDir(srcDir: String): Unit = {
+    val link = java.nio.file.Paths.get(srcDir)
+    val empty = link.resolveSibling(s"${link.getFileName}.init")
+    java.nio.file.Files.createDirectories(empty)
+    java.nio.file.Files.createSymbolicLink(link, empty.getFileName)
+  }
+
+  /** Release one staged wave into a drive's source dir, all of its files
+    * in one step. The query keeps triggering while the driver releases,
+    * so a wave whose files landed one by one could be listed half-landed
+    * and split over two micro-batches, which moves the watermark
+    * mid-wave. Instead the wave's files go into a fresh directory beside
+    * hard links of every earlier file, and the `srcDir` symlink swaps
+    * onto it by one atomic rename: a listing sees all of a wave or none
+    * of it. A private staging is consumed (move); a SHARED staging is
+    * retained for the next drive of the same seed — hard-link (same
+    * tmpfs, zero copy), falling back to a copy if the link fails.
     */
   private def releaseWave(stage: String, srcDir: String, wave: Long,
       retainStage: Boolean): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val link = java.nio.file.Paths.get(srcDir)
+    val next = Files.createDirectory(link.resolveSibling(s"${link.getFileName}.w$wave"))
+    link.toRealPath().toFile.listFiles.foreach(f =>
+      Files.createLink(next.resolve(f.getName), f.toPath))
     val wd = new java.io.File(s"$stage/wave=$wave")
     // multi-file staging nests a salt=N partition level under each wave
     // dir; release flattens it so the file source sees plain files
@@ -98,14 +119,17 @@ object WaveHarness {
       }
     parquets(wd).sortBy(_.getPath).zipWithIndex
       .foreach { case (f, k) =>
-        val dst = java.nio.file.Paths.get(s"$srcDir/w${wave}_$k.parquet")
+        val dst = next.resolve(s"w${wave}_$k.parquet")
         if (retainStage)
-          try java.nio.file.Files.createLink(dst, f.toPath)
+          try Files.createLink(dst, f.toPath)
           catch { case _: Exception =>
-            java.nio.file.Files.copy(f.toPath, dst)
+            Files.copy(f.toPath, dst)
           }
-        else java.nio.file.Files.move(f.toPath, dst)
+        else Files.move(f.toPath, dst)
       }
+    val swap = link.resolveSibling(s".${link.getFileName}.swap")
+    Files.createSymbolicLink(swap, next.getFileName)
+    Files.move(swap, link, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** JVM-lifetime shared staging for wave drives whose carved frame is
@@ -242,8 +266,7 @@ object WaveHarness {
       transform: Seq[DataFrame] => DataFrame): DataFrame = {
     val root = harnessTempDir(s"graft_${name}_")
     val srcDirs = sides.map { case (side, _) => s"$root/$side" }
-    srcDirs.foreach(d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
+    srcDirs.foreach(createSourceDir)
     // with a stageKey, the staged waves are shared across every drive of
     // the same deterministic frame (staged once per JVM); without, they
     // are private to this drive and consumed as waves release

@@ -3,7 +3,8 @@
 # build lock so QueryMeter/Verify probes can run while sbt test/bench owns
 # the lock). Same module opens + confs as build.sbt's `run / fork`.
 # Usage: tools/graftrun.sh <mainClass> [args...]
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \

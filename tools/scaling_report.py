@@ -20,9 +20,13 @@ handful of pair/explode ops; this bounds observed wall time on all of
 them. Streaming drives are reported separately and never flagged — their
 wall time is micro-batch machinery, constant in sf.
 
+`out.json` defaults to scaling_report.json at the root of the checkout
+holding this script.
+
 Exit code 1 if any batch query is flagged.
 """
 import json
+import os
 import sys
 
 # fallback only, for detail files predating the emitted name list:
@@ -57,7 +61,9 @@ def main(argv):
             return k in stream_names
         return any(m in k for m in STREAM_MARKERS)
     data_ratio = float(argv[3]) if len(argv) > 3 else 10.0
-    out_path = argv[4] if len(argv) > 4 else "/root/repo/scaling_report.json"
+    out_path = argv[4] if len(argv) > 4 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scaling_report.json")
     flag_ratio = 1.2 * data_ratio
     rows, flagged, streaming = [], [], []
     for k in sorted(set(small) & set(big)):
