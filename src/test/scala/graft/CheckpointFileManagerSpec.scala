@@ -100,6 +100,22 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
     } finally { rec.close(); Files.deleteIfExists(file) }
   }
 
+  /** Collects the sessions earlier suites dropped and waits until their
+    * cleanups stop. Spark's `ArtifactManager` cleaner forks an `rm -rf` of
+    * a session's artifact directory when a GC finds the session
+    * unreachable, so a GC landing in a measured window would count
+    * another suite's garbage as this pipeline's fork.
+    */
+  private def settleSessionCleanups(): Unit = {
+    System.gc()
+    var quiet = false
+    var tries = 0
+    while (!quiet && tries < 20) {
+      quiet = processStarts(Thread.sleep(300))._2.isEmpty
+      tries += 1
+    }
+  }
+
   test("the reference pipeline forks no child process after its first batch " +
       "commits, and start() installs the manager on a bare session") {
     val s = spark.newSession()
@@ -109,6 +125,7 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
     val url = derby("ckpt_forks")
     val stream = MemoryStream[String]
     val ckpt = Files.createTempDirectory("ckpt_forks")
+    settleSessionCleanups()
     val ((firstCommit, lastCommit), starts) = processStarts {
       val q = WeatherStreamJob.start(WeatherStreamJob.aggregate(stream.toDF()),
         ckpt.toString, Trigger.ProcessingTime(0))(
