@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{CosineSimilarity, JaroWinkler, SortedIntersectCount, ZInterleave}
+import graft.functions.{CosineSimilarity, JaroWinkler, SortedIntersectCount, TokenWindows, ZInterleave}
 
 /** Session-extension entry point for the engine: installs the custom
   * Catalyst functions into any session built with
@@ -67,6 +67,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(exprs.length == 2,
           s"jaro_winkler(a, b) takes exactly 2 arguments, got ${exprs.length}")
         JaroWinkler(exprs.head, exprs(1))
+      }))
+    e.injectFunction((
+      FunctionIdentifier(TokenWindows.Name),
+      new ExpressionInfo(
+        classOf[TokenWindows].getCanonicalName,
+        null,
+        TokenWindows.Name,
+        "token_windows(tokens, width, hashed) - every width-token window of a string " +
+          "array, space-joined, or its md5 hex when hashed",
+        ""),
+      exprs => {
+        require(exprs.length == 3,
+          s"token_windows(tokens, width, hashed) takes exactly 3 arguments, got ${exprs.length}")
+        TokenWindows(exprs.head, exprs(1), exprs(2))
       }))
     e.injectOptimizerRule(_ => graft.plans.RewriteSortedIntersect)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

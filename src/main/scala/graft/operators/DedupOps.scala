@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, TokenWindows}
 
 /** Deduplication operators over `documents` / `embeddings` (builder
   * mandate: exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding-cosine
@@ -1366,12 +1366,8 @@ object DedupOps {
     */
   private[graft] def spanOccurrencesBuild(spark: SparkSession, dir: String): DataFrame =
     TextOps.spread(Tables.documents(spark, dir))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= SubstrW)
       .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(col("t")) - SubstrW),
-          j => md5(array_join(slice(col("t"), j + lit(1), lit(SubstrW)), " ")
-            .cast("binary")))).as("h"))
+        explode(spanWindowHashes(TextOps.tokens(col("text")))).as("h"))
 
   private def stagedSpanOccurrences(spark: SparkSession, dir: String): DataFrame =
     staged(spark, stageKey(spark, "spanocc", dir)) {
@@ -1416,12 +1412,14 @@ object DedupOps {
     */
   private def spanHashes(docs: DataFrame): DataFrame =
     TextOps.spread(docs)
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= SubstrW)
-      .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(0), size(col("t")) - SubstrW),
-          j => md5(array_join(slice(col("t"), j + lit(1), lit(SubstrW)), " ")
-            .cast("binary"))))).as("h"))
+      .select(col("doc_id"),
+        explode(array_distinct(spanWindowHashes(TextOps.tokens(col("text"))))).as("h"))
+
+  /** md5 hex of every [[SubstrW]]-token window, in one pass over the
+    * tokens; documents shorter than [[SubstrW]] (or null) have none.
+    */
+  private def spanWindowHashes(toks: Column): Column =
+    TokenWindows(toks, SubstrW, hashed = true)
 
   /** Document-frequency cap for span postings: a span shared by more
     * docs than this is boilerplate (navigation chrome, license text),
@@ -1479,19 +1477,14 @@ object DedupOps {
     * BOTH engines, so the boundary row at rank 20 is pinned identically.
     */
   def dedupTopSpans(spark: SparkSession, dir: String): DataFrame = {
-    val w = SubstrW
-    val windows = TextOps.spread(Tables.documents(spark, dir))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
-      .filter(size(col("t")) >= w)
     val hashed = stagedSpanOccurrences(spark, dir)
     val top = hashed.groupBy(col("h"))
       .agg(count(lit(1)).as("n_occ"), countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= 2)
       .orderBy(col("n_occ").desc, col("n_docs").desc, col("h"))
       .limit(20)
-    val spanTexts = windows.select(
-      explode(transform(sequence(lit(0), size(col("t")) - w),
-        j => array_join(slice(col("t"), j + lit(1), lit(w)), " "))).as("span"))
+    val spanTexts = TextOps.spread(Tables.documents(spark, dir)).select(
+      explode(TokenWindows(TextOps.tokens(col("text")), SubstrW, hashed = false)).as("span"))
       .select(md5(col("span").cast("binary")).as("h"), col("span"))
     spanTexts.join(broadcast(top), "h")
       .select(col("span"), col("n_occ"), col("n_docs"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.TokenWindows
 
 /** Text-analysis operators over the `documents` table (builder mandate:
   * large-scale training-data pipeline surface — language ID, quality
@@ -20,16 +21,16 @@ object TextOps {
   /** Whitespace tokens (documents.text is space-separated, FIXTURES.md §2). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Word 3-gram shingles, 0-based Spark array indexing. Documents shorter
-    * than 3 tokens yield an empty shingle set (mirrors DuckDB's graceful
-    * empty `range`).
+  /** Every `width`-token window of `toks`, space-joined, in one pass over
+    * the array ([[graft.functions.TokenWindows]]). Arrays shorter than
+    * `width` and a null array yield an empty array (mirrors DuckDB's
+    * graceful empty `range`).
     */
-  def shingles3(toks: Column): Column =
-    when(size(toks) >= 3,
-      transform(sequence(lit(0), size(toks) - 3),
-        j => concat_ws(" ",
-          element_at(toks, j + 1), element_at(toks, j + 2), element_at(toks, j + 3))))
-      .otherwise(array().cast("array<string>"))
+  def tokenWindows(toks: Column, width: Int): Column =
+    coalesce(TokenWindows(toks, width, hashed = false), array().cast("array<string>"))
+
+  /** Word 3-gram shingles. */
+  def shingles3(toks: Column): Column = tokenWindows(toks, 3)
 
   /** Spread rows across all cores before compute-heavy per-row work —
     * but ONLY when the input arrives with fewer splits than cores
@@ -718,11 +719,7 @@ object TextOps {
   def textBigrams(spark: SparkSession, dir: String): DataFrame = {
     val docs = spread(Tables.documents(spark, dir))
     val toks = docs.select(tokens(col("text")).as("t"))
-    val bigrams = toks.select(explode(
-      when(size(col("t")) >= 2,
-        transform(sequence(lit(0), size(col("t")) - 2),
-          j => concat_ws(" ", element_at(col("t"), j + 1), element_at(col("t"), j + 2))))
-        .otherwise(array().cast("array<string>"))).as("bigram"))
+    val bigrams = toks.select(explode(tokenWindows(col("t"), 2)).as("bigram"))
     bigrams.groupBy(col("bigram")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("bigram"))
       .limit(20)
@@ -1056,14 +1053,10 @@ object TextOps {
   def textPerplexity(spark: SparkSession, dir: String): DataFrame = {
     val docs = spread(Tables.documents(spark, dir))
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-    val bi = toks.select(col("doc_id"), explode(
-      when(size(col("t")) >= 2,
-        transform(sequence(lit(0), size(col("t")) - 2),
-          j => struct(element_at(col("t"), j + 1).as("w1"),
-            concat_ws(" ", element_at(col("t"), j + 1),
-              element_at(col("t"), j + 2)).as("bg"))))
-        .otherwise(array().cast("array<struct<w1:string,bg:string>>"))).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.bg").as("bg"))
+    // a token never holds the " " it was split on, so a bigram's first
+    // word is its text up to the first space
+    val bi = toks.select(col("doc_id"), explode(tokenWindows(col("t"), 2)).as("bg"))
+      .select(col("doc_id"), substring_index(col("bg"), " ", 1).as("w1"), col("bg"))
     val c2 = bi.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
     val c1 = docs.select(explode(tokens(col("text"))).as("w1"))
       .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
@@ -1391,10 +1384,7 @@ object TextOps {
     */
   def withGopherRules(docs: DataFrame): DataFrame = {
     val t = tokens(col("text"))
-    val g2 = when(size(t) >= 2,
-      transform(sequence(lit(0), size(t) - 2),
-        j => concat_ws(" ", element_at(t, j + 1), element_at(t, j + 2))))
-      .otherwise(array().cast("array<string>"))
+    val g2 = tokenWindows(t, 2)
     val g3 = shingles3(t)
     // r16 per-row cost rewrite (guide §4) — same outputs, cheaper
     // evaluation; every replacement is exact, not approximate:

@@ -383,6 +383,67 @@ class PlanSpec extends AnyFunSuite {
       s"condition-less joins over two unbounded fact sides:\n${bad.mkString("\n")}")
   }
 
+  test("registry-wide lambda hygiene: no lambda body re-evaluates a " +
+      "row-sized expression that ignores the lambda's variables") {
+    // A higher-order function evaluates its lambda body once per element,
+    // so a subexpression that refers to none of the variables bound in
+    // the lambda is recomputed per element for the same result. When its
+    // cost grows with the row (split the text, join or hash or sort an
+    // array, run a regex), an O(n) expression becomes O(n^2) per row:
+    // a window lambda over `split(text)` re-splits the document for
+    // every window. Walks every batch query's OPTIMIZED plan (after collapsing
+    // projections has inlined `t = split(text)` into the lambdas) plus
+    // the un-staged substrate builds that the staged queries read.
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    def rowSized(e: Expression): Boolean = e match {
+      case _: StringSplit | _: ArrayJoin | _: Md5 | _: Sha1 | _: Sha2 |
+           _: ArrayDistinct | _: SortArray | _: ArraySort | _: RLike => true
+      case other => other.getClass.getSimpleName.startsWith("RegExp")
+    }
+    def lambdaViolations(p: LogicalPlan): Seq[String] = {
+      val here = p.expressions.flatMap(_.collect { case lf: LambdaFunction => lf })
+        .flatMap { lf =>
+          // variables bound by this lambda or by a lambda nested in it:
+          // a subexpression touching none of them is the same value on
+          // every iteration of this lambda
+          val bound = lf.collect { case l: LambdaFunction => l.arguments }
+            .flatten.map(_.exprId).toSet
+          lf.function.collect {
+            case sub if rowSized(sub) && !sub.exists {
+                case v: NamedLambdaVariable => bound(v.exprId)
+                case _ => false
+              } => s"${sub.prettyName} in ${lf.function.sql.take(160)}"
+          }
+        }
+      here ++ p.children.flatMap(lambdaViolations) ++
+        p.subqueries.flatMap(lambdaViolations)
+    }
+    def plan(df: DataFrame): LogicalPlan = df.queryExecution.optimizedPlan
+    // negative control: 3-gram windows picked out of an inlined split
+    import org.apache.spark.sql.functions.{col => c, concat_ws, element_at, lit => l, sequence, size, split, transform}
+    val toks = split(c("text"), " ")
+    val lambdaShingles = graft.Tables.documents(spark, dir).select(
+      transform(sequence(l(0), size(toks) - 3), j => concat_ws(" ",
+        element_at(toks, j + 1), element_at(toks, j + 2), element_at(toks, j + 3))))
+    assert(lambdaViolations(plan(lambdaShingles)).nonEmpty,
+      "negative control: a per-window split(text) is not flagged")
+    // no exceptions: every registered query passes without one
+    val batchNames =
+      (SparkEntry.queries.keySet -- SparkEntry.streamingQueries).toSeq.sorted
+    val frames: Seq[(String, () => DataFrame)] =
+      batchNames.map(n => n -> (() => SparkEntry.queries(n)(spark, dir))) ++ Seq(
+        "build:docShingleHashes" ->
+          (() => graft.operators.DedupOps.docShingleHashes(spark, dir)),
+        "build:spanOccurrences" ->
+          (() => graft.operators.DedupOps.spanOccurrencesBuild(spark, dir)))
+    val bad = frames.flatMap { case (name, build) =>
+      lambdaViolations(plan(build())).distinct.map(v => s"$name -> $v")
+    }
+    assert(bad.isEmpty,
+      s"lambda bodies re-evaluating row-sized invariant expressions:\n${bad.mkString("\n")}")
+  }
+
   test("pair-verification broadcasts carry only the 16-byte pair ids, " +
       "never document text or source columns") {
     // r10 #4: the second lookup used to broadcast the withA half WITH its

@@ -14,7 +14,9 @@ metric it prints each side's median and quartiles, the change's wins
 (ties count for neither side) and whether the change's median stays
 within the metric's BENCHMARK.json bound. For the --claim metric it also prints whether the gain rule holds: at least 10
 pairs, wins in at least 9/10 of them, and a median gap larger than the
-distance between the parent's quartiles.
+distance between the parent's quartiles. When the runs time each query
+(batch_operators' `query_wall_s`), it also prints each query's medians
+and the change's wins.
 """
 import argparse
 import json
@@ -30,7 +32,16 @@ def run(checkout, workload, seed, seconds):
                        cwd=checkout, capture_output=True, text=True)
     if p.returncode != 0:
         sys.exit(f"{checkout}: run failed (exit {p.returncode}):\n{p.stderr[-2000:]}")
-    return json.loads(p.stdout.strip().splitlines()[-1])
+    lines = p.stdout.strip().splitlines()
+    result = json.loads(lines[-1])
+    # batch_operators' detail line times each query; keep it so a batch
+    # claim shows which query moved
+    for line in lines[:-1]:
+        if line.startswith('{"detail"'):
+            walls = json.loads(line)["detail"].get("query_wall_s")
+            if walls:
+                result["query_wall_s"] = walls
+    return result
 
 
 def quartiles(xs):
@@ -60,6 +71,16 @@ def report(pairs, spec, claim):
             holds = n >= 10 and wins >= 0.9 * n and gap > p3 - p1
             print(f"  claim {name}: gap {gap:.4g} vs parent IQR {p3 - p1:.4g}, "
                   f"{wins}/{n} wins -> rule {'holds' if holds else 'does not hold'}")
+    timed = [p for p in pairs if all("query_wall_s" in p[s] for s in ("parent", "change"))]
+    if timed:
+        print(f"{'query (wall s, lower is better)':36s} {'parent median':>14s}"
+              f" {'change median':>14s} {'wins':>6s}  ({len(timed)} pairs)")
+        for q in sorted(timed[0]["parent"]["query_wall_s"]):
+            par = [p["parent"]["query_wall_s"][q] for p in timed]
+            chg = [p["change"]["query_wall_s"][q] for p in timed]
+            wins = sum(c < x for x, c in zip(par, chg))
+            print(f"{q:36s} {statistics.median(par):14.4g} {statistics.median(chg):14.4g}"
+                  f" {wins:3d}/{len(timed):<2d}")
 
 
 def main():
