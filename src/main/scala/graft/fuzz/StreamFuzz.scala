@@ -1,6 +1,7 @@
 package graft.fuzz
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.EventOps
@@ -181,20 +182,6 @@ object StreamFuzz {
         |  FROM events$filter)""".stripMargin
   }
 
-  /** The lagged-watermark CTEs shared by both families' oracles:
-    * `b` = per-(non-empty-)wave max ms — the batch sequence; `l` = the
-    * late-filter watermark each batch actually applied, `E(k-1)` =
-    * running max through batch k-2 minus delay (NULL -> 0 for the
-    * first two batches, where the watermark is still the initial 0).
-    */
-  private def lateWmCtes(delayMs: Long): String =
-    s"""b AS (SELECT wave, MAX(ms) AS mx FROM e GROUP BY wave),
-      |l AS (SELECT wave,
-      |        COALESCE(GREATEST(MAX(mx) OVER (ORDER BY wave
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-      |          - $delayMs, 0), 0) AS lwm
-      |      FROM b)""".stripMargin
-
   /** A seed's carved fixture: the projected events with the seed's
     * `wave` column, and the projection's max ms (the sentinel waves sit
     * past it).
@@ -215,22 +202,517 @@ object StreamFuzz {
       carving(mode, seed, nWaves, lo, (hi - lo) / nWaves + 1)), hi)
   }
 
-  /** Drive a seed's carved frame plus its two sentinel waves through
-    * the wave harness under `cfg`: the drive is named
-    * `sfz_<family>_<tag><seed>`, and every cfg of one seed shares one
-    * staging. `stateParts` is the family's default state width.
+  /** The drive-side staging of a seed's frame: drive it plus its two
+    * sentinel waves through the wave harness under `cfg`. The drive is
+    * named `sfz_<family>_<tag><seed>`, every cfg of one seed shares one
+    * staging, and the staged schema is the frame's minus `wave`.
+    * `stateParts` is the family's default state width.
     */
   private def driveFamily(spark: SparkSession, dir: String, family: String,
-      seed: Long, cfg: DriveCfg, frame: DataFrame, schema: String,
-      nWaves: Int, stateParts: Int = 1)(
-      transform: DataFrame => DataFrame): DataFrame =
-    WaveHarness.driveWaves(spark, frame, schema, nWaves + 2L,
-      s"sfz_${family}_${cfg.tag}$seed",
+      seed: Long, cfg: DriveCfg, frame: DataFrame, nWaves: Int,
+      stateParts: Int = 1)(transform: DataFrame => DataFrame): DataFrame =
+    WaveHarness.driveWaves(spark, frame,
+      frame.schema.fields.filter(_.name != "wave")
+        .map(f => s"${f.name} ${f.dataType.sql}").mkString(", "),
+      nWaves + 2L, s"sfz_${family}_${cfg.tag}$seed",
       statePartitions = cfg.statePartitions.getOrElse(stateParts),
       filesPerWave = cfg.filesPerWave,
       restartAfter = cfg.killAfter(nWaves),
       stageKey = Some(WaveHarness.stageKeyFor(s"sfz_${family}_$seed", dir)))(
       transform)
+
+  /** The head every family's param draw opens with: wave count, carving,
+    * and a delay from that carving's menu.
+    */
+  private def draws(seed: Long, mul: Long = 0x9E3779B97F4A7C15L,
+      add: Long = 0x2545F4914F6CDD1DL): (Random, Int, String, Long) = {
+    val rnd = new Random(seed * mul + add)
+    val nWaves = 3 + rnd.nextInt(3)
+    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
+    (rnd, nWaves, mode, delayMenu(mode)(rnd.nextInt(3)))
+  }
+
+  private def delayMenu(mode: String): Seq[Long] =
+    if (mode == "shuffle") ShuffleDelaysMs else JitterDelaysMs
+
+  /** The independent second draw of a composite whose first draw is a
+    * primitive family's params (which consumed that RNG).
+    */
+  private def draw2(seed: Long): Random =
+    new Random(seed * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L)
+
+  /** The carving projections the families share: `keyed` rows (`key`,
+    * `ms`, optionally the null-safe `value`), `tagged` rows (`event_type`,
+    * `ms`, optionally the raw `value`) and `typed` rows (`user_id`,
+    * `event_type`, `ms`) of the listed event types.
+    */
+  private def keyed(value: Boolean)(ev: DataFrame): DataFrame =
+    ev.select(Seq(col("event_id"), col("user_id").as("key"),
+      expr("us div 1000").as("ms")) ++
+      (if (value) Seq(coalesce(col("value"), lit(0.0)).as("value")) else Nil): _*)
+
+  private def tagged(value: Boolean)(ev: DataFrame): DataFrame =
+    ev.select(Seq(col("event_id"), col("event_type"),
+      expr("us div 1000").as("ms")) ++
+      (if (value) Seq(col("value")) else Nil): _*)
+
+  private def typed(types: String*)(ev: DataFrame): DataFrame =
+    ev.filter(col("event_type").isin(types: _*))
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        expr("us div 1000").as("ms"))
+
+  /** Append the two sentinel waves to a carved `frame` (Spark; the DuckDB
+    * replays that need them add them to their batch sequence): wave
+    * `nWaves` at `hi + margin` and `nWaves + 1` at `hi + 2 * margin`, one
+    * row per event type in `types` (with none, one row whose
+    * `event_type`, if any, is `\u0000s1`/`\u0000s2`), keys -1/-2 and
+    * value 0. Their event times push the watermark past every real
+    * window, and the sink drops them.
+    */
+  private def withSentinels(spark: SparkSession, frame: DataFrame, hi: Long,
+      margin: Long, nWaves: Int, types: Seq[String]): DataFrame = {
+    val rows = for (k <- 1 to 2;
+        ty <- if (types.isEmpty) Seq(s"\u0000s$k") else types)
+      yield Row.fromSeq(frame.schema.fieldNames.toSeq.map {
+        case "key" | "user_id" => -k.toLong
+        case "event_type" => ty
+        case "ms" => hi + k * margin
+        case "value" => 0.0
+        case "wave" => nWaves + k - 1L
+      })
+    frame.unionByName(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), frame.schema))
+  }
+
+  /** One late-filter watermark node: the event type it watermarks (""
+    * for every row) and its delay.
+    */
+  private type Node = (String, Long)
+
+  /** The lagged late-filter watermark, DuckDB half (the Spark half is
+    * [[lagTwin]]): `bw` holds each wave's max `ms` per node, and `l` the
+    * watermark each batch's late filter applied — `L(k) = max(0, min over
+    * nodes of (running max through batch k-2 - delay))`, the min taken
+    * AFTER each node subtracts its own delay (the
+    * `multipleWatermarkPolicy=min` value; `max(0, min(a-dv, b-dc)) =
+    * min(max(0, a-dv), max(0, b-dc))`, so clamp placement is
+    * immaterial). A node with no rows yet pins L to the initial 0; with
+    * one node this is `E(k-1)` verbatim.
+    */
+  private def lagCtes(nodes: Seq[Node]): String = {
+    val maxes = nodes.zipWithIndex.map { case ((ty, _), i) =>
+      (if (ty.isEmpty) "MAX(ms)"
+       else s"MAX(CASE WHEN event_type = '$ty' THEN ms END)") + s" AS m$i" }
+    val lagged = nodes.indices.map(i => s"MAX(m$i) OVER lag2")
+    val bounds = nodes.zip(lagged).map { case ((_, d), m) => s"$m - $d" }
+    s"""bw AS (SELECT wave, ${maxes.mkString(", ")} FROM e GROUP BY wave),
+      |l AS (SELECT wave,
+      |        CASE WHEN ${lagged.map(_ + " IS NULL").mkString(" OR ")} THEN 0
+      |             ELSE GREATEST(${bounds.mkString("LEAST(", ", ", ")")}, 0)
+      |        END AS lwm
+      |      FROM bw
+      |      WINDOW lag2 AS (ORDER BY wave
+      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING))""".stripMargin
+  }
+
+  /** The lagged late-filter watermark, Spark half (see [[lagCtes]]):
+    * `e` joined to its wave's `lwm`. The watermark table is |waves| rows,
+    * so its single-partition ordering window is trivial and the join
+    * back is a broadcast.
+    */
+  private def lagTwin(e: DataFrame, nodes: Seq[Node]): DataFrame = {
+    val w = Window.orderBy(col("wave"))
+      .rowsBetween(Window.unboundedPreceding, -2)
+    val maxes = nodes.zipWithIndex.map { case ((ty, _), i) =>
+      max(if (ty.isEmpty) col("ms")
+          else when(col("event_type") === ty, col("ms"))).as(s"m$i") }
+    val lagged = nodes.indices.map(i => max(col(s"m$i")).over(w))
+    val bounds = nodes.zip(lagged).map { case ((_, d), m) => m - d }
+    val l = e.groupBy(col("wave")).agg(maxes.head, maxes.tail: _*)
+      .select(col("wave"), when(lagged.map(_.isNull).reduce(_ || _), lit(0L))
+        .otherwise(greatest(
+          if (bounds.size == 1) bounds.head else least(bounds: _*), lit(0L)))
+        .as("lwm"))
+    e.join(broadcast(l), Seq("wave"))
+  }
+
+  /** A stage input: the seed's carving of the events fixture, written
+    * once per language and shared by every stage that reads it.
+    *
+    *  - `project` (Spark) and `cols`/`where` (DuckDB) pick the rows and
+    *    columns; the carving always reads the raw `ms`;
+    *  - `nodes` are the watermark nodes the lagged replay tracks;
+    *  - `t` (DuckDB, Spark) replaces `ms` after carving when the
+    *    watermarked column is a floored time — per-wave maxes are then
+    *    over the floored times, exact because floor is monotone.
+    *
+    * The drive gets the carving plus its sentinel waves (one per node
+    * type); DuckDB gets `x`, and the twin a frame, holding the carved
+    * rows (`key` named `user_id`), the replaced `ms` and each row's
+    * `lwm`.
+    */
+  private case class Input(seed: Long, nWaves: Int, mode: String,
+      project: DataFrame => DataFrame, cols: String, nodes: Seq[Node],
+      where: String = "", t: (String, Column) = ("ms", col("ms"))) {
+    def carved(spark: SparkSession, dir: String): Carved =
+      carve(spark, dir, seed, mode, nWaves)(project)
+
+    def ctes: String =
+      s"""WITH ${rawCtes(mode, nWaves, cols, where)},
+        |e AS (SELECT $cols, ${t._1} AS ms,
+        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
+        |${lagCtes(nodes)},
+        |x AS (SELECT * FROM e JOIN l USING (wave))""".stripMargin
+
+    def lagged(spark: SparkSession, dir: String): DataFrame =
+      lagTwin(carved(spark, dir).rows.drop("event_id")
+        .withColumnRenamed("key", "user_id").withColumn("ms", t._2), nodes)
+
+    /** The sink table of the drive, and the carving's max ms. */
+    def drive(spark: SparkSession, dir: String, family: String,
+        cfg: DriveCfg, margin: Long, stateParts: Int = 1)(
+        transform: DataFrame => DataFrame): (DataFrame, Long) = {
+      val Carved(ev, hi) = carved(spark, dir)
+      val frame = withSentinels(spark, ev.drop("event_id"), hi, margin,
+        nWaves, nodes.map(_._1).filter(_.nonEmpty))
+      (driveFamily(spark, dir, family, seed, cfg, frame, nWaves,
+        stateParts)(transform), hi)
+    }
+  }
+
+  /** A primitive stage: one operator written three times, each by hand
+    * and separately — never one fragment derived from another, because
+    * the twin and the oracle are the references the drive is checked
+    * against:
+    *
+    *  - `stream`: the streaming operator on its upstream;
+    *  - `sql`: a DuckDB SELECT over the upstream relation;
+    *  - `twin`: the batch twin's DataFrame operator on its upstream.
+    *
+    * A source stage's upstream is the [[Input]] (the stream source, `x`,
+    * the lagged twin frame) and it applies its own late-drop rule
+    * against `lwm`; a chained stage reads the previous stage's output and
+    * drops nothing — each composite's purity argument is what licenses
+    * that. Composites chain stages with `andThen` (and the binary
+    * [[intervalJoin]]/[[union]]).
+    */
+  private case class Stage(stream: DataFrame => DataFrame,
+      sql: String => String, twin: DataFrame => DataFrame) {
+    def andThen(next: Stage): Stage = Stage(stream.andThen(next.stream),
+      up => next.sql(s"(${sql(up)})"), twin.andThen(next.twin))
+  }
+
+  /** The row-based late rule (inclusive drop `ms <= L`) and the
+    * window-based one (a row into its tumbling window of width `w` is
+    * dropped iff `window_end <= L`), as (DuckDB, Spark) predicates.
+    */
+  private def rowKeep: (String, Column) = ("ms > lwm", col("ms") > col("lwm"))
+
+  private def windowKeep(w: Long): (String, Column) =
+    (s"(ms // $w) * $w + $w > lwm", expr(s"(ms div $w) * $w") + w > col("lwm"))
+
+  /** Source stage over one watermark node's rows: stream `cols` plus the
+    * event time `ts` of `time`, watermarked; DuckDB/twin keep the rows
+    * passing `keep`.
+    */
+  private def source(cols: Seq[String], ts: String, delay: Long,
+      keep: (String, Column), time: Column = col("ms")): Stage = Stage(
+    _.select(cols.map(col) :+ timestamp_millis(time).as(ts): _*)
+      .withWatermark(ts, s"$delay milliseconds"),
+    up => s"SELECT * FROM $up WHERE ${keep._1}",
+    _.filter(keep._2))
+
+  /** Source stage over one event type `ty` of a typed input: stream the
+    * user as `user`, optionally the type as `tag`, and the event time as
+    * `ts`, watermarked; DuckDB/twin keep the rows passing `keep` as
+    * `user_id` (+ `tag`) and `ms` renamed `as`.
+    */
+  private def side(ty: String, user: String, ts: String, delay: Long,
+      as: String, keep: (String, Column) = rowKeep,
+      tag: Option[String] = None): Stage = Stage(
+    _.filter(col("event_type") === ty)
+      .select(Seq(col("user_id").as(user)) ++ tag.map(col("event_type").as(_)) :+
+        timestamp_millis(col("ms")).as(ts): _*)
+      .withWatermark(ts, s"$delay milliseconds"),
+    up => s"SELECT user_id, ${tag.fold("")(t => s"event_type AS $t, ")}" +
+      s"ms AS $as FROM $up WHERE event_type = '$ty' AND ${keep._1}",
+    _.filter(col("event_type") === ty && keep._2)
+      .select(Seq(col("user_id")) ++ tag.map(col("event_type").as(_)) :+
+        col("ms").as(as): _*))
+
+  private def views(delay: Long): Stage =
+    side("view", "vuser", "view_ts", delay, "view_ms")
+  private def clicks(delay: Long): Stage =
+    side("click", "cuser", "click_ts", delay, "click_ms")
+  /** (stream user, stream event time, DuckDB/twin time) of a join side. */
+  private val V = ("vuser", "view_ts", "view_ms")
+  private val C = ("cuser", "click_ts", "click_ms")
+
+  /** Stream-stream interval join of two stages: `r`'s time within
+    * `[l time, l time + w]` on equal users. DuckDB/twin emit `user_id`,
+    * the left stage's columns, then the right stage's time (none for
+    * `left_semi`).
+    */
+  private def intervalJoin(left: Stage, right: Stage, w: Long,
+      joinType: String, l: (String, String, String),
+      r: (String, String, String)): Stage = {
+    val on = s"v.user_id = c.user_id AND c.${r._3} >= v.${l._3}" +
+      s" AND c.${r._3} <= v.${l._3} + $w"
+    Stage(
+      src => left.stream(src).join(right.stream(src),
+        expr(s"${l._1} = ${r._1} AND ${r._2} >= ${l._2} AND " +
+          s"${r._2} <= ${l._2} + interval $w millisecond"), joinType),
+      up => joinType match {
+        case "left_semi" =>
+          s"SELECT v.* FROM (${left.sql(up)}) v WHERE EXISTS (SELECT 1 " +
+            s"FROM (${right.sql(up)}) c WHERE $on)"
+        case t =>
+          val user = if (t == "full_outer") "COALESCE(v.user_id, c.user_id)"
+            else "v.user_id"
+          val kw = Map("inner" -> "JOIN", "left_outer" -> "LEFT JOIN",
+            "full_outer" -> "FULL JOIN")(t)
+          s"SELECT $user AS user_id, v.* EXCLUDE (user_id), c.${r._3}\n" +
+            s"FROM (${left.sql(up)}) v\n$kw (${right.sql(up)}) c ON $on"
+      },
+      kept => {
+        val v = left.twin(kept)
+        val c = right.twin(kept).withColumnRenamed("user_id", "cuser")
+        val j = v.join(c, col("user_id") === col("cuser") &&
+          col(r._3) >= col(l._3) && col(r._3) <= col(l._3) + w, joinType)
+        if (joinType == "left_semi") j
+        else j.select((if (joinType == "full_outer")
+            coalesce(col("user_id"), col("cuser")) else col("user_id"))
+          .as("user_id") +: (v.columns.tail :+ r._3).map(col): _*)
+      })
+  }
+
+  /** Union of two sources (by name) feeding one downstream operator. */
+  private def union(a: Stage, b: Stage): Stage = Stage(
+    src => a.stream(src).unionByName(b.stream(src)),
+    up => s"${a.sql(up)}\nUNION ALL ${b.sql(up)}",
+    kept => a.twin(kept).unionByName(b.twin(kept)))
+
+  /** Aggregates written per language: stream Columns, DuckDB select
+    * list, twin Columns.
+    */
+  private case class Aggs(stream: Seq[Column], sql: String, twin: Seq[Column])
+
+  /** Tumbling window aggregation of width `w`. Stream: group
+    * `window(ts, w)` (named `win`) and the stream `keys`. DuckDB/twin:
+    * group the window start of time column `t` (named `ws`) and the keys
+    * (DuckDB/twin names). No late drop: the source stage applied it.
+    */
+  private def tumble(w: Long, ts: Column, t: String,
+      keys: Seq[(String, String)], aggs: Aggs,
+      ws: String = "window_start_ms", win: String = "window"): Stage = {
+    val window = functions.window(ts, s"$w milliseconds")
+    val names = keys.map(_._2)
+    Stage(
+      _.groupBy((if (win == "window") window else window.as(win)) +:
+          keys.map(k => col(k._1)): _*)
+        .agg(aggs.stream.head, aggs.stream.tail: _*),
+      up => s"SELECT ${names.map(_ + ", ").mkString}($t // $w) * $w AS $ws," +
+        s" ${aggs.sql}\nFROM $up GROUP BY ${(names :+ ws).mkString(", ")}",
+      _.groupBy(names.map(col) :+ expr(s"($t div $w) * $w").as(ws): _*)
+        .agg(aggs.twin.head, aggs.twin.tail: _*))
+  }
+
+  /** Streaming dedup on (user, bucket-floored time) at the source, rows
+    * of type `ty` only if given: the stream floors `ms` itself and
+    * watermarks the floor; DuckDB/twin read the input's floored `ms`
+    * (its `t`), keep `ms > lwm` (row-based, inclusive drop) and emit the
+    * DISTINCT (user_id, `as`) set.
+    */
+  private def dedupBuckets(bucket: Long, delay: Long, from: String,
+      user: String, ts: String, as: String,
+      ty: Option[String] = None): Stage = Stage(
+    src => ty.fold(src)(v => src.filter(col("event_type") === v))
+      .select(col(from).as(user),
+        timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L")).as(ts))
+      .withWatermark(ts, s"$delay milliseconds").dropDuplicates(user, ts),
+    up => s"SELECT DISTINCT user_id, ms AS $as FROM $up WHERE " +
+      s"${ty.fold("")(v => s"event_type = '$v' AND ")}ms > lwm",
+    kept => ty.fold(kept)(v => kept.filter(col("event_type") === v))
+      .filter(col("ms") > col("lwm"))
+      .select(col("user_id"), col("ms").as(as)).distinct())
+
+  /** transformWithState admission ([[graft.streaming.TwsAdmitJob]]) of
+    * the first row per (user, `bucket`), rows of type `ty` only if given;
+    * the stream output is renamed `rename` if given. DuckDB/twin state
+    * the rule the algebra has no other stage for: admission is the min
+    * event time within the earliest kept-touching batch — ROW_NUMBER()
+    * over (user, bucket) ORDER BY (wave, ms) = 1 over the kept rows —
+    * emitted as (user_id, `as`).
+    */
+  private def admit(bucket: Long, delay: Long, ty: Option[String],
+      as: String, rename: Option[(String, String)] = None): Stage = Stage(
+    src => {
+      import src.sparkSession.implicits._
+      val adm = graft.streaming.TwsAdmitJob.admitFirst(
+        ty.fold(src)(v => src.filter(col("event_type") === v))
+          .select(col("user_id").as("key"),
+            timestamp_millis(col("ms")).as("eventTs"), lit(0.0).as("value"))
+          .as[graft.streaming.KeyedEvent],
+        bucket, s"$delay milliseconds").toDF()
+      rename.fold(adm)(n =>
+        adm.select(col("key").as(n._1), col("viewTs").as(n._2)))
+    },
+    up => s"SELECT user_id, ms AS $as FROM (SELECT user_id, ms,\n" +
+      s"  ROW_NUMBER() OVER (PARTITION BY user_id, ms // $bucket\n" +
+      s"    ORDER BY wave, ms) AS rn\n  FROM $up WHERE " +
+      s"${ty.fold("")(v => s"event_type = '$v' AND ")}ms > lwm) WHERE rn = 1",
+    kept => ty.fold(kept)(v => kept.filter(col("event_type") === v))
+      .filter(col("ms") > col("lwm"))
+      .withColumn("rn", row_number().over(Window
+        .partitionBy(col("user_id"), expr(s"ms div ${bucket}L"))
+        .orderBy(col("wave"), col("ms"))))
+      .filter(col("rn") === 1).select(col("user_id"), col("ms").as(as)))
+
+  /** The family's output columns, in order: the drive selects each name
+    * from its stream Column; DuckDB and the twin already carry the names
+    * and only fix the order.
+    */
+  private def output(cols: (String, Column)*): Stage = Stage(
+    _.select(cols.map { case (n, c) => c.as(n) }: _*),
+    up => s"SELECT ${cols.map(_._1).mkString(", ")} FROM $up",
+    _.select(cols.map(c => col(c._1)): _*))
+
+  private def same(names: String*): Seq[(String, Column)] =
+    names.map(n => n -> col(n))
+
+  private def start(win: String = "window"): Column =
+    unix_millis(col(s"$win.start"))
+
+  /** A family built as a chain of stages over one input: the drive runs
+    * the chain's stream (sentinel rows dropped on the sink table by
+    * `sink`, given the carving's max ms; an in-query filter would be
+    * predicate-pushed below the EventTimeWatermark nodes and freeze the
+    * watermark; `post` projects the sink table), the oracle closes its DuckDB fragment over the input
+    * CTEs, and the twin runs its twin fragment over the lagged input —
+    * all three ordered by `order`.
+    */
+  private case class Chain(in: Input, family: String, margin: Long,
+      stage: Stage, order: Seq[String],
+      sink: Long => Column = _ => col("user_id") >= 0L,
+      rocksDb: Boolean = false, stateParts: Int = 1,
+      post: DataFrame => DataFrame = identity) {
+    def gen(cfg: DriveCfg): SGen = SGen(in.seed, (spark, dir) => {
+      def run() = in.drive(spark, dir, family, cfg, margin, stateParts)(
+        stage.stream)
+      val (out, hi) =
+        if (rocksDb) WaveHarness.withRocksDb(spark)(run()) else run()
+      post(out.filter(sink(hi))).orderBy(order.map(col): _*)
+    }, s"${in.ctes}\n${stage.sql("x")}\nORDER BY ${order.mkString(", ")}")
+
+    def twin: (SparkSession, String) => DataFrame = (spark, dir) =>
+      stage.twin(in.lagged(spark, dir)).orderBy(order.map(col): _*)
+  }
+
+  /** The typed view/click input of the join-shaped families. The jitter
+    * bounds are over the view/click SUBSET — the Scala side computes
+    * lo/hi after the event-type filter, and one boundary row on the
+    * full-table bounds flips wave (caught by seed 13501's first DuckDB
+    * run).
+    */
+  private def viewClickIn(seed: Long, nWaves: Int, mode: String,
+      delay: Long): Input =
+    Input(seed, nWaves, mode, typed("view", "click"), "user_id, event_type",
+      Seq("view" -> delay, "click" -> delay),
+      "event_type IN ('view', 'click')")
+
+  /** The staged session replay (families C, T, V), DuckDB half — the
+    * Spark half is [[sessionReplayTwin]]. `b` is the batch sequence:
+    * each non-empty wave's max `ms` over every arriving row (bw of a
+    * one-node input — watermarks are driven by late rows too) plus the
+    * two sentinel waves `margin` past the max. Stage k re-sessionizes
+    * the still-open rows of `rows` (user_id, ms, wave and `carry`) and
+    * marks components whose end <= E(k) as emitted at stage k (`est`,
+    * `esid`), guarded on the wave actually having rows (no batch => no
+    * eviction); the (user_id, open) window partition keeps closed and
+    * unarrived rows inert without a filtered window. The last stage is
+    * `s<nWaves + 1>`; the unroll is generated, never hand-maintained.
+    */
+  private def sessionReplaySql(rows: String, carry: String, delay: Long,
+      gap: Long, nWaves: Int, margin: Long): String = {
+    def stage(k: Long, prev: String): String = {
+      val ek = s"(SELECT COALESCE(GREATEST(MAX(mx) - $delay, 0), 0)" +
+        s" FROM b WHERE wave < $k)"
+      val hasBatch = s"(SELECT COUNT(*) FROM b WHERE wave = $k) > 0"
+      s"""s$k AS (
+        |  SELECT user_id, ms, ${carry}wave,
+        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
+        |              THEN $k ELSE est END AS est,
+        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
+        |              THEN sid ELSE esid END AS esid
+        |  FROM (
+        |    SELECT *, MAX(ms) OVER (PARTITION BY user_id, open, sid)
+        |              + $gap AS comp_end
+        |    FROM (
+        |      SELECT *, SUM(ns) OVER (PARTITION BY user_id, open ORDER BY ms
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |      FROM (
+        |        SELECT *, CASE WHEN NOT open THEN NULL
+        |          WHEN lag(ms) OVER (PARTITION BY user_id, open ORDER BY ms)
+        |            IS NULL THEN 1
+        |          WHEN ms - lag(ms) OVER (PARTITION BY user_id, open
+        |            ORDER BY ms) > $gap THEN 1 ELSE 0 END AS ns
+        |        FROM (SELECT user_id, ms, ${carry}wave, est, esid,
+        |                (est IS NULL AND wave <= $k) AS open
+        |              FROM $prev)))))""".stripMargin
+    }
+    s"""hb AS (SELECT MAX(ms) AS hi FROM e),
+      |b AS (SELECT wave, m0 AS mx FROM bw
+      |      UNION ALL SELECT $nWaves, hi + $margin FROM hb
+      |      UNION ALL SELECT ${nWaves + 1}, hi + 2 * $margin FROM hb),
+      |s_init AS (
+      |  SELECT user_id, ms, ${carry}wave,
+      |         CAST(NULL AS BIGINT) AS est, CAST(NULL AS BIGINT) AS esid
+      |  FROM $rows),
+      |""".stripMargin + (0L until nWaves + 2L)
+      .map(k => stage(k, if (k == 0) "s_init" else s"s${k - 1}"))
+      .mkString(",\n")
+  }
+
+  /** The staged session replay, Spark half (see [[sessionReplaySql]]),
+    * looped over the wave sequence: `rows` (user_id, ms, wave, ...) gain
+    * their emission stage `est` and session id `esid`. The per-batch max
+    * event time of `arrived` (|waves| rows, every arriving row) is
+    * collected driver-side to produce the per-stage eviction scalars —
+    * harness bookkeeping, not a data collect.
+    */
+  private def sessionReplayTwin(rows: DataFrame, arrived: DataFrame,
+      delay: Long, gap: Long, nWaves: Int, margin: Long): DataFrame = {
+    val realMx: Map[Long, Long] = arrived.groupBy(col("wave"))
+      .agg(max(col("ms")).as("mx")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val hi = realMx.values.max
+    val mxByWave = realMx + (nWaves.toLong -> (hi + margin)) +
+      ((nWaves + 1).toLong -> (hi + 2 * margin))
+    def ewm(k: Long): Long = {
+      val prior = mxByWave.filter(_._1 < k).values
+      if (prior.isEmpty) 0L else math.max(0L, prior.max - delay)
+    }
+    val wOpen = Window.partitionBy(col("user_id"), col("open")).orderBy(col("ms"))
+    val wCum = wOpen.rowsBetween(Window.unboundedPreceding, 0)
+    val wComp = Window.partitionBy(col("user_id"), col("open"), col("sid"))
+    (0L until (nWaves + 2L)).foldLeft(rows
+        .withColumn("est", lit(null).cast("long"))
+        .withColumn("esid", lit(null).cast("long"))) { (df, k) =>
+      df.withColumn("open", col("est").isNull && col("wave") <= k)
+        .withColumn("ns", when(!col("open"), lit(null))
+          .when(lag(col("ms"), 1).over(wOpen).isNull, 1)
+          .when(col("ms") - lag(col("ms"), 1).over(wOpen) > gap, 1)
+          .otherwise(0))
+        .withColumn("sid", sum(col("ns")).over(wCum))
+        .withColumn("comp_end", max(col("ms")).over(wComp) + gap)
+        .withColumn("emit", col("open") && lit(mxByWave.contains(k)) &&
+          col("comp_end") <= ewm(k))
+        .withColumn("est", when(col("emit"), k).otherwise(col("est")))
+        .withColumn("esid", when(col("emit"), col("sid"))
+          .otherwise(col("esid")))
+        .drop("open", "ns", "sid", "comp_end", "emit")
+    }
+  }
 
   /** Family A — streaming sliding-window aggregation under random
     * arrival. Geometry: width = m * slide (m in 1..2), so each kept row
@@ -247,70 +729,47 @@ object StreamFuzz {
   }
 
   private[graft] def aggP(seed: Long): AggP = {
-    val rnd = new Random(seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) = draws(seed)
     AggP(nWaves, mode, delay,
       Seq(300000L, 900000L, 3600000L)(rnd.nextInt(3)), 1 + rnd.nextInt(2))
   }
 
-  private def genAgg(seed: Long, cfg: DriveCfg): SGen = {
+  // a primitive stage of its own: the sliding geometry drops (row,
+  // window) PAIRS, not rows — the oracle unnests the m covering starts
+  private def aggChain(seed: Long): Chain = {
     val p = aggP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val slide = p.slide; val m = p.m; val width = p.width
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("event_type"),
-          expr("us div 1000").as("ms"), col("value")))
-      val margin = delay + 3 * width + 10000000L
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          ("\u0000s1", hi + margin, 0.0, nWaves.toLong),
-          ("\u0000s2", hi + 2 * margin, 0.0, nWaves + 1L))
-          .toDF("event_type", "ms", "value", "wave"))
-      driveFamily(spark, dir, "agg", seed, cfg, frame,
-        "event_type STRING, ms LONG, value DOUBLE", nWaves) { src =>
-        src.select(col("event_type"), timestamp_millis(col("ms")).as("t"),
-            col("value"))
-          .withWatermark("t", s"$delay milliseconds")
-          .groupBy(window(col("t"), s"$width milliseconds",
-            s"$slide milliseconds"), col("event_type"))
+    val starts = (0 until p.m).map(k => s"(ms // ${p.slide}) * ${p.slide} - ${k.toLong * p.slide}")
+    Chain(Input(seed, p.nWaves, p.mode, tagged(value = true), "event_type, value",
+        Seq("" -> p.delay)),
+      "agg", p.delay + 3 * p.width + 10000000L,
+      Stage(
+        _.select(col("event_type"), timestamp_millis(col("ms")).as("t"), col("value"))
+          .withWatermark("t", s"${p.delay} milliseconds")
+          .groupBy(window(col("t"), s"${p.width} milliseconds",
+            s"${p.slide} milliseconds"), col("event_type"))
           .agg(count(lit(1)).as("n"),
-            round(sum(col("value")) * (lit(1.0) + lit(1e-12)), 2)
-              .as("sum_value"))
-          .select(unix_millis(col("window.start")).as("window_start_ms"),
-            col("event_type"), col("n"), col("sum_value"))
-      }
-        .filter(!col("event_type").startsWith("\u0000"))
-        .orderBy(col("window_start_ms"), col("event_type"))
-    }
-
-    // identical carving + lagged watermark replayed in DuckDB; jitter
-    // mode carries the fixture bounds (lo, bucket width w) through the
-    // raw CTE so the carving reads exactly like the Scala twin
-    val starts = (0 until m)
-      .map(k => s"(ms // $slide) * $slide - ${k.toLong * slide}")
-      .mkString("[", ", ", "]")
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "event_type, value")},
-        |e AS (SELECT event_type, ms, value, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |${lateWmCtes(delay)},
-        |x AS (
-        |  SELECT event_type, unnest($starts) AS ws, value, wave FROM e),
-        |p AS (
-        |  SELECT x.event_type, x.ws, x.value, l.lwm
-        |  FROM x JOIN l USING (wave))
-        |SELECT ws AS window_start_ms, event_type, COUNT(*) AS n,
-        |       round(SUM(value) * (1.0 + 1e-12), 2) AS sum_value
-        |FROM p WHERE ws + $width > lwm
-        |GROUP BY ws, event_type
-        |ORDER BY window_start_ms, event_type""".stripMargin
-    SGen(seed, build, sql)
+            round(sum(col("value")) * (lit(1.0) + lit(1e-12)), 2).as("sum_value"))
+          .select(start().as("window_start_ms"), col("event_type"), col("n"),
+            col("sum_value")),
+        up => s"""SELECT ws AS window_start_ms, event_type, COUNT(*) AS n,
+          |       round(SUM(value) * (1.0 + 1e-12), 2) AS sum_value
+          |FROM (SELECT event_type, unnest(${starts.mkString("[", ", ", "]")}) AS ws,
+          |        value, lwm FROM $up)
+          |WHERE ws + ${p.width} > lwm
+          |GROUP BY ws, event_type""".stripMargin,
+        _.withColumn("ws", explode(array((0 until p.m).map(k =>
+            expr(s"(ms div ${p.slide}) * ${p.slide} - ${k * p.slide}")): _*)))
+          .filter(col("ws") + p.width > col("lwm"))
+          .groupBy(col("ws"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            round(sum(col("value")) * (lit(1.0) + lit(1e-12)), 2).as("sum_value"))
+          .select(col("ws").as("window_start_ms"), col("event_type"), col("n"),
+            col("sum_value"))),
+      Seq("window_start_ms", "event_type"),
+      sink = _ => !col("event_type").startsWith("\u0000"))
   }
+
+  private def genAgg(seed: Long, cfg: DriveCfg): SGen = aggChain(seed).gen(cfg)
 
   /** Family B — transformWithState admission quotas (MapState by time
     * bucket + event-time timers) under random arrival. The oracle keeps
@@ -327,73 +786,52 @@ object StreamFuzz {
       bucket: Long, cap: Long)
 
   private[graft] def quotaP(seed: Long): QuotaP = {
-    val rnd = new Random(seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) = draws(seed)
     QuotaP(nWaves, mode, delay,
       Seq(3600000L, 6L * 3600000L, 24L * 3600000L)(rnd.nextInt(3)),
       Seq(1L, 2L, 5L)(rnd.nextInt(3)))
   }
 
-  private def genQuota(seed: Long, cfg: DriveCfg): SGen = {
+  // hand-written: the per-bucket admission cap over MapState and
+  // event-time timers is no stage of the algebra (its oracle re-counts
+  // buckets of the row-kept rows)
+  private def quotaChain(seed: Long): Chain = {
     val p = quotaP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val bucket = p.bucket; val cap = p.cap
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"),
-          coalesce(col("value"), lit(0.0)).as("value")))
-      val margin = delay + 3 * bucket + 10000000L
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, hi + margin, 0.0, nWaves.toLong),
-          (-2L, hi + 2 * margin, 0.0, nWaves + 1L))
-          .toDF("key", "ms", "value", "wave"))
-      WaveHarness.withRocksDb(spark) {
-        driveFamily(spark, dir, "quota", seed, cfg, frame,
-          "key LONG, ms LONG, value DOUBLE", nWaves, stateParts = 4) { src =>
+    Chain(Input(seed, p.nWaves, p.mode, keyed(value = true), "user_id",
+        Seq("" -> p.delay)),
+      "quota", p.delay + 3 * p.bucket + 10000000L,
+      Stage(
+        src => {
+          import src.sparkSession.implicits._
           graft.streaming.TwsQuotaJob.quota(
             src.select(col("key"), timestamp_millis(col("ms")).as("eventTs"),
               col("value")).as[graft.streaming.KeyedEvent],
-            bucket, cap, s"$delay milliseconds").toDF()
-        }
-      }
-        .filter(col("key") >= 0L)
-        .select(col("key").as("user_id"), col("hour_ms"),
-          col("n_events"), col("n_admitted"), col("n_throttled"))
-        .orderBy(col("user_id"), col("hour_ms"))
-    }
-
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
-        |e AS (SELECT user_id, ms, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |${lateWmCtes(delay)},
-        |kept AS (
-        |  SELECT e.user_id, e.ms FROM e JOIN l USING (wave)
-        |  WHERE e.ms > l.lwm)
-        |SELECT user_id, (ms // $bucket) * $bucket AS hour_ms,
-        |       COUNT(*) AS n_events,
-        |       LEAST(COUNT(*), $cap) AS n_admitted,
-        |       COUNT(*) - LEAST(COUNT(*), $cap) AS n_throttled
-        |FROM kept GROUP BY user_id, hour_ms
-        |ORDER BY user_id, hour_ms""".stripMargin
-    SGen(seed, build, sql)
+            p.bucket, p.cap, s"${p.delay} milliseconds").toDF()
+        },
+        up => s"""SELECT user_id, (ms // ${p.bucket}) * ${p.bucket} AS hour_ms,
+          |       COUNT(*) AS n_events,
+          |       LEAST(COUNT(*), ${p.cap}) AS n_admitted,
+          |       COUNT(*) - LEAST(COUNT(*), ${p.cap}) AS n_throttled
+          |FROM $up WHERE ms > lwm GROUP BY user_id, hour_ms""".stripMargin,
+        _.filter(col("ms") > col("lwm"))
+          .groupBy(col("user_id"),
+            (expr(s"ms div ${p.bucket}") * p.bucket).as("hour_ms"))
+          .agg(count(lit(1)).as("n_events"),
+            least(count(lit(1)), lit(p.cap)).as("n_admitted"),
+            (count(lit(1)) - least(count(lit(1)), lit(p.cap))).as("n_throttled"))),
+      Seq("user_id", "hour_ms"), sink = _ => col("key") >= 0L,
+      rocksDb = true, stateParts = 4,
+      post = _.select(col("key").as("user_id"), col("hour_ms"),
+        col("n_events"), col("n_admitted"), col("n_throttled")))
   }
+
+  private def genQuota(seed: Long, cfg: DriveCfg): SGen = quotaChain(seed).gen(cfg)
 
   private[graft] case class SessionP(nWaves: Int, mode: String,
       delay: Long, gap: Long)
 
   private[graft] def sessionP(seed: Long): SessionP = {
-    val rnd = new Random(seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) = draws(seed)
     SessionP(nWaves, mode, delay,
       Seq(3600000L, 4L * 3600000L, 12L * 3600000L)(rnd.nextInt(3)))
   }
@@ -420,29 +858,23 @@ object StreamFuzz {
     * passes through. Stage count = nWaves + 2 <= 8; the unroll is
     * generated, never hand-maintained.
     */
+  // hand-written: the emitted sessions are not a function of the kept
+  // rows, so the oracle is the staged per-batch replay, not a stage chain
+  private def sessionIn(seed: Long, nWaves: Int, mode: String, delay: Long,
+      value: Boolean): Input =
+    Input(seed, nWaves, mode, keyed(value),
+      if (value) "user_id, value" else "user_id", Seq("" -> delay))
+
   private def genSession(seed: Long, cfg: DriveCfg): SGen = {
     val p = sessionP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val gap = p.gap
-    val margin = delay + 3 * gap + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"),
-          coalesce(col("value"), lit(0.0)).as("value")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, hi + margin, 0.0, nWaves.toLong),
-          (-2L, hi + 2 * margin, 0.0, nWaves + 1L))
-          .toDF("key", "ms", "value", "wave"))
-      driveFamily(spark, dir, "sess", seed, cfg, frame,
-        "key LONG, ms LONG, value DOUBLE", nWaves) { src =>
+    val margin = p.delay + 3 * p.gap + 10000000L
+    val in = sessionIn(seed, p.nWaves, p.mode, p.delay, value = true)
+    val build = (spark: SparkSession, dir: String) =>
+      in.drive(spark, dir, "sess", cfg, margin) { src =>
         src.select(col("key"), timestamp_millis(col("ms")).as("t"),
             col("value"))
-          .withWatermark("t", s"$delay milliseconds")
-          .groupBy(session_window(col("t"), s"$gap milliseconds"),
+          .withWatermark("t", s"${p.delay} milliseconds")
+          .groupBy(session_window(col("t"), s"${p.gap} milliseconds"),
             col("key"))
           .agg(count(lit(1)).as("n_events"),
             round(sum(col("value")) * (lit(1.0) + lit(1e-12)), 2)
@@ -451,72 +883,17 @@ object StreamFuzz {
             unix_millis(col("session_window.start")).as("start_ms"),
             unix_millis(col("session_window.end")).as("end_ms"),
             col("n_events"), col("sum_value"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("start_ms"))
-    }
+      }._1.filter(col("user_id") >= 0L).orderBy(col("user_id"), col("start_ms"))
 
-    // one generated replay stage per wave: stage k re-sessionizes the
-    // open rows and emits components whose end <= E(k) (the eviction
-    // watermark of batch k = running max event ms over batches < k,
-    // minus delay), guarded on the wave actually having rows (no batch
-    // => no eviction). The (user_id, open) window partition keeps
-    // closed/unarrived rows inert without a filtered window.
-    def stage(k: Long, prev: String): String = {
-      val ek = s"(SELECT COALESCE(GREATEST(MAX(mx) - $delay, 0), 0)" +
-        s" FROM b WHERE wave < $k)"
-      val hasBatch = s"(SELECT COUNT(*) FROM b WHERE wave = $k) > 0"
-      s"""s$k AS (
-        |  SELECT user_id, ms, value, wave,
-        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
-        |              THEN $k ELSE est END AS est,
-        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
-        |              THEN sid ELSE esid END AS esid
-        |  FROM (
-        |    SELECT *, MAX(ms) OVER (PARTITION BY user_id, open, sid)
-        |              + $gap AS comp_end
-        |    FROM (
-        |      SELECT *, SUM(ns) OVER (PARTITION BY user_id, open ORDER BY ms
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |      FROM (
-        |        SELECT *, CASE WHEN NOT open THEN NULL
-        |          WHEN lag(ms) OVER (PARTITION BY user_id, open ORDER BY ms)
-        |            IS NULL THEN 1
-        |          WHEN ms - lag(ms) OVER (PARTITION BY user_id, open
-        |            ORDER BY ms) > $gap THEN 1 ELSE 0 END AS ns
-        |        FROM (SELECT user_id, ms, value, wave, est, esid,
-        |                (est IS NULL AND wave <= $k) AS open
-        |              FROM $prev)))))""".stripMargin
-    }
-    val nStages = nWaves + 2
-    val stages = (0L until nStages)
-      .map(k => stage(k, if (k == 0) "s_init" else s"s${k - 1}"))
-      .mkString(",\n")
     val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id, value")},
-        |e AS (SELECT user_id, ms, value, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |b0 AS (SELECT wave, MAX(ms) AS mx FROM e GROUP BY wave),
-        |hb AS (SELECT MAX(ms) AS hi FROM e),
-        |b AS (SELECT * FROM b0
-        |      UNION ALL SELECT $nWaves, hi + $margin FROM hb
-        |      UNION ALL SELECT ${nWaves + 1}, hi + 2 * $margin FROM hb),
-        |l AS (SELECT wave,
-        |        COALESCE(GREATEST(MAX(mx) OVER (ORDER BY wave
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |          - $delay, 0), 0) AS lwm
-        |      FROM b),
-        |kept AS (
-        |  SELECT e.user_id, e.ms, e.value, e.wave FROM e JOIN l USING (wave)
-        |  WHERE e.ms + $gap > l.lwm),
-        |s_init AS (
-        |  SELECT user_id, ms, value, wave,
-        |         CAST(NULL AS BIGINT) AS est, CAST(NULL AS BIGINT) AS esid
-        |  FROM kept),
-        |$stages
-        |SELECT user_id, MIN(ms) AS start_ms, MAX(ms) + $gap AS end_ms,
+      s"""${in.ctes},
+        |kept AS (SELECT user_id, ms, value, wave FROM x
+        |  WHERE ms + ${p.gap} > lwm),
+        |${sessionReplaySql("kept", "value, ", p.delay, p.gap, p.nWaves, margin)}
+        |SELECT user_id, MIN(ms) AS start_ms, MAX(ms) + ${p.gap} AS end_ms,
         |       COUNT(*) AS n_events,
         |       round(SUM(value) * (1.0 + 1e-12), 2) AS sum_value
-        |FROM s${nStages - 1} GROUP BY user_id, est, esid
+        |FROM s${p.nWaves + 1} GROUP BY user_id, est, esid
         |ORDER BY user_id, start_ms""".stripMargin
     SGen(seed, build, sql)
   }
@@ -531,84 +908,23 @@ object StreamFuzz {
     */
   def sessionTwin(seed: Long): (SparkSession, String) => DataFrame =
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val p = sessionP(seed)
-      val margin = p.delay + 3 * p.gap + 10000000L
-      val base = keptBase(spark, dir, p.mode, seed, p.nWaves, p.delay,
-        keyed = true)
-      val realMx: Map[Long, Long] = base.groupBy(col("wave"))
-        .agg(max(col("ms")).as("mx")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val hi = realMx.values.max
-      val mxByWave = realMx +
-        (p.nWaves.toLong -> (hi + margin)) +
-        ((p.nWaves + 1).toLong -> (hi + 2 * margin))
-      def ewm(k: Long): Long = {
-        val prior = mxByWave.filter(_._1 < k).values
-        if (prior.isEmpty) 0L else math.max(0L, prior.max - p.delay)
-      }
-      var df = base.filter(col("ms") + p.gap > col("lwm"))
-        .select(col("key"), col("ms"), col("value"), col("wave"))
-        .withColumn("est", lit(null).cast("long"))
-        .withColumn("esid", lit(null).cast("long"))
-      (0L until (p.nWaves + 2L)).foreach { k =>
-        val hasBatch = mxByWave.contains(k)
-        val wOpen = Window.partitionBy(col("key"), col("open"))
-          .orderBy(col("ms"))
-        val wCum = wOpen.rowsBetween(Window.unboundedPreceding, 0)
-        val wComp = Window.partitionBy(col("key"), col("open"), col("sid"))
-        df = df
-          .withColumn("open", col("est").isNull && col("wave") <= k)
-          .withColumn("ns", when(!col("open"), lit(null))
-            .when(lag(col("ms"), 1).over(wOpen).isNull, 1)
-            .when(col("ms") - lag(col("ms"), 1).over(wOpen) > p.gap, 1)
-            .otherwise(0))
-          .withColumn("sid", sum(col("ns")).over(wCum))
-          .withColumn("comp_end", max(col("ms")).over(wComp) + p.gap)
-          .withColumn("emit",
-            col("open") && lit(hasBatch) && col("comp_end") <= ewm(k))
-          .withColumn("est", when(col("emit"), k).otherwise(col("est")))
-          .withColumn("esid", when(col("emit"), col("sid"))
-            .otherwise(col("esid")))
-          .drop("open", "ns", "sid", "comp_end", "emit")
-      }
-      df.groupBy(col("key"), col("est"), col("esid"))
+      val base = sessionIn(seed, p.nWaves, p.mode, p.delay, value = true)
+        .lagged(spark, dir)
+      sessionReplayTwin(
+        base.filter(col("ms") + p.gap > col("lwm"))
+          .select(col("user_id"), col("ms"), col("value"), col("wave")),
+        base, p.delay, p.gap, p.nWaves, p.delay + 3 * p.gap + 10000000L)
+        .groupBy(col("user_id"), col("est"), col("esid"))
         .agg(min(col("ms")).as("start_ms"),
           (max(col("ms")) + p.gap).as("end_ms"),
           count(lit(1)).as("n_events"),
           round(sum(col("value")) * (lit(1.0) + lit(1e-12)), 2)
             .as("sum_value"))
-        .select(col("key").as("user_id"), col("start_ms"), col("end_ms"),
+        .select(col("user_id"), col("start_ms"), col("end_ms"),
           col("n_events"), col("sum_value"))
         .orderBy(col("user_id"), col("start_ms"))
     }
-
-  /** The kept-rows frame shared by both IN-SPARK batch twins: the
-    * carved events plus each row's lagged late-filter watermark `lwm`.
-    * The watermark table is |waves| rows, so its single-partition
-    * ordering window is trivial and the join back is a broadcast.
-    */
-  private def keptBase(spark: SparkSession, dir: String, mode: String,
-      seed: Long, nWaves: Int, delay: Long,
-      keyed: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = carve(spark, dir, seed, mode, nWaves) { ev0 =>
-      if (keyed)
-        ev0.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"),
-          coalesce(col("value"), lit(0.0)).as("value"))
-      else
-        ev0.select(col("event_id"), col("event_type"),
-          expr("us div 1000").as("ms"), col("value"))
-    }.rows.drop("event_id")
-    val wPrev2 = Window.orderBy(col("wave"))
-      .rowsBetween(Window.unboundedPreceding, -2)
-    val l = e.groupBy(col("wave")).agg(max(col("ms")).as("mx"))
-      .select(col("wave"),
-        coalesce(greatest(max(col("mx")).over(wPrev2) - lit(delay),
-          lit(0L)), lit(0L)).as("lwm"))
-    e.join(broadcast(l), Seq("wave"))
-  }
 
   /** IN-SPARK batch twin of the Family A drive — the oracle SQL's
     * semantics replayed with DataFrame ops, so StreamFuzzSpec can sweep
@@ -616,49 +932,17 @@ object StreamFuzz {
     * plan, same engine, byte-equal expected.
     */
   def aggTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      val p = aggP(seed)
-      val base = keptBase(spark, dir, p.mode, seed, p.nWaves, p.delay,
-        keyed = false)
-      base
-        .withColumn("ws", explode(array((0 until p.m).map(k =>
-          expr(s"(ms div ${p.slide}) * ${p.slide} - ${k * p.slide}")): _*)))
-        .filter(col("ws") + p.width > col("lwm"))
-        .groupBy(col("ws"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")) * (lit(1.0) + lit(1e-12)), 2)
-            .as("sum_value"))
-        .select(col("ws").as("window_start_ms"), col("event_type"),
-          col("n"), col("sum_value"))
-        .orderBy(col("window_start_ms"), col("event_type"))
-    }
+    aggChain(seed).twin
 
   /** IN-SPARK batch twin of the Family B drive. */
   def quotaTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      val p = quotaP(seed)
-      val base = keptBase(spark, dir, p.mode, seed, p.nWaves, p.delay,
-        keyed = true)
-      base
-        .filter(col("ms") > col("lwm"))
-        .groupBy(col("key").as("user_id"),
-          (expr(s"ms div ${p.bucket}") * p.bucket).as("hour_ms"))
-        .agg(count(lit(1)).as("n_events"),
-          least(count(lit(1)), lit(p.cap)).as("n_admitted"),
-          (count(lit(1)) - least(count(lit(1)), lit(p.cap)))
-            .as("n_throttled"))
-        .orderBy(col("user_id"), col("hour_ms"))
-    }
+    quotaChain(seed).twin
 
   private[graft] case class JoinP(nWaves: Int, mode: String, delay: Long,
       window: Long, joinType: String)
 
   private[graft] def joinP(seed: Long): JoinP = {
-    val rnd = new Random(seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) = draws(seed)
     JoinP(nWaves, mode, delay,
       Seq(600000L, 3600000L, 21600000L)(rnd.nextInt(3)),
       if (rnd.nextBoolean()) "inner" else "left_outer")
@@ -683,11 +967,11 @@ object StreamFuzz {
     * click that would contradict it is impossible by the same bound).
     */
   private def genJoin(seed: Long, cfg: DriveCfg): SGen =
-    genJoinWith(joinP(seed), seed, cfg)
+    joinChain(joinP(seed), seed).gen(cfg)
 
   /** Family G — the two stream-stream join types family D leaves out,
     * FULL OUTER and LEFT SEMI, on the same interval-join geometry and
-    * oracle machinery (genJoinWith is shared; only the join clause and
+    * oracle machinery (joinChain is shared; only the join clause and
     * the output projection differ). Purity extends family D's argument
     * symmetrically: an unmatched CLICK null-extends exactly once at
     * click-state eviction (a later kept view that would match it is
@@ -700,191 +984,41 @@ object StreamFuzz {
     * both.
     */
   private def genJoinExt(seed: Long, cfg: DriveCfg): SGen =
-    genJoinWith(joinPExt(seed), seed, cfg)
+    joinChain(joinPExt(seed), seed).gen(cfg)
 
   private[graft] def joinPExt(seed: Long): JoinP =
     joinP(seed).copy(joinType =
       if (seed % 2 == 0) "full_outer" else "left_semi")
 
-  /** The WITH-prefix shared by the join-shaped oracles (families D, G,
-    * H): carve view/click rows into waves, replay the two-sided lagged
-    * watermark — L is the MIN of the two sides' running maxes (each
-    * over ITS rows in batches <= k-2); a side with no rows yet pins L
-    * to the initial 0 — and close with the `kept` rows CTE. The jitter
-    * bounds are over the view/click SUBSET — the Scala side computes
-    * lo/hi after the event-type filter, and one boundary row on the
-    * full-table bounds flips wave (caught by seed 13501's first DuckDB
-    * run).
-    */
-  private def joinKeptCtes(mode: String, seed: Long, nWaves: Int,
-      delay: Long): String = {
-    s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
-      |e AS (SELECT user_id, event_type, ms,
-      |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-      |bw AS (SELECT wave,
-      |         MAX(CASE WHEN event_type = 'view' THEN ms END) AS mv,
-      |         MAX(CASE WHEN event_type = 'click' THEN ms END) AS mc
-      |       FROM e GROUP BY wave),
-      |l AS (SELECT wave,
-      |        CASE WHEN MAX(mv) OVER lag2 IS NULL
-      |               OR MAX(mc) OVER lag2 IS NULL THEN 0
-      |             ELSE GREATEST(LEAST(MAX(mv) OVER lag2,
-      |               MAX(mc) OVER lag2) - $delay, 0) END AS lwm
-      |      FROM bw
-      |      WINDOW lag2 AS (ORDER BY wave
-      |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)),
-      |kept AS (
-      |  SELECT e.user_id, e.event_type, e.ms, e.wave
-      |  FROM e JOIN l USING (wave) WHERE e.ms > l.lwm)""".stripMargin
-  }
-
-  private def genJoinWith(p: JoinP, seed: Long, cfg: DriveCfg): SGen = {
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val window = p.window
-    val margin = delay + 3 * window + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "join", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("vuser"),
-            timestamp_millis(col("ms")).as("view_ts"))
-          .withWatermark("view_ts", s"$delay milliseconds")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("user_id").as("cuser"),
-            timestamp_millis(col("ms")).as("click_ts"))
-          .withWatermark("click_ts", s"$delay milliseconds")
-        val joined = views.join(clicks,
-          expr(s"vuser = cuser AND click_ts >= view_ts AND " +
-            s"click_ts <= view_ts + interval $window millisecond"),
-          p.joinType)
-        p.joinType match {
-          case "left_semi" =>
-            joined.select(col("vuser").as("user_id"),
-              unix_millis(col("view_ts")).as("view_ms"))
-          case "full_outer" =>
-            joined.select(coalesce(col("vuser"), col("cuser"))
-                .as("user_id"),
-              unix_millis(col("view_ts")).as("view_ms"),
-              unix_millis(col("click_ts")).as("click_ms"))
-          case _ =>
-            joined.select(col("vuser").as("user_id"),
-              unix_millis(col("view_ts")).as("view_ms"),
-              unix_millis(col("click_ts")).as("click_ms"))
-        }
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(
-          (if (p.joinType == "left_semi") Seq("user_id", "view_ms")
-           else Seq("user_id", "view_ms", "click_ms")).map(col): _*)
-    }
-
-    val sql =
-      s"""${joinKeptCtes(mode, seed, nWaves, delay)}
-        |${p.joinType match {
-            case "left_semi" =>
-              s"""SELECT v.user_id AS user_id, v.ms AS view_ms
-                 |FROM (SELECT user_id, ms FROM kept
-                 |      WHERE event_type = 'view') v
-                 |WHERE EXISTS (SELECT 1 FROM kept c
-                 |  WHERE c.event_type = 'click' AND c.user_id = v.user_id
-                 |    AND c.ms >= v.ms AND c.ms <= v.ms + $window)
-                 |ORDER BY user_id, view_ms""".stripMargin
-            case "full_outer" =>
-              s"""SELECT COALESCE(v.user_id, c.user_id) AS user_id,
-                 |       v.ms AS view_ms, c.ms AS click_ms
-                 |FROM (SELECT user_id, ms FROM kept
-                 |      WHERE event_type = 'view') v
-                 |FULL JOIN (SELECT user_id, ms FROM kept
-                 |      WHERE event_type = 'click') c
-                 |  ON v.user_id = c.user_id AND c.ms >= v.ms
-                 |     AND c.ms <= v.ms + $window
-                 |ORDER BY user_id, view_ms, click_ms""".stripMargin
-            case t =>
-              s"""SELECT v.user_id AS user_id, v.ms AS view_ms, c.ms AS click_ms
-                 |FROM (SELECT user_id, ms FROM kept WHERE event_type = 'view') v
-                 |${if (t == "inner") "JOIN" else "LEFT JOIN"}
-                 |  (SELECT user_id, ms FROM kept WHERE event_type = 'click') c
-                 |  ON v.user_id = c.user_id AND c.ms >= v.ms
-                 |     AND c.ms <= v.ms + $window
-                 |ORDER BY v.user_id, view_ms, click_ms""".stripMargin
-          }}""".stripMargin
-    SGen(seed, build, sql)
+  /** Families D and G: one interval-join stage of the given type. */
+  private def joinChain(p: JoinP, seed: Long): Chain = {
+    val semi = p.joinType == "left_semi"
+    val user = if (p.joinType == "full_outer") coalesce(col("vuser"), col("cuser"))
+      else col("vuser")
+    val out = Seq("user_id" -> user, "view_ms" -> unix_millis(col("view_ts"))) ++
+      (if (semi) Nil else Seq("click_ms" -> unix_millis(col("click_ts"))))
+    Chain(viewClickIn(seed, p.nWaves, p.mode, p.delay), "join",
+      p.delay + 3 * p.window + 10000000L,
+      intervalJoin(views(p.delay), clicks(p.delay), p.window, p.joinType, V, C)
+        .andThen(output(out: _*)),
+      out.map(_._1))
   }
 
   /** IN-SPARK batch twin of the Family D drive. */
   def joinTwin(seed: Long): (SparkSession, String) => DataFrame =
-    joinTwinWith(joinP(seed), seed)
+    joinChain(joinP(seed), seed).twin
 
   /** IN-SPARK batch twin of the Family G drive. */
   def joinExtTwin(seed: Long): (SparkSession, String) => DataFrame =
-    joinTwinWith(joinPExt(seed), seed)
-
-  private def joinTwinWith(p: JoinP, seed: Long)
-      : (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("ms"))).as("mv"),
-        max(when(col("event_type") === "click", col("ms"))).as("mc"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2),
-                max(col("mc")).over(wPrev2)) - p.delay, lit(0L)))
-            .as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .filter(col("ms") > col("lwm"))
-      val v = kept.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ms").as("view_ms"))
-      val c = kept.filter(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("ms").as("click_ms"))
-      val joined = v.join(c, col("user_id") === col("cuser") &&
-          col("click_ms") >= col("view_ms") &&
-          col("click_ms") <= col("view_ms") + p.window,
-        p.joinType)
-      (p.joinType match {
-        case "left_semi" =>
-          joined.select(col("user_id"), col("view_ms"))
-        case "full_outer" =>
-          joined.select(coalesce(col("user_id"), col("cuser"))
-            .as("user_id"), col("view_ms"), col("click_ms"))
-        case _ =>
-          joined.select(col("user_id"), col("view_ms"), col("click_ms"))
-      }).orderBy(
-        (if (p.joinType == "left_semi") Seq("user_id", "view_ms")
-         else Seq("user_id", "view_ms", "click_ms")).map(col): _*)
-    }
+    joinChain(joinPExt(seed), seed).twin
 
   private[graft] case class ChainP(nWaves: Int, mode: String, delay: Long,
       joinW: Long, aggW: Long)
 
   private[graft] def chainP(seed: Long): ChainP = {
     val j = joinP(seed)
-    // independent draw for the rollup width (joinP consumed its RNG)
-    val rnd = new Random(seed * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L)
     ChainP(j.nWaves, j.mode, j.delay, j.window,
-      Seq(3600000L, 21600000L, 86400000L)(rnd.nextInt(3)))
+      Seq(3600000L, 21600000L, 86400000L)(draw2(seed).nextInt(3)))
   }
 
   /** Family H — CHAINED stateful operators (an 8th state-machine
@@ -926,101 +1060,36 @@ object StreamFuzz {
     * `sum_lag_ms` sums exact BIGINT click-view gaps — no float
     * tolerance in the differential compare.
     */
-  private def genChain(seed: Long, cfg: DriveCfg): SGen = {
+  private def chainChain(seed: Long): Chain = {
     val p = chainP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val joinW = p.joinW; val aggW = p.aggW
-    val margin = delay + 3 * joinW + 3 * aggW + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "chain", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("vuser"),
-            timestamp_millis(col("ms")).as("view_ts"))
-          .withWatermark("view_ts", s"$delay milliseconds")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("user_id").as("cuser"),
-            timestamp_millis(col("ms")).as("click_ts"))
-          .withWatermark("click_ts", s"$delay milliseconds")
-        // sentinel pairs ride THROUGH both stateful operators and are
-        // dropped on the sink table below — an in-query filter here
-        // (`vuser >= 0`) gets predicate-pushed below the
-        // EventTimeWatermark nodes (and inferred onto the click side via
-        // the equi-join key), eliminating the sentinel rows AT THE SCAN:
-        // the watermark then never advances and no window ever flushes
-        // (empirically bitten — every sentinel batch read `in=0`)
-        views.join(clicks,
-          expr(s"vuser = cuser AND click_ts >= view_ts AND " +
-            s"click_ts <= view_ts + interval $joinW millisecond"), "inner")
-          .groupBy(col("vuser"), org.apache.spark.sql.functions
-            .window(col("click_ts"), s"$aggW milliseconds"))
-          .agg(count(lit(1)).as("n_pairs"),
-            sum(unix_millis(col("click_ts")) - unix_millis(col("view_ts")))
-              .as("sum_lag_ms"))
-          .select(col("vuser").as("user_id"),
-            unix_millis(col("window.start")).as("window_start_ms"),
-            col("n_pairs"), col("sum_lag_ms"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("window_start_ms"))
-    }
-
-    val sql =
-      s"""${joinKeptCtes(mode, seed, nWaves, delay)},
-        |pairs AS (
-        |  SELECT v.user_id, v.ms AS view_ms, c.ms AS click_ms
-        |  FROM (SELECT user_id, ms FROM kept WHERE event_type = 'view') v
-        |  JOIN (SELECT user_id, ms FROM kept WHERE event_type = 'click') c
-        |    ON v.user_id = c.user_id AND c.ms >= v.ms
-        |       AND c.ms <= v.ms + $joinW)
-        |SELECT user_id, (click_ms // $aggW) * $aggW AS window_start_ms,
-        |       COUNT(*) AS n_pairs,
-        |       CAST(SUM(click_ms - view_ms) AS BIGINT) AS sum_lag_ms
-        |FROM pairs GROUP BY user_id, window_start_ms
-        |ORDER BY user_id, window_start_ms""".stripMargin
-    SGen(seed, build, sql)
+    Chain(viewClickIn(seed, p.nWaves, p.mode, p.delay), "chain",
+      p.delay + 3 * p.joinW + 3 * p.aggW + 10000000L,
+      intervalJoin(views(p.delay), clicks(p.delay), p.joinW, "inner", V, C)
+        .andThen(tumble(p.aggW, col("click_ts"), "click_ms", Seq("vuser" -> "user_id"),
+          Aggs(Seq(count(lit(1)).as("n_pairs"),
+              sum(unix_millis(col("click_ts")) - unix_millis(col("view_ts")))
+                .as("sum_lag_ms")),
+            "COUNT(*) AS n_pairs, CAST(SUM(click_ms - view_ms) AS BIGINT) AS sum_lag_ms",
+            Seq(count(lit(1)).as("n_pairs"),
+              sum(col("click_ms") - col("view_ms")).as("sum_lag_ms")))))
+        .andThen(output(Seq("user_id" -> col("vuser"), "window_start_ms" -> start()) ++
+          same("n_pairs", "sum_lag_ms"): _*)),
+      Seq("user_id", "window_start_ms"))
   }
+
+  private def genChain(seed: Long, cfg: DriveCfg): SGen = chainChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family H drive: the family-D inner twin
     * supplies the kept pairs, closed under the same tumbling rollup.
     */
   def chainTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      val p = chainP(seed)
-      joinTwinWith(JoinP(p.nWaves, p.mode, p.delay, p.joinW, "inner"),
-          seed)(spark, dir)
-        .groupBy(col("user_id"),
-          expr(s"(click_ms div ${p.aggW}) * ${p.aggW}")
-            .as("window_start_ms"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("click_ms") - col("view_ms")).as("sum_lag_ms"))
-        .select(col("user_id"), col("window_start_ms"),
-          col("n_pairs"), col("sum_lag_ms"))
-        .orderBy(col("user_id"), col("window_start_ms"))
-    }
+    chainChain(seed).twin
 
   private[graft] case class DedupP(nWaves: Int, mode: String, delay: Long,
       bucket: Long)
 
   private[graft] def dedupP(seed: Long): DedupP = {
-    val rnd = new Random(seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) = draws(seed)
     DedupP(nWaves, mode, delay,
       Seq(3600000L, 21600000L, 86400000L)(rnd.nextInt(3)))
   }
@@ -1043,74 +1112,29 @@ object StreamFuzz {
     * in the oracle (floor is monotone, so per-wave max bucket = floored
     * per-wave max and the lagged-watermark CTEs apply to `bt` verbatim).
     */
-  private def genDedup(seed: Long, cfg: DriveCfg): SGen = {
+  /** The keyed input whose watermarked column is the `bucket` floor of
+    * `ms` (families E, M, T).
+    */
+  private def bucketIn(seed: Long, nWaves: Int, mode: String, delay: Long,
+      bucket: Long): Input =
+    Input(seed, nWaves, mode, keyed(value = false), "user_id", Seq("" -> delay),
+      t = (s"(ms // $bucket) * $bucket", expr(s"(ms div ${bucket}L) * ${bucket}L")))
+
+  private def dedupChain(seed: Long): Chain = {
     val p = dedupP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val bucket = p.bucket
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms")))
-      val margin = delay + 3 * bucket + 10000000L
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, hi + margin, nWaves.toLong),
-          (-2L, hi + 2 * margin, nWaves + 1L))
-          .toDF("key", "ms", "wave"))
-      driveFamily(spark, dir, "dedup", seed, cfg, frame,
-        "key LONG, ms LONG", nWaves) { src =>
-        src.select(col("key"),
-            timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
-              .as("bt"))
-          .withWatermark("bt", s"$delay milliseconds")
-          .dropDuplicates("key", "bt")
-          .select(col("key").as("user_id"),
-            unix_millis(col("bt")).as("bucket_ms"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("bucket_ms"))
-    }
-
-    // `e` exposes the BUCKET time as `ms`, so the shared lagged-watermark
-    // CTEs apply unchanged; kept = strict > (inclusive drop), output =
-    // plain DISTINCT (purity per the Scaladoc argument)
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
-        |e AS (SELECT user_id, (ms // $bucket) * $bucket AS ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |${lateWmCtes(delay)},
-        |kept AS (
-        |  SELECT e.user_id, e.ms FROM e JOIN l USING (wave)
-        |  WHERE e.ms > l.lwm)
-        |SELECT DISTINCT user_id, ms AS bucket_ms FROM kept
-        |ORDER BY user_id, bucket_ms""".stripMargin
-    SGen(seed, build, sql)
+    Chain(bucketIn(seed, p.nWaves, p.mode, p.delay, p.bucket), "dedup",
+      p.delay + 3 * p.bucket + 10000000L,
+      dedupBuckets(p.bucket, p.delay, "key", "key", "bt", "bucket_ms")
+        .andThen(output("user_id" -> col("key"),
+          "bucket_ms" -> unix_millis(col("bt")))),
+      Seq("user_id", "bucket_ms"))
   }
+
+  private def genDedup(seed: Long, cfg: DriveCfg): SGen = dedupChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family E drive. */
   def dedupTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = dedupP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-        .withColumn("bt", expr(s"(ms div ${p.bucket}L) * ${p.bucket}L"))
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(max(col("bt")).as("mx"))
-        .select(col("wave"),
-          coalesce(greatest(max(col("mx")).over(wPrev2) - lit(p.delay),
-            lit(0L)), lit(0L)).as("lwm"))
-      e.join(broadcast(l), Seq("wave"))
-        .filter(col("bt") > col("lwm"))
-        .select(col("key").as("user_id"), col("bt").as("bucket_ms"))
-        .distinct()
-        .orderBy(col("user_id"), col("bucket_ms"))
-    }
+    dedupChain(seed).twin
 
   private[graft] case class DedupWmP(nWaves: Int, mode: String, w0: Long,
       delay: Long)
@@ -1172,26 +1196,19 @@ object StreamFuzz {
     * fold over that key's appearances — a recursive CTE in DuckDB, an
     * `aggregate` higher-order fold in the batch twin.
     */
+  // hand-written: the per-key emission chain (each emission restarts the
+  // TTL) is a sequential fold, a rule no stage of the algebra states
   private def genDedupWm(seed: Long, cfg: DriveCfg): SGen = {
     val p = dedupWmP(seed)
     val nWaves = p.nWaves; val jR = p.w0 / 2
 
     val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, p.mode, nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms")))
-      val margin = 3 * p.delay + 10000000L
-      val frame = ev.drop("event_id")
-        .filter(presenceCol(seed))
-        .withColumn("ms",
-          (col("wave") + 1) * p.w0 + keyJitterCol(seed, jR))
-        .unionByName(Seq(
-          (-1L, (nWaves + 1L) * p.w0 + margin, nWaves.toLong),
-          (-2L, (nWaves + 1L) * p.w0 + 2 * margin, nWaves + 1L))
-          .toDF("key", "ms", "wave"))
-      driveFamily(spark, dir, "dwm", seed, cfg, frame,
-        "key LONG, ms LONG", nWaves) { src =>
+      val ev = carve(spark, dir, seed, p.mode, nWaves)(keyed(value = false)).rows
+      val frame = withSentinels(spark, ev.drop("event_id")
+          .filter(presenceCol(seed))
+          .withColumn("ms", (col("wave") + 1) * p.w0 + keyJitterCol(seed, jR)),
+        (nWaves + 1L) * p.w0, 3 * p.delay + 10000000L, nWaves, Nil)
+      driveFamily(spark, dir, "dwm", seed, cfg, frame, nWaves) { src =>
         src.select(col("key"), timestamp_millis(col("ms")).as("t"))
           .withWatermark("t", s"${p.delay} milliseconds")
           .dropDuplicatesWithinWatermark("key")
@@ -1214,7 +1231,7 @@ object StreamFuzz {
         |e AS (SELECT DISTINCT user_id AS key,
         |        (wave + 1) * ${p.w0} + ${keyJitterSql(seed, jR)} AS ms, wave
         |      FROM c WHERE ${presenceSql(seed)}),
-        |${lateWmCtes(p.delay)},
+        |${lagCtes(Seq("" -> p.delay))},
         |a AS (SELECT e.key, e.wave, e.ms, l.lwm,
         |        ROW_NUMBER() OVER (PARTITION BY e.key ORDER BY e.wave)
         |          AS idx
@@ -1239,32 +1256,23 @@ object StreamFuzz {
     */
   def dedupWmTwin(seed: Long): (SparkSession, String) => DataFrame =
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val p = dedupWmP(seed); val jR = p.w0 / 2
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))).rows
+      val e = carve(spark, dir, seed, p.mode, p.nWaves)(keyed(value = false)).rows
         .filter(presenceCol(seed))
         .select(col("key"), col("wave"),
-          ((col("wave") + 1) * p.w0 + keyJitterCol(seed, jR)).as("t"))
+          ((col("wave") + 1) * p.w0 + keyJitterCol(seed, jR)).as("ms"))
         .distinct()
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(max(col("t")).as("mx"))
-        .select(col("wave"),
-          coalesce(greatest(max(col("mx")).over(wPrev2) - lit(p.delay),
-            lit(0L)), lit(0L)).as("lwm"))
-      e.join(broadcast(l), Seq("wave"))
+      lagTwin(e, Seq("" -> p.delay))
         .groupBy(col("key"))
         .agg(sort_array(collect_list(
-          struct(col("wave"), col("t"), col("lwm")))).as("apps"))
+          struct(col("wave"), col("ms"), col("lwm")))).as("apps"))
         .select(col("key").as("user_id"), explode(expr(
           s"""aggregate(apps,
              |  named_struct('expiry', CAST(-1 AS BIGINT),
              |    'emits', CAST(array() AS ARRAY<BIGINT>)),
              |  (acc, x) -> IF(x.lwm >= acc.expiry,
-             |    named_struct('expiry', x.t + ${p.delay}L,
-             |      'emits', concat(acc.emits, array(x.t))),
+             |    named_struct('expiry', x.ms + ${p.delay}L,
+             |      'emits', concat(acc.emits, array(x.ms))),
              |    acc),
              |  acc -> acc.emits)""".stripMargin)).as("emit_ms"))
         .orderBy(col("user_id"), col("emit_ms"))
@@ -1274,11 +1282,8 @@ object StreamFuzz {
       delayV: Long, delayC: Long, width: Long)
 
   private[graft] def unionP(seed: Long): UnionP = {
-    val rnd = new Random(seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val menu = if (mode == "shuffle") ShuffleDelaysMs else JitterDelaysMs
-    UnionP(nWaves, mode, menu(rnd.nextInt(3)), menu(rnd.nextInt(3)),
+    val (rnd, nWaves, mode, delayV) = draws(seed)
+    UnionP(nWaves, mode, delayV, delayMenu(mode)(rnd.nextInt(3)),
       Seq(3600000L, 21600000L, 86400000L)(rnd.nextInt(3)))
   }
 
@@ -1300,107 +1305,32 @@ object StreamFuzz {
     * watermark): the finalized output is the pure rollup of (row,
     * window) pairs with `window_end > L(wave)`.
     */
-  private def genUnion(seed: Long, cfg: DriveCfg): SGen = {
+  private def unionChain(seed: Long): Chain = {
     val p = unionP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val width = p.width
-    val margin = p.delayV + p.delayC + 3 * width + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "union", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("event_type"), timestamp_millis(col("ms")).as("t"),
-            col("user_id"))
-          .withWatermark("t", s"${p.delayV} milliseconds")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("event_type"), timestamp_millis(col("ms")).as("t"),
-            col("user_id"))
-          .withWatermark("t", s"${p.delayC} milliseconds")
-        // no in-query sentinel filter: it would be predicate-pushed
-        // below the EventTimeWatermark nodes and freeze the watermark
-        // (see genChain); sentinels must carry real event_types to pass
-        // the branch split, so they are separated by TIME instead —
-        // their far-future windows are dropped on the sink table below
-        views.unionByName(clicks)
-          .groupBy(org.apache.spark.sql.functions
-            .window(col("t"), s"$width milliseconds"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_uid"))
-          .select(unix_millis(col("window.start")).as("window_start_ms"),
-            col("event_type"), col("n"), col("sum_uid"))
-      }
-        .filter(col("window_start_ms") <= hi)
-        .orderBy(col("window_start_ms"), col("event_type"))
-    }
-
-    // family D's carve + per-side running maxes, with PER-SIDE delay
-    // subtraction before the min (the multipleWatermarkPolicy=min value)
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
-        |e AS (SELECT user_id, event_type, ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |bw AS (SELECT wave,
-        |         MAX(CASE WHEN event_type = 'view' THEN ms END) AS mv,
-        |         MAX(CASE WHEN event_type = 'click' THEN ms END) AS mc
-        |       FROM e GROUP BY wave),
-        |l AS (SELECT wave,
-        |        CASE WHEN MAX(mv) OVER lag2 IS NULL
-        |               OR MAX(mc) OVER lag2 IS NULL THEN 0
-        |             ELSE GREATEST(LEAST(MAX(mv) OVER lag2 - ${p.delayV},
-        |               MAX(mc) OVER lag2 - ${p.delayC}), 0) END AS lwm
-        |      FROM bw
-        |      WINDOW lag2 AS (ORDER BY wave
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING))
-        |SELECT (ms // $width) * $width AS window_start_ms, event_type,
-        |       COUNT(*) AS n, CAST(SUM(user_id) AS BIGINT) AS sum_uid
-        |FROM e JOIN l USING (wave)
-        |WHERE (ms // $width) * $width + $width > lwm
-        |GROUP BY window_start_ms, event_type
-        |ORDER BY window_start_ms, event_type""".stripMargin
-    SGen(seed, build, sql)
+    def leg(ty: String, delay: Long) = side(ty, "user_id", "t", delay, "ms",
+      windowKeep(p.width), tag = Some("event_type"))
+    // sentinels must carry real event_types to pass the branch split, so
+    // they are separated by TIME: their far-future windows drop on the sink
+    Chain(Input(seed, p.nWaves, p.mode, typed("view", "click"),
+        "user_id, event_type", Seq("view" -> p.delayV, "click" -> p.delayC),
+        "event_type IN ('view', 'click')"),
+      "union", p.delayV + p.delayC + 3 * p.width + 10000000L,
+      union(leg("view", p.delayV), leg("click", p.delayC))
+        .andThen(tumble(p.width, col("t"), "ms", Seq("event_type" -> "event_type"),
+          Aggs(Seq(count(lit(1)).as("n"), sum(col("user_id")).as("sum_uid")),
+            "COUNT(*) AS n, CAST(SUM(user_id) AS BIGINT) AS sum_uid",
+            Seq(count(lit(1)).as("n"), sum(col("user_id")).as("sum_uid")))))
+        .andThen(output(Seq("window_start_ms" -> start()) ++
+          same("event_type", "n", "sum_uid"): _*)),
+      Seq("window_start_ms", "event_type"),
+      sink = hi => col("window_start_ms") <= hi)
   }
+
+  private def genUnion(seed: Long, cfg: DriveCfg): SGen = unionChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family I drive. */
   def unionTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = unionP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("ms"))).as("mv"),
-        max(when(col("event_type") === "click", col("ms"))).as("mc"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2) - p.delayV,
-                max(col("mc")).over(wPrev2) - p.delayC), lit(0L)))
-            .as("lwm"))
-      e.join(broadcast(l), Seq("wave"))
-        .withColumn("window_start_ms",
-          expr(s"(ms div ${p.width}) * ${p.width}"))
-        .filter(col("window_start_ms") + p.width > col("lwm"))
-        .groupBy(col("window_start_ms"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_uid"))
-        .orderBy(col("window_start_ms"), col("event_type"))
-    }
+    unionChain(seed).twin
 
   private[graft] case class AggAggP(nWaves: Int, mode: String, delay: Long,
       w1: Long, k: Int) {
@@ -1408,11 +1338,7 @@ object StreamFuzz {
   }
 
   private[graft] def aggAggP(seed: Long): AggAggP = {
-    val rnd = new Random(seed * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) = draws(seed)
     AggAggP(nWaves, mode, delay,
       Seq(900000L, 3600000L, 21600000L)(rnd.nextInt(3)),
       Seq(4, 6, 24)(rnd.nextInt(3)))
@@ -1445,85 +1371,39 @@ object StreamFuzz {
     * in-query filter would be pushed below EventTimeWatermark — see
     * genChain).
     */
-  private def genAggAgg(seed: Long, cfg: DriveCfg): SGen = {
+  /** The fine tumble `w1` feeding the aligned coarse rollup `w2` of
+    * families J and K: `n1` kept rows per fine window, re-windowed
+    * through `window_time(window)` into `total` (kept rows) and `n_fine`
+    * (fine windows) per coarse window.
+    */
+  private def twoLevel(w1: Long, w2: Long, ts: Column, t: String,
+      keys: Seq[(String, String)], total: String): Stage =
+    tumble(w1, ts, t, keys, Aggs(Seq(count(lit(1)).as("n1")), "COUNT(*) AS n1",
+        Seq(count(lit(1)).as("n1"))), ws = "ws1")
+      .andThen(tumble(w2, window_time(col("window")), "ws1", keys.map(k => k._2 -> k._2),
+        Aggs(Seq(sum(col("n1")).cast("long").as(total), count(lit(1)).as("n_fine")),
+          s"CAST(SUM(n1) AS BIGINT) AS $total, COUNT(*) AS n_fine",
+          Seq(sum(col("n1")).as(total), count(lit(1)).as("n_fine"))),
+        win = "w2win"))
+
+  private def aggAggChain(seed: Long): Chain = {
     val p = aggAggP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val w1 = p.w1; val w2 = p.w2
-    val margin = delay + 3 * w2 + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("event_type"),
-          expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          ("\u0000s1", hi + margin, nWaves.toLong),
-          ("\u0000s2", hi + 2 * margin, nWaves + 1L))
-          .toDF("event_type", "ms", "wave"))
-      driveFamily(spark, dir, "aggagg", seed, cfg, frame,
-        "event_type STRING, ms LONG", nWaves) { src =>
-        src.select(col("event_type"), timestamp_millis(col("ms")).as("t"))
-          .withWatermark("t", s"$delay milliseconds")
-          .groupBy(org.apache.spark.sql.functions
-            .window(col("t"), s"$w1 milliseconds"), col("event_type"))
-          .agg(count(lit(1)).as("n1"))
-          .groupBy(org.apache.spark.sql.functions.window(
-            window_time(col("window")), s"$w2 milliseconds")
-            .as("w2win"), col("event_type"))
-          .agg(sum(col("n1")).cast("long").as("n"),
-            count(lit(1)).as("n_fine"))
-          .select(unix_millis(col("w2win.start")).as("window_start_ms"),
-            col("event_type"), col("n"), col("n_fine"))
-      }
-        .filter(!col("event_type").startsWith("\u0000"))
-        .orderBy(col("window_start_ms"), col("event_type"))
-    }
-
-    // kept (row, W1) pairs per family A's rule (window-end-based drop
-    // with the lagged watermark), re-grouped at w2: n counts kept rows,
-    // n_fine counts the distinct fine windows inside each coarse one
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "event_type")},
-        |e AS (SELECT event_type, ms, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |${lateWmCtes(delay)},
-        |p AS (
-        |  SELECT e.event_type, (e.ms // $w1) * $w1 AS ws1
-        |  FROM e JOIN l USING (wave)
-        |  WHERE (e.ms // $w1) * $w1 + $w1 > l.lwm)
-        |SELECT (ws1 // $w2) * $w2 AS window_start_ms, event_type,
-        |       COUNT(*) AS n, COUNT(DISTINCT ws1) AS n_fine
-        |FROM p GROUP BY window_start_ms, event_type
-        |ORDER BY window_start_ms, event_type""".stripMargin
-    SGen(seed, build, sql)
+    Chain(Input(seed, p.nWaves, p.mode, tagged(value = false), "event_type",
+        Seq("" -> p.delay)),
+      "aggagg", p.delay + 3 * p.w2 + 10000000L,
+      source(Seq("event_type"), "t", p.delay, windowKeep(p.w1))
+        .andThen(twoLevel(p.w1, p.w2, col("t"), "ms", Seq("event_type" -> "event_type"), "n"))
+        .andThen(output(Seq("window_start_ms" -> start("w2win")) ++
+          same("event_type", "n", "n_fine"): _*)),
+      Seq("window_start_ms", "event_type"),
+      sink = _ => !col("event_type").startsWith("\u0000"))
   }
+
+  private def genAggAgg(seed: Long, cfg: DriveCfg): SGen = aggAggChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family J drive. */
   def aggAggTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = aggAggP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.select(col("event_id"), col("event_type"),
-          expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(max(col("ms")).as("mx"))
-        .select(col("wave"),
-          coalesce(greatest(max(col("mx")).over(wPrev2) - p.delay,
-            lit(0L)), lit(0L)).as("lwm"))
-      e.join(broadcast(l), Seq("wave"))
-        .withColumn("ws1", expr(s"(ms div ${p.w1}) * ${p.w1}"))
-        .filter(col("ws1") + p.w1 > col("lwm"))
-        .groupBy(expr(s"(ws1 div ${p.w2}) * ${p.w2}").as("window_start_ms"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("ws1")).as("n_fine"))
-        .select(col("window_start_ms"), col("event_type"),
-          col("n"), col("n_fine"))
-        .orderBy(col("window_start_ms"), col("event_type"))
-    }
+    aggAggChain(seed).twin
 
   private[graft] case class Chain3P(nWaves: Int, mode: String, delay: Long,
       joinW: Long, w1: Long, k: Int) {
@@ -1532,7 +1412,7 @@ object StreamFuzz {
 
   private[graft] def chain3P(seed: Long): Chain3P = {
     val j = joinP(seed)
-    val rnd = new Random(seed * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L)
+    val rnd = draw2(seed)
     Chain3P(j.nWaves, j.mode, j.delay, j.window,
       Seq(900000L, 3600000L)(rnd.nextInt(2)), Seq(4, 24)(rnd.nextInt(2)))
   }
@@ -1561,82 +1441,24 @@ object StreamFuzz {
     * TIME on the sink table (the output has no user column; far-future
     * coarse windows start beyond the fixture max — see genUnion).
     */
-  private def genChain3(seed: Long, cfg: DriveCfg): SGen = {
+  private def chain3Chain(seed: Long): Chain = {
     val p = chain3P(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val joinW = p.joinW; val w1 = p.w1; val w2 = p.w2
-    val margin = delay + 3 * joinW + 3 * w2 + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "chain3", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("vuser"),
-            timestamp_millis(col("ms")).as("view_ts"))
-          .withWatermark("view_ts", s"$delay milliseconds")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("user_id").as("cuser"),
-            timestamp_millis(col("ms")).as("click_ts"))
-          .withWatermark("click_ts", s"$delay milliseconds")
-        views.join(clicks,
-          expr(s"vuser = cuser AND click_ts >= view_ts AND " +
-            s"click_ts <= view_ts + interval $joinW millisecond"), "inner")
-          .groupBy(org.apache.spark.sql.functions
-            .window(col("click_ts"), s"$w1 milliseconds"))
-          .agg(count(lit(1)).as("n1"))
-          .groupBy(org.apache.spark.sql.functions.window(
-            window_time(col("window")), s"$w2 milliseconds").as("w2win"))
-          .agg(sum(col("n1")).cast("long").as("n_pairs"),
-            count(lit(1)).as("n_fine"))
-          .select(unix_millis(col("w2win.start")).as("window_start_ms"),
-            col("n_pairs"), col("n_fine"))
-      }
-        .filter(col("window_start_ms") <= hi)
-        .orderBy(col("window_start_ms"))
-    }
-
-    val sql =
-      s"""${joinKeptCtes(mode, seed, nWaves, delay)},
-        |pairs AS (
-        |  SELECT ((c.ms // $w1) * $w1) AS ws1
-        |  FROM (SELECT user_id, ms FROM kept WHERE event_type = 'view') v
-        |  JOIN (SELECT user_id, ms FROM kept WHERE event_type = 'click') c
-        |    ON v.user_id = c.user_id AND c.ms >= v.ms
-        |       AND c.ms <= v.ms + $joinW)
-        |SELECT (ws1 // $w2) * $w2 AS window_start_ms,
-        |       COUNT(*) AS n_pairs, COUNT(DISTINCT ws1) AS n_fine
-        |FROM pairs GROUP BY window_start_ms
-        |ORDER BY window_start_ms""".stripMargin
-    SGen(seed, build, sql)
+    Chain(viewClickIn(seed, p.nWaves, p.mode, p.delay), "chain3",
+      p.delay + 3 * p.joinW + 3 * p.w2 + 10000000L,
+      intervalJoin(views(p.delay), clicks(p.delay), p.joinW, "inner", V, C)
+        .andThen(twoLevel(p.w1, p.w2, col("click_ts"), "click_ms", Nil, "n_pairs"))
+        .andThen(output(Seq("window_start_ms" -> start("w2win")) ++
+          same("n_pairs", "n_fine"): _*)),
+      Seq("window_start_ms"), sink = hi => col("window_start_ms") <= hi)
   }
+
+  private def genChain3(seed: Long, cfg: DriveCfg): SGen = chain3Chain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family K drive: the family-D inner twin
     * supplies the kept pairs, closed under the two-level rollup.
     */
   def chain3Twin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      val p = chain3P(seed)
-      joinTwinWith(JoinP(p.nWaves, p.mode, p.delay, p.joinW, "inner"),
-          seed)(spark, dir)
-        .withColumn("ws1", expr(s"(click_ms div ${p.w1}) * ${p.w1}"))
-        .groupBy(expr(s"(ws1 div ${p.w2}) * ${p.w2}").as("window_start_ms"))
-        .agg(count(lit(1)).as("n_pairs"),
-          countDistinct(col("ws1")).as("n_fine"))
-        .select(col("window_start_ms"), col("n_pairs"), col("n_fine"))
-        .orderBy(col("window_start_ms"))
-    }
+    chain3Chain(seed).twin
 
   private[graft] case class DedupAggP(nWaves: Int, mode: String, delay: Long,
       bucket: Long, aggK: Long) {
@@ -1645,10 +1467,8 @@ object StreamFuzz {
 
   private[graft] def dedupAggP(seed: Long): DedupAggP = {
     val d = dedupP(seed)
-    // independent draw for the rollup multiple (dedupP consumed its RNG)
-    val rnd = new Random(seed * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L)
     DedupAggP(d.nWaves, d.mode, d.delay, d.bucket,
-      Seq(2L, 4L, 8L)(rnd.nextInt(3)))
+      Seq(2L, 4L, 8L)(draw2(seed).nextInt(3)))
   }
 
   /** Family M — streaming dedup FEEDING a tumbling windowed aggregation
@@ -1681,83 +1501,29 @@ object StreamFuzz {
     * convention): their far-future windows are dropped on the sink
     * table, never in-query.
     */
-  private def genDedupAgg(seed: Long, cfg: DriveCfg): SGen = {
+  private def dedupAggChain(seed: Long): Chain = {
     val p = dedupAggP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val bucket = p.bucket; val aggW = p.aggW
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms")))
-      val margin = delay + 3 * bucket + 3 * aggW + 10000000L
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, hi + margin, nWaves.toLong),
-          (-2L, hi + 2 * margin, nWaves + 1L))
-          .toDF("key", "ms", "wave"))
-      driveFamily(spark, dir, "dagg", seed, cfg, frame,
-        "key LONG, ms LONG", nWaves) { src =>
-        src.select(col("key"),
-            timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
-              .as("bt"))
-          .withWatermark("bt", s"$delay milliseconds")
-          .dropDuplicates("key", "bt")
-          .groupBy(window(col("bt"), s"$aggW milliseconds"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("key")).as("sum_keys"))
-          .select(unix_millis(col("window.start")).as("window_start_ms"),
-            col("n"), col("sum_keys"))
-      }
-        // sentinels separated by time: real buckets never exceed hi, so
-        // real window starts never reach hi + aggW
-        .filter(col("window_start_ms") < lit(hi + aggW))
-        .orderBy(col("window_start_ms"))
-    }
-
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
-        |e AS (SELECT user_id, (ms // $bucket) * $bucket AS ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |${lateWmCtes(delay)},
-        |kept AS (
-        |  SELECT e.user_id, e.ms FROM e JOIN l USING (wave)
-        |  WHERE e.ms > l.lwm),
-        |d AS (SELECT DISTINCT user_id, ms FROM kept)
-        |SELECT (ms // $aggW) * $aggW AS window_start_ms,
-        |       COUNT(*) AS n, CAST(SUM(user_id) AS BIGINT) AS sum_keys
-        |FROM d GROUP BY 1 ORDER BY window_start_ms""".stripMargin
-    SGen(seed, build, sql)
+    Chain(bucketIn(seed, p.nWaves, p.mode, p.delay, p.bucket), "dagg",
+      p.delay + 3 * p.bucket + 3 * p.aggW + 10000000L,
+      dedupBuckets(p.bucket, p.delay, "key", "key", "bt", "ms")
+        .andThen(tumble(p.aggW, col("bt"), "ms", Nil,
+          Aggs(Seq(count(lit(1)).as("n"), sum(col("key")).as("sum_keys")),
+            "COUNT(*) AS n, CAST(SUM(user_id) AS BIGINT) AS sum_keys",
+            Seq(count(lit(1)).as("n"), sum(col("user_id")).as("sum_keys")))))
+        .andThen(output(Seq("window_start_ms" -> start()) ++ same("n", "sum_keys"): _*)),
+      Seq("window_start_ms"),
+      // sentinels separated by time: real buckets never exceed hi, so
+      // real window starts never reach hi + aggW
+      sink = hi => col("window_start_ms") < lit(hi + p.aggW))
   }
+
+  private def genDedupAgg(seed: Long, cfg: DriveCfg): SGen = dedupAggChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family M drive: family E's twin closed
     * under the aligned tumbling GROUP BY.
     */
   def dedupAggTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = dedupAggP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-        .withColumn("bt", expr(s"(ms div ${p.bucket}L) * ${p.bucket}L"))
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(max(col("bt")).as("mx"))
-        .select(col("wave"),
-          coalesce(greatest(max(col("mx")).over(wPrev2) - lit(p.delay),
-            lit(0L)), lit(0L)).as("lwm"))
-      e.join(broadcast(l), Seq("wave"))
-        .filter(col("bt") > col("lwm"))
-        .select(col("key"), col("bt"))
-        .distinct()
-        .groupBy(expr(s"(bt div ${p.aggW}L) * ${p.aggW}L")
-          .as("window_start_ms"))
-        .agg(count(lit(1)).as("n"), sum(col("key")).as("sum_keys"))
-        .orderBy(col("window_start_ms"))
-    }
+    dedupAggChain(seed).twin
 
   private[graft] case class JoinJoinP(nWaves: Int, mode: String, delay: Long,
       w1: Long, w2: Long)
@@ -1769,7 +1535,7 @@ object StreamFuzz {
     // coincidence view -> click -> purchase on ONE user is far rarer
     // than a pair, and the fixture's sf0.001 carving has only ~15 users
     // over 30 days — family-D-width windows are vacuous there.
-    val rnd = new Random(seed * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L)
+    val rnd = draw2(seed)
     val menu = Seq(21600000L, 86400000L, 259200000L)
     JoinJoinP(j.nWaves, j.mode, j.delay,
       menu(rnd.nextInt(3)), menu(rnd.nextInt(3)))
@@ -1820,150 +1586,39 @@ object StreamFuzz {
     * purchase time) ride through both joins and are dropped on the sink
     * table — families D/H/K's convention, for the same pushdown reason.
     */
-  private def genJoinJoin(seed: Long, cfg: DriveCfg): SGen = {
+  private def joinJoinChain(seed: Long): Chain = {
     val p = joinJoinP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val w1 = p.w1; val w2 = p.w2
-    val margin = delay + 3 * w1 + 3 * w2 + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click", "purchase"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-1L, "purchase", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L),
-          (-2L, "purchase", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "jj", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("vuser"),
-            timestamp_millis(col("ms")).as("view_ts"))
-          .withWatermark("view_ts", s"$delay milliseconds")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("user_id").as("cuser"),
-            timestamp_millis(col("ms")).as("click_ts"))
-          .withWatermark("click_ts", s"$delay milliseconds")
-        val purchases = src.filter(col("event_type") === "purchase")
-          .select(col("user_id").as("puser"),
-            timestamp_millis(col("ms")).as("purchase_ts"))
-          .withWatermark("purchase_ts", s"$delay milliseconds")
-        // sentinel triples ride THROUGH both joins and are dropped on
-        // the sink table — an in-query filter here would be predicate-
-        // pushed below the EventTimeWatermark nodes and freeze the
-        // watermark (families D/H's empirically-bitten pushdown trap)
-        views.join(clicks,
-            expr(s"vuser = cuser AND click_ts >= view_ts AND " +
-              s"click_ts <= view_ts + interval $w1 millisecond"), "inner")
-          // a join input may carry AT MOST ONE event-time column
-          // (Spark refuses (view_ts, click_ts) both watermarked), so
-          // the pair stream demotes view_ts to a plain long and keeps
-          // click_ts as ITS event time — the column join2's condition
-          // and state eviction run on
-          .select(col("vuser"), unix_millis(col("view_ts")).as("view_ms"),
-            col("click_ts"))
-          .join(purchases,
-            expr(s"vuser = puser AND purchase_ts >= click_ts AND " +
-              s"purchase_ts <= click_ts + interval $w2 millisecond"), "inner")
-          .select(col("vuser").as("user_id"), col("view_ms"),
-            unix_millis(col("click_ts")).as("click_ms"),
-            unix_millis(col("purchase_ts")).as("purchase_ms"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("view_ms"), col("click_ms"),
-          col("purchase_ms"))
-    }
-
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click', 'purchase')")},
-        |e AS (SELECT user_id, event_type, ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |bw AS (SELECT wave,
-        |         MAX(CASE WHEN event_type = 'view' THEN ms END) AS mv,
-        |         MAX(CASE WHEN event_type = 'click' THEN ms END) AS mc,
-        |         MAX(CASE WHEN event_type = 'purchase' THEN ms END) AS mp
-        |       FROM e GROUP BY wave),
-        |l AS (SELECT wave,
-        |        CASE WHEN MAX(mv) OVER lag2 IS NULL
-        |               OR MAX(mc) OVER lag2 IS NULL
-        |               OR MAX(mp) OVER lag2 IS NULL THEN 0
-        |             ELSE GREATEST(LEAST(MAX(mv) OVER lag2,
-        |               MAX(mc) OVER lag2, MAX(mp) OVER lag2) - $delay, 0) END
-        |          AS lwm
-        |      FROM bw
-        |      WINDOW lag2 AS (ORDER BY wave
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)),
-        |kept AS (
-        |  SELECT e.user_id, e.event_type, e.ms
-        |  FROM e JOIN l USING (wave)
-        |  WHERE CASE WHEN e.event_type = 'purchase'
-        |             THEN e.ms >= l.lwm - $w1
-        |             ELSE e.ms > l.lwm END)
-        |SELECT v.user_id AS user_id, v.ms AS view_ms, c.ms AS click_ms,
-        |       p.ms AS purchase_ms
-        |FROM (SELECT user_id, ms FROM kept WHERE event_type = 'view') v
-        |JOIN (SELECT user_id, ms FROM kept WHERE event_type = 'click') c
-        |  ON v.user_id = c.user_id AND c.ms >= v.ms AND c.ms <= v.ms + $w1
-        |JOIN (SELECT user_id, ms FROM kept WHERE event_type = 'purchase') p
-        |  ON p.user_id = v.user_id AND p.ms >= c.ms AND p.ms <= c.ms + $w2
-        |ORDER BY user_id, view_ms, click_ms, purchase_ms""".stripMargin
-    SGen(seed, build, sql)
+    val types = Seq("view", "click", "purchase")
+    // a join input may carry AT MOST ONE event-time column (Spark refuses
+    // (view_ts, click_ts) both watermarked), so the pair stream demotes
+    // view_ts to a plain long and keeps click_ts as ITS event time — the
+    // column join2's condition and state eviction run on
+    val demote = Stage(_.select(col("vuser"),
+        unix_millis(col("view_ts")).as("view_ms"), col("click_ts")),
+      up => s"SELECT * FROM $up", identity)
+    Chain(Input(seed, p.nWaves, p.mode, typed(types: _*), "user_id, event_type",
+        types.map(_ -> p.delay), "event_type IN ('view', 'click', 'purchase')"),
+      "jj", p.delay + 3 * p.w1 + 3 * p.w2 + 10000000L,
+      intervalJoin(
+          intervalJoin(views(p.delay), clicks(p.delay), p.w1, "inner", V, C)
+            .andThen(demote),
+          side("purchase", "puser", "purchase_ts", p.delay, "purchase_ms",
+            (s"ms >= lwm - ${p.w1}", col("ms") >= col("lwm") - p.w1)),
+          p.w2, "inner", ("vuser", "click_ts", "click_ms"),
+          ("puser", "purchase_ts", "purchase_ms"))
+        .andThen(output("user_id" -> col("vuser"), "view_ms" -> col("view_ms"),
+          "click_ms" -> unix_millis(col("click_ts")),
+          "purchase_ms" -> unix_millis(col("purchase_ts")))),
+      Seq("user_id", "view_ms", "click_ms", "purchase_ms"))
   }
+
+  private def genJoinJoin(seed: Long, cfg: DriveCfg): SGen = joinJoinChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family N drive: the three-sided kept
     * sets closed under the same triple interval join.
     */
   def joinJoinTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = joinJoinP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "click", "purchase"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("ms"))).as("mv"),
-        max(when(col("event_type") === "click", col("ms"))).as("mc"),
-        max(when(col("event_type") === "purchase", col("ms"))).as("mp"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull ||
-            max(col("mp")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2),
-                max(col("mc")).over(wPrev2),
-                max(col("mp")).over(wPrev2)) - p.delay, lit(0L)))
-            .as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .filter(when(col("event_type") === "purchase",
-          col("ms") >= col("lwm") - p.w1).otherwise(col("ms") > col("lwm")))
-      val v = kept.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ms").as("view_ms"))
-      val c = kept.filter(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("ms").as("click_ms"))
-      val pu = kept.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("puser"), col("ms").as("purchase_ms"))
-      v.join(c, col("user_id") === col("cuser") &&
-          col("click_ms") >= col("view_ms") &&
-          col("click_ms") <= col("view_ms") + p.w1, "inner")
-        .join(pu, col("user_id") === col("puser") &&
-          col("purchase_ms") >= col("click_ms") &&
-          col("purchase_ms") <= col("click_ms") + p.w2, "inner")
-        .select(col("user_id"), col("view_ms"), col("click_ms"),
-          col("purchase_ms"))
-        .orderBy(col("user_id"), col("view_ms"), col("click_ms"),
-          col("purchase_ms"))
-    }
+    joinJoinChain(seed).twin
 
   private[graft] case class DedupJoinP(nWaves: Int, mode: String,
       delay: Long, bucket: Long, window: Long)
@@ -1973,7 +1628,7 @@ object StreamFuzz {
     // independent draw for the join window (dedupP consumed its RNG);
     // window >= one bucket on average so a floored view still reaches
     // the clicks of its own bucket
-    val rnd = new Random(seed * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L)
+    val rnd = draw2(seed)
     DedupJoinP(d.nWaves, d.mode, d.delay,
       Seq(3600000L, 21600000L)(rnd.nextInt(2)),
       Seq(21600000L, 86400000L, 259200000L)(rnd.nextInt(3)))
@@ -2011,121 +1666,32 @@ object StreamFuzz {
     * reads. Sentinel view/click pairs ride through both operators and
     * drop on the sink table (the pushdown convention).
     */
-  private def genDedupJoin(seed: Long, cfg: DriveCfg): SGen = {
+  private def dedupJoinChain(seed: Long): Chain = {
     val p = dedupJoinP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val bucket = p.bucket; val window = p.window
-    val margin = delay + 3 * bucket + 3 * window + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "dj", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("vuser"),
-            timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
-              .as("view_bt"))
-          .withWatermark("view_bt", s"$delay milliseconds")
-          .dropDuplicates("vuser", "view_bt")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("user_id").as("cuser"),
-            timestamp_millis(col("ms")).as("click_ts"))
-          .withWatermark("click_ts", s"$delay milliseconds")
-        // sentinels ride through both stateful operators and drop on
-        // the sink table (the families D/H/N pushdown convention)
-        views.join(clicks,
-            expr(s"vuser = cuser AND click_ts >= view_bt AND " +
-              s"click_ts <= view_bt + interval $window millisecond"), "inner")
-          .select(col("vuser").as("user_id"),
-            unix_millis(col("view_bt")).as("view_bt_ms"),
-            unix_millis(col("click_ts")).as("click_ms"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("view_bt_ms"), col("click_ms"))
-    }
-
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
-        |e AS (SELECT user_id, event_type,
-        |        CASE WHEN event_type = 'view'
-        |             THEN (ms // $bucket) * $bucket ELSE ms END AS fms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |bw AS (SELECT wave,
-        |         MAX(CASE WHEN event_type = 'view' THEN fms END) AS mv,
-        |         MAX(CASE WHEN event_type = 'click' THEN fms END) AS mc
-        |       FROM e GROUP BY wave),
-        |l AS (SELECT wave,
-        |        CASE WHEN MAX(mv) OVER lag2 IS NULL
-        |               OR MAX(mc) OVER lag2 IS NULL THEN 0
-        |             ELSE GREATEST(LEAST(MAX(mv) OVER lag2,
-        |               MAX(mc) OVER lag2) - $delay, 0) END AS lwm
-        |      FROM bw
-        |      WINDOW lag2 AS (ORDER BY wave
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)),
-        |kept AS (
-        |  SELECT e.user_id, e.event_type, e.fms
-        |  FROM e JOIN l USING (wave) WHERE e.fms > l.lwm),
-        |d AS (SELECT DISTINCT user_id, fms FROM kept
-        |      WHERE event_type = 'view')
-        |SELECT v.user_id AS user_id, v.fms AS view_bt_ms, c.fms AS click_ms
-        |FROM d v
-        |JOIN (SELECT user_id, fms FROM kept WHERE event_type = 'click') c
-        |  ON v.user_id = c.user_id AND c.fms >= v.fms
-        |     AND c.fms <= v.fms + $window
-        |ORDER BY user_id, view_bt_ms, click_ms""".stripMargin
-    SGen(seed, build, sql)
+    val floor = s"(ms // ${p.bucket}) * ${p.bucket}"
+    Chain(viewClickIn(seed, p.nWaves, p.mode, p.delay).copy(t = (
+        s"CASE WHEN event_type = 'view' THEN $floor ELSE ms END",
+        when(col("event_type") === "view",
+          expr(s"(ms div ${p.bucket}L) * ${p.bucket}L")).otherwise(col("ms")))),
+      "dj", p.delay + 3 * p.bucket + 3 * p.window + 10000000L,
+      intervalJoin(
+          dedupBuckets(p.bucket, p.delay, "user_id", "vuser", "view_bt",
+            "view_bt_ms", Some("view")),
+          clicks(p.delay), p.window, "inner", ("vuser", "view_bt", "view_bt_ms"), C)
+        .andThen(output("user_id" -> col("vuser"),
+          "view_bt_ms" -> unix_millis(col("view_bt")),
+          "click_ms" -> unix_millis(col("click_ts")))),
+      Seq("user_id", "view_bt_ms", "click_ms"))
   }
+
+  private def genDedupJoin(seed: Long, cfg: DriveCfg): SGen = dedupJoinChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family O drive: kept views (bucket-
     * floored, DISTINCT) interval-joined with kept clicks under the same
     * two-sided lagged watermark replay.
     */
   def dedupJoinTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = dedupJoinP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-        .withColumn("fms", when(col("event_type") === "view",
-          expr(s"(ms div ${p.bucket}L) * ${p.bucket}L")).otherwise(col("ms")))
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("fms"))).as("mv"),
-        max(when(col("event_type") === "click", col("fms"))).as("mc"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2),
-                max(col("mc")).over(wPrev2)) - p.delay, lit(0L)))
-            .as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .filter(col("fms") > col("lwm"))
-      val v = kept.filter(col("event_type") === "view")
-        .select(col("user_id"), col("fms").as("view_bt_ms")).distinct()
-      val c = kept.filter(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("fms").as("click_ms"))
-      v.join(c, col("user_id") === col("cuser") &&
-          col("click_ms") >= col("view_bt_ms") &&
-          col("click_ms") <= col("view_bt_ms") + p.window, "inner")
-        .select(col("user_id"), col("view_bt_ms"), col("click_ms"))
-        .orderBy(col("user_id"), col("view_bt_ms"), col("click_ms"))
-    }
+    dedupJoinChain(seed).twin
 
   private[graft] case class DedupSessP(nWaves: Int, mode: String,
       delay: Long, bucket: Long, gap: Long)
@@ -2171,102 +1737,39 @@ object StreamFuzz {
     * operators), so `b` is built from e — including waves whose rows
     * are all dedup-dropped: their batches still exist and still evict.
     */
+  // hand-written: the session stage re-opens emitted sessions, so the
+  // oracle is family C's staged replay over the deduped first-kept waves
   private def genDedupSess(seed: Long, cfg: DriveCfg): SGen = {
     val p = dedupSessP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val bucket = p.bucket; val gap = p.gap
-    val margin = delay + 3 * gap + 3 * bucket + 10000000L
+    val margin = p.delay + 3 * p.gap + 3 * p.bucket + 10000000L
+    val in = bucketIn(seed, p.nWaves, p.mode, p.delay, p.bucket)
 
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, hi + margin, nWaves.toLong),
-          (-2L, hi + 2 * margin, nWaves + 1L))
-          .toDF("key", "ms", "wave"))
-      driveFamily(spark, dir, "dsess", seed, cfg, frame,
-        "key LONG, ms LONG", nWaves) { src =>
+    val build = (spark: SparkSession, dir: String) =>
+      in.drive(spark, dir, "dsess", cfg, margin) { src =>
         src.select(col("key"),
-            timestamp_millis(expr(s"(ms div ${bucket}L) * ${bucket}L"))
+            timestamp_millis(expr(s"(ms div ${p.bucket}L) * ${p.bucket}L"))
               .as("bt"))
-          .withWatermark("bt", s"$delay milliseconds")
+          .withWatermark("bt", s"${p.delay} milliseconds")
           .dropDuplicates("key", "bt")
-          .groupBy(session_window(col("bt"), s"$gap milliseconds"),
+          .groupBy(session_window(col("bt"), s"${p.gap} milliseconds"),
             col("key"))
           .agg(count(lit(1)).as("n_buckets"))
           .select(col("key").as("user_id"),
             unix_millis(col("session_window.start")).as("start_ms"),
             unix_millis(col("session_window.end")).as("end_ms"),
             col("n_buckets"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("start_ms"))
-    }
+      }._1.filter(col("user_id") >= 0L).orderBy(col("user_id"), col("start_ms"))
 
-    // family C's generated replay stage, minus the value column: stage
-    // k re-sessionizes open deduped buckets and emits components whose
-    // end <= E(k), guarded on the wave actually having ARRIVING rows
-    // (all-duplicate waves still have a batch — b is built from e)
-    def stage(k: Long, prev: String): String = {
-      val ek = s"(SELECT COALESCE(GREATEST(MAX(mx) - $delay, 0), 0)" +
-        s" FROM b WHERE wave < $k)"
-      val hasBatch = s"(SELECT COUNT(*) FROM b WHERE wave = $k) > 0"
-      s"""s$k AS (
-        |  SELECT user_id, ms, wave,
-        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
-        |              THEN $k ELSE est END AS est,
-        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
-        |              THEN sid ELSE esid END AS esid
-        |  FROM (
-        |    SELECT *, MAX(ms) OVER (PARTITION BY user_id, open, sid)
-        |              + $gap AS comp_end
-        |    FROM (
-        |      SELECT *, SUM(ns) OVER (PARTITION BY user_id, open ORDER BY ms
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |      FROM (
-        |        SELECT *, CASE WHEN NOT open THEN NULL
-        |          WHEN lag(ms) OVER (PARTITION BY user_id, open ORDER BY ms)
-        |            IS NULL THEN 1
-        |          WHEN ms - lag(ms) OVER (PARTITION BY user_id, open
-        |            ORDER BY ms) > $gap THEN 1 ELSE 0 END AS ns
-        |        FROM (SELECT user_id, ms, wave, est, esid,
-        |                (est IS NULL AND wave <= $k) AS open
-        |              FROM $prev)))))""".stripMargin
-    }
-    val nStages = nWaves + 2
-    val stages = (0L until nStages)
-      .map(k => stage(k, if (k == 0) "s_init" else s"s${k - 1}"))
-      .mkString(",\n")
+    // the watermark schedule is every ARRIVING row's (b is built from e),
+    // so all-duplicate waves still have a batch and still evict
     val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
-        |e AS (SELECT user_id, (ms // $bucket) * $bucket AS ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |b0 AS (SELECT wave, MAX(ms) AS mx FROM e GROUP BY wave),
-        |hb AS (SELECT MAX(ms) AS hi FROM e),
-        |b AS (SELECT * FROM b0
-        |      UNION ALL SELECT $nWaves, hi + $margin FROM hb
-        |      UNION ALL SELECT ${nWaves + 1}, hi + 2 * $margin FROM hb),
-        |l AS (SELECT wave,
-        |        COALESCE(GREATEST(MAX(mx) OVER (ORDER BY wave
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |          - $delay, 0), 0) AS lwm
-        |      FROM b),
-        |kept AS (
-        |  SELECT e.user_id, e.ms, e.wave FROM e JOIN l USING (wave)
-        |  WHERE e.ms > l.lwm),
-        |d AS (SELECT user_id, ms, MIN(wave) AS wave FROM kept
-        |      GROUP BY user_id, ms),
-        |s_init AS (
-        |  SELECT user_id, ms, wave,
-        |         CAST(NULL AS BIGINT) AS est, CAST(NULL AS BIGINT) AS esid
-        |  FROM d),
-        |$stages
-        |SELECT user_id, MIN(ms) AS start_ms, MAX(ms) + $gap AS end_ms,
+      s"""${in.ctes},
+        |d AS (SELECT user_id, ms, MIN(wave) AS wave FROM x
+        |      WHERE ms > lwm GROUP BY user_id, ms),
+        |${sessionReplaySql("d", "", p.delay, p.gap, p.nWaves, margin)}
+        |SELECT user_id, MIN(ms) AS start_ms, MAX(ms) + ${p.gap} AS end_ms,
         |       COUNT(*) AS n_buckets
-        |FROM s${nStages - 1} GROUP BY user_id, est, esid
+        |FROM s${p.nWaves + 1} GROUP BY user_id, est, esid
         |ORDER BY user_id, start_ms""".stripMargin
     SGen(seed, build, sql)
   }
@@ -2278,65 +1781,21 @@ object StreamFuzz {
     */
   def dedupSessTwin(seed: Long): (SparkSession, String) => DataFrame =
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val p = dedupSessP(seed)
-      val margin = p.delay + 3 * p.gap + 3 * p.bucket + 10000000L
       // carving reads the RAW time (`ms`); the watermarked column is
       // the bucket floor, which REPLACES ms for everything downstream
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.select(col("event_id"), col("user_id"),
-          expr("us div 1000").as("ms"))).rows
-        .withColumn("ms", expr(s"(ms div ${p.bucket}L) * ${p.bucket}L"))
-        .drop("event_id")
-      val realMx: Map[Long, Long] = e.groupBy(col("wave"))
-        .agg(max(col("ms")).as("mx")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val hi = realMx.values.max
-      val mxByWave = realMx +
-        (p.nWaves.toLong -> (hi + margin)) +
-        ((p.nWaves + 1).toLong -> (hi + 2 * margin))
-      def ewm(k: Long): Long = {
-        val prior = mxByWave.filter(_._1 < k).values
-        if (prior.isEmpty) 0L else math.max(0L, prior.max - p.delay)
-      }
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(max(col("ms")).as("mx"))
-        .select(col("wave"),
-          coalesce(greatest(max(col("mx")).over(wPrev2) - lit(p.delay),
-            lit(0L)), lit(0L)).as("lwm"))
-      var df = e.join(broadcast(l), Seq("wave"))
-        .filter(col("ms") > col("lwm"))
-        .groupBy(col("user_id").as("key"), col("ms"))
-        .agg(min(col("wave")).as("wave"))
-        .withColumn("est", lit(null).cast("long"))
-        .withColumn("esid", lit(null).cast("long"))
-      (0L until (p.nWaves + 2L)).foreach { k =>
-        val hasBatch = mxByWave.contains(k)
-        val wOpen = Window.partitionBy(col("key"), col("open"))
-          .orderBy(col("ms"))
-        val wCum = wOpen.rowsBetween(Window.unboundedPreceding, 0)
-        val wComp = Window.partitionBy(col("key"), col("open"), col("sid"))
-        df = df
-          .withColumn("open", col("est").isNull && col("wave") <= k)
-          .withColumn("ns", when(!col("open"), lit(null))
-            .when(lag(col("ms"), 1).over(wOpen).isNull, 1)
-            .when(col("ms") - lag(col("ms"), 1).over(wOpen) > p.gap, 1)
-            .otherwise(0))
-          .withColumn("sid", sum(col("ns")).over(wCum))
-          .withColumn("comp_end", max(col("ms")).over(wComp) + p.gap)
-          .withColumn("emit",
-            col("open") && lit(hasBatch) && col("comp_end") <= ewm(k))
-          .withColumn("est", when(col("emit"), k).otherwise(col("est")))
-          .withColumn("esid", when(col("emit"), col("sid"))
-            .otherwise(col("esid")))
-          .drop("open", "ns", "sid", "comp_end", "emit")
-      }
-      df.groupBy(col("key"), col("est"), col("esid"))
+      val e = bucketIn(seed, p.nWaves, p.mode, p.delay, p.bucket)
+        .lagged(spark, dir)
+      sessionReplayTwin(
+        e.filter(col("ms") > col("lwm"))
+          .groupBy(col("user_id"), col("ms")).agg(min(col("wave")).as("wave")),
+        e, p.delay, p.gap, p.nWaves,
+        p.delay + 3 * p.gap + 3 * p.bucket + 10000000L)
+        .groupBy(col("user_id"), col("est"), col("esid"))
         .agg(min(col("ms")).as("start_ms"),
           (max(col("ms")) + p.gap).as("end_ms"),
           count(lit(1)).as("n_buckets"))
-        .select(col("key").as("user_id"), col("start_ms"), col("end_ms"),
+        .select(col("user_id"), col("start_ms"), col("end_ms"),
           col("n_buckets"))
         .orderBy(col("user_id"), col("start_ms"))
     }
@@ -2381,130 +1840,49 @@ object StreamFuzz {
     * projected, so within-batch first-row-wins nondeterminism cannot
     * surface (the family E convention).
     */
-  private def genJoinDedup(seed: Long, cfg: DriveCfg): SGen = {
+  private def joinDedupChain(seed: Long): Chain = {
     val p = joinDedupP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val window = p.window; val bucket = p.bucket
-    val margin = delay + 3 * window + 3 * bucket + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "jd", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("vuser"),
-            timestamp_millis(col("ms")).as("view_ts"))
-          .withWatermark("view_ts", s"$delay milliseconds")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("user_id").as("cuser"),
-            timestamp_millis(col("ms")).as("click_ts"))
-          .withWatermark("click_ts", s"$delay milliseconds")
-        val joined = views.join(clicks,
-          expr(s"vuser = cuser AND click_ts >= view_ts AND " +
-            s"click_ts <= view_ts + interval $window millisecond"), "inner")
-        if (p.raw)
-          joined.dropDuplicates("vuser", "click_ts")
+    val b = p.bucket
+    // dedup on the pair's click key, raw or bucket-floored: only key
+    // columns are projected (the family E convention)
+    val dedup = Stage(
+      j => if (p.raw)
+          j.dropDuplicates("vuser", "click_ts")
             .select(col("vuser").as("user_id"),
               unix_millis(col("click_ts")).as("click_ms"))
         else
-          joined.withColumn("cbt",
-              expr(s"(unix_millis(click_ts) div ${bucket}L) * ${bucket}L"))
+          j.withColumn("cbt",
+              expr(s"(unix_millis(click_ts) div ${b}L) * ${b}L"))
             .dropDuplicates("vuser", "cbt")
-            .select(col("vuser").as("user_id"), col("cbt").as("click_ms"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("click_ms"))
-    }
-
-    val keyExpr = if (p.raw) "c.ms" else s"(c.ms // $bucket) * $bucket"
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
-        |e AS (SELECT user_id, event_type, ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |bw AS (SELECT wave,
-        |         MAX(CASE WHEN event_type = 'view' THEN ms END) AS mv,
-        |         MAX(CASE WHEN event_type = 'click' THEN ms END) AS mc
-        |       FROM e GROUP BY wave),
-        |l AS (SELECT wave,
-        |        CASE WHEN MAX(mv) OVER lag2 IS NULL
-        |               OR MAX(mc) OVER lag2 IS NULL THEN 0
-        |             ELSE GREATEST(LEAST(MAX(mv) OVER lag2,
-        |               MAX(mc) OVER lag2) - $delay, 0) END AS lwm
-        |      FROM bw
-        |      WINDOW lag2 AS (ORDER BY wave
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)),
-        |kept AS (
-        |  SELECT e.user_id, e.event_type, e.ms
-        |  FROM e JOIN l USING (wave) WHERE e.ms > l.lwm)
-        |SELECT DISTINCT v.user_id AS user_id, $keyExpr AS click_ms
-        |FROM (SELECT user_id, ms FROM kept WHERE event_type = 'view') v
-        |JOIN (SELECT user_id, ms FROM kept WHERE event_type = 'click') c
-        |  ON v.user_id = c.user_id AND c.ms >= v.ms
-        |     AND c.ms <= v.ms + $window
-        |ORDER BY user_id, click_ms""".stripMargin
-    SGen(seed, build, sql)
+            .select(col("vuser").as("user_id"), col("cbt").as("click_ms")),
+      up => s"SELECT DISTINCT user_id, " +
+        (if (p.raw) "click_ms" else s"(click_ms // $b) * $b") +
+        s" AS click_ms FROM $up",
+      _.select(col("user_id"), (if (p.raw) col("click_ms")
+          else expr(s"(click_ms div ${b}L) * ${b}L")).as("click_ms"))
+        .distinct())
+    Chain(viewClickIn(seed, p.nWaves, p.mode, p.delay), "jd",
+      p.delay + 3 * p.window + 3 * p.bucket + 10000000L,
+      intervalJoin(views(p.delay), clicks(p.delay), p.window, "inner", V, C)
+        .andThen(dedup),
+      Seq("user_id", "click_ms"))
   }
+
+  private def genJoinDedup(seed: Long, cfg: DriveCfg): SGen = joinDedupChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family U drive: DISTINCT projection of
     * the interval join of the two kept sets.
     */
   def joinDedupTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = joinDedupP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("ms"))).as("mv"),
-        max(when(col("event_type") === "click", col("ms"))).as("mc"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2),
-                max(col("mc")).over(wPrev2)) - p.delay, lit(0L)))
-            .as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .filter(col("ms") > col("lwm"))
-      val v = kept.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ms").as("vms"))
-      val c = kept.filter(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("ms").as("cms"))
-      val keyCol = if (p.raw) col("cms")
-        else expr(s"(cms div ${p.bucket}L) * ${p.bucket}L")
-      v.join(c, col("user_id") === col("cuser") &&
-          col("cms") >= col("vms") &&
-          col("cms") <= col("vms") + p.window, "inner")
-        .select(col("user_id"), keyCol.as("click_ms"))
-        .distinct()
-        .orderBy(col("user_id"), col("click_ms"))
-    }
+    joinDedupChain(seed).twin
 
   private[graft] case class TwsJoinP(nWaves: Int, mode: String, delay: Long,
       window: Long, bucket: Long)
 
   private[graft] def twsJoinP(seed: Long): TwsJoinP = {
     val j = joinP(seed)
-    // independent draw for the admission bucket (joinP consumed its RNG)
-    val rnd = new Random(seed * 0xD1B54A32D192ED03L + 0x8CB92BA72F3D8DD7L)
     TwsJoinP(j.nWaves, j.mode, j.delay, j.window,
-      Seq(3600000L, 21600000L, 86400000L)(rnd.nextInt(3)))
+      Seq(3600000L, 21600000L, 86400000L)(draw2(seed).nextInt(3)))
   }
 
   /** Family L — transformWithState chained INTO a stream-stream join
@@ -2549,74 +1927,21 @@ object StreamFuzz {
     * dropped on the sink table — family D/H's convention, for the same
     * pushdown reason.
     */
-  private def genTwsJoin(seed: Long, cfg: DriveCfg): SGen = {
+  private def twsJoinChain(seed: Long): Chain = {
     val p = twsJoinP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val window = p.window; val bucket = p.bucket
-    val margin = delay + 3 * window + 3 * bucket + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      WaveHarness.withRocksDb(spark) {
-        driveFamily(spark, dir, "twsjoin", seed, cfg, frame,
-          "user_id LONG, event_type STRING, ms LONG", nWaves) {
-          src =>
-          val admitted = graft.streaming.TwsAdmitJob.admitFirst(
-            src.filter(col("event_type") === "view")
-              .select(col("user_id").as("key"),
-                timestamp_millis(col("ms")).as("eventTs"),
-                lit(0.0).as("value"))
-              .as[graft.streaming.KeyedEvent],
-            bucket, s"$delay milliseconds").toDF()
-            .select(col("key").as("vuser"), col("viewTs").as("view_ts"))
-          val clicks = src.filter(col("event_type") === "click")
-            .select(col("user_id").as("cuser"),
-              timestamp_millis(col("ms")).as("click_ts"))
-            .withWatermark("click_ts", s"$delay milliseconds")
-          admitted.join(clicks,
-              expr(s"vuser = cuser AND click_ts >= view_ts AND " +
-                s"click_ts <= view_ts + interval $window millisecond"),
-              "inner")
-            .select(col("vuser").as("user_id"),
-              unix_millis(col("view_ts")).as("view_ms"),
-              unix_millis(col("click_ts")).as("click_ms"))
-        }
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("view_ms"), col("click_ms"))
-    }
-
-    val sql =
-      s"""${joinKeptCtes(mode, seed, nWaves, delay)},
-        |adm AS (
-        |  SELECT user_id, ms,
-        |         ROW_NUMBER() OVER (PARTITION BY user_id, ms // $bucket
-        |           ORDER BY wave, ms) AS rn
-        |  FROM kept WHERE event_type = 'view')
-        |SELECT a.user_id AS user_id, a.ms AS view_ms, c.ms AS click_ms
-        |FROM (SELECT user_id, ms FROM adm WHERE rn = 1) a
-        |JOIN (SELECT user_id, ms FROM kept WHERE event_type = 'click') c
-        |  ON a.user_id = c.user_id AND c.ms >= a.ms
-        |     AND c.ms <= a.ms + $window
-        |ORDER BY a.user_id, view_ms, click_ms""".stripMargin
-    SGen(seed, build, sql)
+    Chain(viewClickIn(seed, p.nWaves, p.mode, p.delay), "twsjoin",
+      p.delay + 3 * p.window + 3 * p.bucket + 10000000L,
+      intervalJoin(
+          admit(p.bucket, p.delay, Some("view"), "view_ms", Some(("vuser", "view_ts"))),
+          clicks(p.delay), p.window, "inner", V, C)
+        .andThen(output("user_id" -> col("vuser"),
+          "view_ms" -> unix_millis(col("view_ts")),
+          "click_ms" -> unix_millis(col("click_ts")))),
+      Seq("user_id", "view_ms", "click_ms"), rocksDb = true)
   }
 
-  /** IN-SPARK batch twin of the Family L drive: kept rows via the
-    * shared lagged min-both-sides watermark, admission via the
-    * (wave, ms)-ordered ROW_NUMBER, then the plain interval join.
-    */
+  private def genTwsJoin(seed: Long, cfg: DriveCfg): SGen = twsJoinChain(seed).gen(cfg)
+
   /** Dev-scan internals for family-L seed selection: (total view/click
     * rows, late-dropped, kept views, ADMITTED views, kept clicks) — a
     * registered seed must exercise the late filter AND the bucket
@@ -2624,89 +1949,31 @@ object StreamFuzz {
     */
   private[graft] def twsJoinInternals(seed: Long, spark: SparkSession,
       dir: String): String = {
-    import org.apache.spark.sql.expressions.Window
     val p = twsJoinP(seed)
-    val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-      _.filter(col("event_type").isin("view", "click"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("us div 1000").as("ms"))).rows
-      .drop("event_id")
-    val wPrev2 = Window.orderBy(col("wave"))
-      .rowsBetween(Window.unboundedPreceding, -2)
-    val l = e.groupBy(col("wave")).agg(
-      max(when(col("event_type") === "view", col("ms"))).as("mv"),
-      max(when(col("event_type") === "click", col("ms"))).as("mc"))
-      .select(col("wave"),
-        when(max(col("mv")).over(wPrev2).isNull ||
-          max(col("mc")).over(wPrev2).isNull, lit(0L))
-          .otherwise(greatest(
-            least(max(col("mv")).over(wPrev2),
-              max(col("mc")).over(wPrev2)) - p.delay, lit(0L)))
-          .as("lwm"))
+    val e = viewClickIn(seed, p.nWaves, p.mode, p.delay).lagged(spark, dir)
     val total = e.count()
-    val kept = e.join(broadcast(l), Seq("wave"))
-      .filter(col("ms") > col("lwm"))
+    val kept = e.filter(col("ms") > col("lwm"))
     val keptViews = kept.filter(col("event_type") === "view").count()
     val keptClicks = kept.filter(col("event_type") === "click").count()
-    val wAdm = Window
-      .partitionBy(col("user_id"), expr(s"ms div ${p.bucket}L"))
-      .orderBy(col("wave"), col("ms"))
-    val admitted = kept.filter(col("event_type") === "view")
-      .withColumn("rn", row_number().over(wAdm))
-      .filter(col("rn") === 1).count()
+    val admitted = admit(p.bucket, p.delay, Some("view"), "view_ms").twin(e).count()
     s"total=$total dropped=${total - keptViews - keptClicks} " +
       s"keptViews=$keptViews admitted=$admitted suppressed=" +
       s"${keptViews - admitted} keptClicks=$keptClicks"
   }
 
+  /** IN-SPARK batch twin of the Family L drive: kept rows via the
+    * shared lagged min-both-sides watermark, admission via the
+    * (wave, ms)-ordered ROW_NUMBER, then the plain interval join.
+    */
   def twsJoinTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = twsJoinP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("ms"))).as("mv"),
-        max(when(col("event_type") === "click", col("ms"))).as("mc"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2),
-                max(col("mc")).over(wPrev2)) - p.delay, lit(0L)))
-            .as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .filter(col("ms") > col("lwm"))
-      val wAdm = Window
-        .partitionBy(col("user_id"), expr(s"ms div ${p.bucket}L"))
-        .orderBy(col("wave"), col("ms"))
-      val adm = kept.filter(col("event_type") === "view")
-        .withColumn("rn", row_number().over(wAdm))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("ms").as("view_ms"))
-      val clicks = kept.filter(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("ms").as("click_ms"))
-      adm.join(clicks, col("user_id") === col("cuser") &&
-          col("click_ms") >= col("view_ms") &&
-          col("click_ms") <= col("view_ms") + p.window)
-        .select(col("user_id"), col("view_ms"), col("click_ms"))
-        .orderBy(col("user_id"), col("view_ms"), col("click_ms"))
-    }
+    twsJoinChain(seed).twin
 
   private[graft] case class AggJoinP(nWaves: Int, mode: String, delay: Long,
       width: Long)
 
   private[graft] def aggJoinP(seed: Long): AggJoinP = {
-    val rnd = new Random(seed * 0xBF58476D1CE4E5B9L + 0x94D049BB133111EBL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) =
+      draws(seed, 0xBF58476D1CE4E5B9L, 0x94D049BB133111EBL)
     // per-(user, window) view/click coincidences are rare at sf0.001 —
     // the width menu starts at 6 h (the family N lesson)
     AggJoinP(nWaves, mode, delay,
@@ -2744,17 +2011,14 @@ object StreamFuzz {
     * drop on the sink table.
     */
   private[graft] def aggJoinOuterP(seed: Long): AggJoinP = {
-    val rnd = new Random(seed * 0x94D049BB133111EBL + 0xBF58476D1CE4E5B9L)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) =
+      draws(seed, 0x94D049BB133111EBL, 0xBF58476D1CE4E5B9L)
     AggJoinP(nWaves, mode, delay,
       Seq(21600000L, 86400000L, 259200000L)(rnd.nextInt(3)))
   }
 
   private def genAggJoin(seed: Long, cfg: DriveCfg): SGen =
-    genAggJoinWith(aggJoinP(seed), seed, cfg, outer = false)
+    aggJoinChain(aggJoinP(seed), seed, outer = false).gen(cfg)
 
   /** Family Q — family P's composition with a LEFT OUTER window join:
     * every finalized view-side (user, window) aggregate survives, null-
@@ -2769,83 +2033,35 @@ object StreamFuzz {
     * plain left join of the two sides' kept-rows aggregates.
     */
   private def genAggJoinOuter(seed: Long, cfg: DriveCfg): SGen =
-    genAggJoinWith(aggJoinOuterP(seed), seed, cfg, outer = true)
+    aggJoinChain(aggJoinOuterP(seed), seed, outer = true).gen(cfg)
 
-  private def genAggJoinWith(p: AggJoinP, seed: Long, cfg: DriveCfg,
-      outer: Boolean): SGen = {
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val width = p.width
-    val margin = delay + 3 * width + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, if (outer) "ajo" else "aj", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val v = src.filter(col("event_type") === "view")
-          .select(col("user_id"), timestamp_millis(col("ms")).as("vt"))
-          .withWatermark("vt", s"$delay milliseconds")
-          .groupBy(org.apache.spark.sql.functions
-            .window(col("vt"), s"$width milliseconds"), col("user_id"))
-          .agg(count(lit(1)).as("v_n"))
-        val c = src.filter(col("event_type") === "click")
-          .select(col("user_id"), timestamp_millis(col("ms")).as("ct"))
-          .withWatermark("ct", s"$delay milliseconds")
-          .groupBy(org.apache.spark.sql.functions
-            .window(col("ct"), s"$width milliseconds"), col("user_id"))
-          .agg(count(lit(1)).as("c_n"))
-        // sentinel windows finalize on both sides and match here; they
-        // drop on the sink table (the families D/H/N/O convention)
-        v.join(c, Seq("window", "user_id"),
-            if (outer) "left_outer" else "inner")
-          .select(col("user_id"),
-            unix_millis(col("window.start")).as("window_start_ms"),
-            col("v_n"), col("c_n"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("window_start_ms"))
-    }
-
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'click')")},
-        |e AS (SELECT user_id, event_type, ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |bw AS (SELECT wave,
-        |         MAX(CASE WHEN event_type = 'view' THEN ms END) AS mv,
-        |         MAX(CASE WHEN event_type = 'click' THEN ms END) AS mc
-        |       FROM e GROUP BY wave),
-        |l AS (SELECT wave,
-        |        CASE WHEN MAX(mv) OVER lag2 IS NULL
-        |               OR MAX(mc) OVER lag2 IS NULL THEN 0
-        |             ELSE GREATEST(LEAST(MAX(mv) OVER lag2,
-        |               MAX(mc) OVER lag2) - $delay, 0) END AS lwm
-        |      FROM bw
-        |      WINDOW lag2 AS (ORDER BY wave
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)),
-        |kept AS (
-        |  SELECT e.user_id, e.event_type, (e.ms // $width) * $width AS ws
-        |  FROM e JOIN l USING (wave)
-        |  WHERE (e.ms // $width) * $width + $width > l.lwm),
-        |v AS (SELECT user_id, ws, COUNT(*) AS v_n FROM kept
-        |      WHERE event_type = 'view' GROUP BY user_id, ws),
-        |c AS (SELECT user_id, ws, COUNT(*) AS c_n FROM kept
-        |      WHERE event_type = 'click' GROUP BY user_id, ws)
-        |SELECT v.user_id AS user_id, v.ws AS window_start_ms,
-        |       v.v_n AS v_n, c.c_n AS c_n
-        |FROM v ${if (outer) "LEFT JOIN" else "JOIN"} c
-        |  ON v.user_id = c.user_id AND v.ws = c.ws
-        |ORDER BY user_id, window_start_ms""".stripMargin
-    SGen(seed, build, sql)
+  /** Families P and Q: a tumbling count per (user, window) on each side,
+    * the two finalized aggregates joined on (window, user).
+    */
+  private def aggJoinChain(p: AggJoinP, seed: Long, outer: Boolean): Chain = {
+    def perSide(ty: String, ts: String, n: String) =
+      side(ty, "user_id", ts, p.delay, "ms", windowKeep(p.width))
+        .andThen(tumble(p.width, col(ts), "ms", Seq("user_id" -> "user_id"),
+          Aggs(Seq(count(lit(1)).as(n)), s"COUNT(*) AS $n", Seq(count(lit(1)).as(n))),
+          ws = "ws"))
+    val (v, c) = (perSide("view", "vt", "v_n"), perSide("click", "ct", "c_n"))
+    val joinType = if (outer) "left_outer" else "inner"
+    // sentinel windows finalize on both sides and match here; they drop
+    // on the sink table
+    val windowJoin = Stage(
+      src => v.stream(src).join(c.stream(src), Seq("window", "user_id"), joinType),
+      up => s"SELECT v.user_id AS user_id, v.ws AS window_start_ms, v.v_n AS v_n," +
+        s" c.c_n AS c_n\nFROM (${v.sql(up)}) v\n${if (outer) "LEFT JOIN" else "JOIN"}" +
+        s" (${c.sql(up)}) c ON v.user_id = c.user_id AND v.ws = c.ws",
+      kept => v.twin(kept).join(c.twin(kept)
+          .select(col("user_id").as("cuser"), col("ws").as("cws"), col("c_n")),
+          col("user_id") === col("cuser") && col("ws") === col("cws"), joinType)
+        .select(col("user_id"), col("ws").as("window_start_ms"), col("v_n"), col("c_n")))
+    Chain(viewClickIn(seed, p.nWaves, p.mode, p.delay), if (outer) "ajo" else "aj",
+      p.delay + 3 * p.width + 10000000L,
+      windowJoin.andThen(output(Seq("user_id" -> col("user_id"),
+        "window_start_ms" -> start()) ++ same("v_n", "c_n"): _*)),
+      Seq("user_id", "window_start_ms"))
   }
 
   /** IN-SPARK batch twin of the Family P drive: per-side kept rows
@@ -2853,59 +2069,22 @@ object StreamFuzz {
     * aggregated per (user, tumbling window), inner-joined.
     */
   def aggJoinTwin(seed: Long): (SparkSession, String) => DataFrame =
-    aggJoinTwinWith(seed, aggJoinP(seed), outer = false)
+    aggJoinChain(aggJoinP(seed), seed, outer = false).twin
 
   /** IN-SPARK batch twin of the Family Q drive (left join of the two
     * kept-rows aggregates).
     */
   def aggJoinOuterTwin(seed: Long): (SparkSession, String) => DataFrame =
-    aggJoinTwinWith(seed, aggJoinOuterP(seed), outer = true)
-
-  private def aggJoinTwinWith(seed: Long, p: AggJoinP, outer: Boolean)
-      : (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("ms"))).as("mv"),
-        max(when(col("event_type") === "click", col("ms"))).as("mc"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2),
-                max(col("mc")).over(wPrev2)) - p.delay, lit(0L)))
-            .as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .withColumn("ws", expr(s"(ms div ${p.width}L) * ${p.width}L"))
-        .filter(col("ws") + p.width > col("lwm"))
-      val v = kept.filter(col("event_type") === "view")
-        .groupBy(col("user_id"), col("ws")).agg(count(lit(1)).as("v_n"))
-      val c = kept.filter(col("event_type") === "click")
-        .groupBy(col("user_id").as("cuser"), col("ws").as("cws"))
-        .agg(count(lit(1)).as("c_n"))
-      v.join(c, col("user_id") === col("cuser") && col("ws") === col("cws"),
-          if (outer) "left_outer" else "inner")
-        .select(col("user_id"), col("ws").as("window_start_ms"),
-          col("v_n"), col("c_n"))
-        .orderBy(col("user_id"), col("window_start_ms"))
-    }
+    aggJoinChain(aggJoinOuterP(seed), seed, outer = true).twin
 
   private[graft] case class UnionJoinP(nWaves: Int, mode: String,
       delayV: Long, delayS: Long, delayC: Long, window: Long)
 
   private[graft] def unionJoinP(seed: Long): UnionJoinP = {
-    val rnd = new Random(seed * 0xD6E8FEB86659FD93L + 0x9E3779B97F4A7C15L)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val menu = if (mode == "shuffle") ShuffleDelaysMs else JitterDelaysMs
-    UnionJoinP(nWaves, mode, menu(rnd.nextInt(3)), menu(rnd.nextInt(3)),
+    val (rnd, nWaves, mode, delayV) =
+      draws(seed, 0xD6E8FEB86659FD93L, 0x9E3779B97F4A7C15L)
+    val menu = delayMenu(mode)
+    UnionJoinP(nWaves, mode, delayV, menu(rnd.nextInt(3)),
       menu(rnd.nextInt(3)),
       Seq(21600000L, 86400000L, 259200000L)(rnd.nextInt(3)))
   }
@@ -2930,123 +2109,28 @@ object StreamFuzz {
     * interval join of the kept engagement rows against the kept clicks.
     * Sentinel triples ride all three legs and drop on the sink table.
     */
-  private def genUnionJoin(seed: Long, cfg: DriveCfg): SGen = {
+  private def unionJoinChain(seed: Long): Chain = {
     val p = unionJoinP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val window = p.window
-    val margin = p.delayV + p.delayS + p.delayC + 3 * window + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.filter(col("event_type").isin("view", "signup", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, "view", hi + margin, nWaves.toLong),
-          (-1L, "signup", hi + margin, nWaves.toLong),
-          (-1L, "click", hi + margin, nWaves.toLong),
-          (-2L, "view", hi + 2 * margin, nWaves + 1L),
-          (-2L, "signup", hi + 2 * margin, nWaves + 1L),
-          (-2L, "click", hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "event_type", "ms", "wave"))
-      driveFamily(spark, dir, "uj", seed, cfg, frame,
-        "user_id LONG, event_type STRING, ms LONG", nWaves) { src =>
-        val views = src.filter(col("event_type") === "view")
-          .select(col("user_id").as("euser"),
-            col("event_type").as("etype"),
-            timestamp_millis(col("ms")).as("et"))
-          .withWatermark("et", s"${p.delayV} milliseconds")
-        val signups = src.filter(col("event_type") === "signup")
-          .select(col("user_id").as("euser"),
-            col("event_type").as("etype"),
-            timestamp_millis(col("ms")).as("et"))
-          .withWatermark("et", s"${p.delayS} milliseconds")
-        val clicks = src.filter(col("event_type") === "click")
-          .select(col("user_id").as("cuser"),
-            timestamp_millis(col("ms")).as("ct"))
-          .withWatermark("ct", s"${p.delayC} milliseconds")
-        views.unionByName(signups).join(clicks,
-            expr(s"euser = cuser AND ct >= et AND " +
-              s"ct <= et + interval $window millisecond"), "inner")
-          .select(col("euser").as("user_id"), col("etype"),
-            unix_millis(col("et")).as("ems"),
-            unix_millis(col("ct")).as("click_ms"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("etype"), col("ems"), col("click_ms"))
-    }
-
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id, event_type", "event_type IN ('view', 'signup', 'click')")},
-        |e AS (SELECT user_id, event_type, ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |bw AS (SELECT wave,
-        |         MAX(CASE WHEN event_type = 'view' THEN ms END) AS mv,
-        |         MAX(CASE WHEN event_type = 'signup' THEN ms END) AS msg,
-        |         MAX(CASE WHEN event_type = 'click' THEN ms END) AS mc
-        |       FROM e GROUP BY wave),
-        |l AS (SELECT wave,
-        |        CASE WHEN MAX(mv) OVER lag2 IS NULL
-        |               OR MAX(msg) OVER lag2 IS NULL
-        |               OR MAX(mc) OVER lag2 IS NULL THEN 0
-        |             ELSE GREATEST(LEAST(MAX(mv) OVER lag2 - ${p.delayV},
-        |               MAX(msg) OVER lag2 - ${p.delayS},
-        |               MAX(mc) OVER lag2 - ${p.delayC}), 0) END AS lwm
-        |      FROM bw
-        |      WINDOW lag2 AS (ORDER BY wave
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)),
-        |kept AS (
-        |  SELECT e.user_id, e.event_type, e.ms
-        |  FROM e JOIN l USING (wave) WHERE e.ms > l.lwm)
-        |SELECT g.user_id AS user_id, g.event_type AS etype,
-        |       g.ms AS ems, c.ms AS click_ms
-        |FROM (SELECT * FROM kept WHERE event_type IN ('view', 'signup')) g
-        |JOIN (SELECT user_id, ms FROM kept WHERE event_type = 'click') c
-        |  ON g.user_id = c.user_id AND c.ms >= g.ms
-        |     AND c.ms <= g.ms + $window
-        |ORDER BY user_id, etype, ems, click_ms""".stripMargin
-    SGen(seed, build, sql)
+    val types = Seq("view", "signup", "click")
+    def leg(ty: String, delay: Long) =
+      side(ty, "euser", "et", delay, "ems", tag = Some("etype"))
+    Chain(Input(seed, p.nWaves, p.mode, typed(types: _*), "user_id, event_type",
+        types.zip(Seq(p.delayV, p.delayS, p.delayC)),
+        "event_type IN ('view', 'signup', 'click')"),
+      "uj", p.delayV + p.delayS + p.delayC + 3 * p.window + 10000000L,
+      intervalJoin(union(leg("view", p.delayV), leg("signup", p.delayS)),
+          side("click", "cuser", "ct", p.delayC, "click_ms"), p.window, "inner",
+          ("euser", "et", "ems"), ("cuser", "ct", "click_ms"))
+        .andThen(output("user_id" -> col("euser"), "etype" -> col("etype"),
+          "ems" -> unix_millis(col("et")), "click_ms" -> unix_millis(col("ct")))),
+      Seq("user_id", "etype", "ems", "click_ms"))
   }
+
+  private def genUnionJoin(seed: Long, cfg: DriveCfg): SGen = unionJoinChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family R drive. */
   def unionJoinTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = unionJoinP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type").isin("view", "signup", "click"))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(
-        max(when(col("event_type") === "view", col("ms"))).as("mv"),
-        max(when(col("event_type") === "signup", col("ms"))).as("msg"),
-        max(when(col("event_type") === "click", col("ms"))).as("mc"))
-        .select(col("wave"),
-          when(max(col("mv")).over(wPrev2).isNull ||
-            max(col("msg")).over(wPrev2).isNull ||
-            max(col("mc")).over(wPrev2).isNull, lit(0L))
-            .otherwise(greatest(
-              least(max(col("mv")).over(wPrev2) - p.delayV,
-                max(col("msg")).over(wPrev2) - p.delayS,
-                max(col("mc")).over(wPrev2) - p.delayC), lit(0L)))
-            .as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .filter(col("ms") > col("lwm"))
-      val g = kept.filter(col("event_type").isin("view", "signup"))
-        .select(col("user_id"), col("event_type").as("etype"),
-          col("ms").as("ems"))
-      val c = kept.filter(col("event_type") === "click")
-        .select(col("user_id").as("cuser"), col("ms").as("click_ms"))
-      g.join(c, col("user_id") === col("cuser") &&
-          col("click_ms") >= col("ems") &&
-          col("click_ms") <= col("ems") + p.window, "inner")
-        .select(col("user_id"), col("etype"), col("ems"), col("click_ms"))
-        .orderBy(col("user_id"), col("etype"), col("ems"), col("click_ms"))
-    }
+    unionJoinChain(seed).twin
 
   private[graft] case class TwsAggP(nWaves: Int, mode: String, delay: Long,
       bucket: Long, k: Int) {
@@ -3054,11 +2138,8 @@ object StreamFuzz {
   }
 
   private[graft] def twsAggP(seed: Long): TwsAggP = {
-    val rnd = new Random(seed * 0xA0761D6478BD642FL + 0xE7037ED1A0B428DBL)
-    val nWaves = 3 + rnd.nextInt(3)
-    val mode = if (rnd.nextBoolean()) "shuffle" else "jitter"
-    val delay = if (mode == "shuffle") ShuffleDelaysMs(rnd.nextInt(3))
-      else JitterDelaysMs(rnd.nextInt(3))
+    val (rnd, nWaves, mode, delay) =
+      draws(seed, 0xA0761D6478BD642FL, 0xE7037ED1A0B428DBL)
     TwsAggP(nWaves, mode, delay,
       Seq(3600000L, 21600000L)(rnd.nextInt(2)),
       Seq(4, 6, 24)(rnd.nextInt(3)))
@@ -3089,100 +2170,33 @@ object StreamFuzz {
     *
     * The finalized output is therefore the plain GROUP BY of the
     * admitted set at aggW. Single watermark node (views only) — the
-    * lagged bound is the one-sided [[lateWmCtes]] replay.
+    * lagged bound is the one-sided [[lagCtes]] replay.
     */
-  private def genTwsAgg(seed: Long, cfg: DriveCfg): SGen = {
+  private def twsAggChain(seed: Long): Chain = {
     val p = twsAggP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val bucket = p.bucket; val aggW = p.aggW
-    val margin = delay + 3 * aggW + 3 * bucket + 10000000L
-
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
+    Chain(Input(seed, p.nWaves, p.mode,
         _.filter(col("event_type") === "view")
-          .select(col("event_id"), col("user_id"),
-            expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, hi + margin, nWaves.toLong),
-          (-2L, hi + 2 * margin, nWaves + 1L))
-          .toDF("user_id", "ms", "wave"))
-      WaveHarness.withRocksDb(spark) {
-        driveFamily(spark, dir, "twsagg", seed, cfg, frame,
-          "user_id LONG, ms LONG", nWaves) {
-          src =>
-          graft.streaming.TwsAdmitJob.admitFirst(
-            src.select(col("user_id").as("key"),
-              timestamp_millis(col("ms")).as("eventTs"),
-              lit(0.0).as("value"))
-              .as[graft.streaming.KeyedEvent],
-            bucket, s"$delay milliseconds").toDF()
-            .groupBy(org.apache.spark.sql.functions
-              .window(col("viewTs"), s"$aggW milliseconds"))
-            .agg(count(lit(1)).as("n"),
-              sum(col("key")).cast("long").as("sum_uid"))
-            .select(unix_millis(col("window.start")).as("window_start_ms"),
-              col("n"), col("sum_uid"))
-        }
-      }
-        .filter(col("window_start_ms") <= hi)
-        .orderBy(col("window_start_ms"))
-    }
-
-    val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id", "event_type = 'view'")},
-        |e AS (SELECT user_id, ms,
-        |        ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |${lateWmCtes(delay)},
-        |kept AS (
-        |  SELECT e.user_id, e.ms, e.wave
-        |  FROM e JOIN l USING (wave) WHERE e.ms > l.lwm),
-        |adm AS (
-        |  SELECT user_id, ms,
-        |         ROW_NUMBER() OVER (PARTITION BY user_id, ms // $bucket
-        |           ORDER BY wave, ms) AS rn
-        |  FROM kept)
-        |SELECT (ms // $aggW) * $aggW AS window_start_ms,
-        |       COUNT(*) AS n, CAST(SUM(user_id) AS BIGINT) AS sum_uid
-        |FROM adm WHERE rn = 1
-        |GROUP BY window_start_ms
-        |ORDER BY window_start_ms""".stripMargin
-    SGen(seed, build, sql)
+          .select(col("event_id"), col("user_id"), expr("us div 1000").as("ms")),
+        "user_id", Seq("" -> p.delay), "event_type = 'view'"),
+      "twsagg", p.delay + 3 * p.aggW + 3 * p.bucket + 10000000L,
+      admit(p.bucket, p.delay, None, "ms")
+        .andThen(tumble(p.aggW, col("viewTs"), "ms", Nil,
+          Aggs(Seq(count(lit(1)).as("n"), sum(col("key")).cast("long").as("sum_uid")),
+            "COUNT(*) AS n, CAST(SUM(user_id) AS BIGINT) AS sum_uid",
+            Seq(count(lit(1)).as("n"), sum(col("user_id")).cast("long").as("sum_uid")))))
+        .andThen(output(Seq("window_start_ms" -> start()) ++ same("n", "sum_uid"): _*)),
+      Seq("window_start_ms"), sink = hi => col("window_start_ms") <= hi,
+      rocksDb = true)
   }
+
+  private def genTwsAgg(seed: Long, cfg: DriveCfg): SGen = twsAggChain(seed).gen(cfg)
 
   /** IN-SPARK batch twin of the Family S drive: kept views under the
     * one-sided lagged watermark, (wave, ms)-ordered first-admission per
     * (user, bucket), grouped at the aligned coarse window.
     */
   def twsAggTwin(seed: Long): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val p = twsAggP(seed)
-      val e = carve(spark, dir, seed, p.mode, p.nWaves)(
-        _.filter(col("event_type") === "view")
-          .select(col("event_id"), col("user_id"),
-            expr("us div 1000").as("ms"))).rows
-        .drop("event_id")
-      val wPrev2 = Window.orderBy(col("wave"))
-        .rowsBetween(Window.unboundedPreceding, -2)
-      val l = e.groupBy(col("wave")).agg(max(col("ms")).as("mx"))
-        .select(col("wave"),
-          coalesce(greatest(max(col("mx")).over(wPrev2) - p.delay,
-            lit(0L)), lit(0L)).as("lwm"))
-      val kept = e.join(broadcast(l), Seq("wave"))
-        .filter(col("ms") > col("lwm"))
-      val wAdm = Window
-        .partitionBy(col("user_id"), expr(s"ms div ${p.bucket}L"))
-        .orderBy(col("wave"), col("ms"))
-      kept.withColumn("rn", row_number().over(wAdm))
-        .filter(col("rn") === 1)
-        .groupBy(expr(s"(ms div ${p.aggW}L) * ${p.aggW}L")
-          .as("window_start_ms"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("user_id")).cast("long").as("sum_uid"))
-        .orderBy(col("window_start_ms"))
-    }
+    twsAggChain(seed).twin
 
   private[graft] case class SessRollupP(nWaves: Int, mode: String,
       delay: Long, gap: Long, w: Long)
@@ -3220,263 +2234,134 @@ object StreamFuzz {
     * per key!) closed under the rollup GROUP BY — no per-batch
     * bookkeeping for the second operator.
     */
+  // hand-written: the session stage re-opens emitted sessions, so the
+  // oracle is family C's staged replay closed under the rollup GROUP BY
   private def genSessRollup(seed: Long, cfg: DriveCfg): SGen = {
     val p = sessRollupP(seed)
-    val nWaves = p.nWaves; val mode = p.mode; val delay = p.delay
-    val gap = p.gap; val w = p.w
-    val margin = delay + 3 * gap + 3 * w + 10000000L
+    val margin = p.delay + 3 * p.gap + 3 * p.w + 10000000L
+    val in = sessionIn(seed, p.nWaves, p.mode, p.delay, value = false)
 
-    val build = (spark: SparkSession, dir: String) => {
-      import spark.implicits._
-      val Carved(ev, hi) = carve(spark, dir, seed, mode, nWaves)(
-        _.select(col("event_id"), col("user_id").as("key"),
-          expr("us div 1000").as("ms")))
-      val frame = ev.drop("event_id")
-        .unionByName(Seq(
-          (-1L, hi + margin, nWaves.toLong),
-          (-2L, hi + 2 * margin, nWaves + 1L))
-          .toDF("key", "ms", "wave"))
-      driveFamily(spark, dir, "srol", seed, cfg, frame,
-        "key LONG, ms LONG", nWaves) { src =>
+    val build = (spark: SparkSession, dir: String) =>
+      in.drive(spark, dir, "srol", cfg, margin) { src =>
         src.select(col("key"), timestamp_millis(col("ms")).as("t"))
-          .withWatermark("t", s"$delay milliseconds")
-          .groupBy(session_window(col("t"), s"$gap milliseconds"),
+          .withWatermark("t", s"${p.delay} milliseconds")
+          .groupBy(session_window(col("t"), s"${p.gap} milliseconds"),
             col("key"))
           .agg(count(lit(1)).as("n_events"))
           .groupBy(window(window_time(col("session_window")),
-            s"$w milliseconds"), col("key"))
+            s"${p.w} milliseconds"), col("key"))
           .agg(sum(col("n_events")).as("n_events_w"),
             count(lit(1)).as("n_sessions"))
           .select(col("key").as("user_id"),
             unix_millis(col("window.start")).as("w_start_ms"),
             col("n_events_w"), col("n_sessions"))
-      }
-        .filter(col("user_id") >= 0L)
-        .orderBy(col("user_id"), col("w_start_ms"))
-    }
+      }._1.filter(col("user_id") >= 0L).orderBy(col("user_id"), col("w_start_ms"))
 
-    // family C's generated replay stage, value-less: stage k
-    // re-sessionizes open rows and emits components whose end <= E(k),
-    // guarded on the wave actually having rows
-    def stage(k: Long, prev: String): String = {
-      val ek = s"(SELECT COALESCE(GREATEST(MAX(mx) - $delay, 0), 0)" +
-        s" FROM b WHERE wave < $k)"
-      val hasBatch = s"(SELECT COUNT(*) FROM b WHERE wave = $k) > 0"
-      s"""s$k AS (
-        |  SELECT user_id, ms, wave,
-        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
-        |              THEN $k ELSE est END AS est,
-        |         CASE WHEN open AND $hasBatch AND comp_end <= $ek
-        |              THEN sid ELSE esid END AS esid
-        |  FROM (
-        |    SELECT *, MAX(ms) OVER (PARTITION BY user_id, open, sid)
-        |              + $gap AS comp_end
-        |    FROM (
-        |      SELECT *, SUM(ns) OVER (PARTITION BY user_id, open ORDER BY ms
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |      FROM (
-        |        SELECT *, CASE WHEN NOT open THEN NULL
-        |          WHEN lag(ms) OVER (PARTITION BY user_id, open ORDER BY ms)
-        |            IS NULL THEN 1
-        |          WHEN ms - lag(ms) OVER (PARTITION BY user_id, open
-        |            ORDER BY ms) > $gap THEN 1 ELSE 0 END AS ns
-        |        FROM (SELECT user_id, ms, wave, est, esid,
-        |                (est IS NULL AND wave <= $k) AS open
-        |              FROM $prev)))))""".stripMargin
-    }
-    val nStages = nWaves + 2
-    val stages = (0L until nStages)
-      .map(k => stage(k, if (k == 0) "s_init" else s"s${k - 1}"))
-      .mkString(",\n")
     val sql =
-      s"""WITH ${rawCtes(mode, nWaves, "user_id")},
-        |e AS (SELECT user_id, ms, ${waveSql(mode, seed, nWaves)} AS wave FROM raw),
-        |b0 AS (SELECT wave, MAX(ms) AS mx FROM e GROUP BY wave),
-        |hb AS (SELECT MAX(ms) AS hi FROM e),
-        |b AS (SELECT * FROM b0
-        |      UNION ALL SELECT $nWaves, hi + $margin FROM hb
-        |      UNION ALL SELECT ${nWaves + 1}, hi + 2 * $margin FROM hb),
-        |l AS (SELECT wave,
-        |        COALESCE(GREATEST(MAX(mx) OVER (ORDER BY wave
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 2 PRECEDING)
-        |          - $delay, 0), 0) AS lwm
-        |      FROM b),
-        |kept AS (
-        |  SELECT e.user_id, e.ms, e.wave FROM e JOIN l USING (wave)
-        |  WHERE e.ms + $gap > l.lwm),
-        |s_init AS (
-        |  SELECT user_id, ms, wave,
-        |         CAST(NULL AS BIGINT) AS est, CAST(NULL AS BIGINT) AS esid
-        |  FROM kept),
-        |$stages,
+      s"""${in.ctes},
+        |kept AS (SELECT user_id, ms, wave FROM x WHERE ms + ${p.gap} > lwm),
+        |${sessionReplaySql("kept", "", p.delay, p.gap, p.nWaves, margin)},
         |sess AS (
-        |  SELECT user_id, MAX(ms) + $gap AS end_ms, COUNT(*) AS n_events
-        |  FROM s${nStages - 1} GROUP BY user_id, est, esid)
-        |SELECT user_id, ((end_ms - 1) // $w) * $w AS w_start_ms,
+        |  SELECT user_id, MAX(ms) + ${p.gap} AS end_ms, COUNT(*) AS n_events
+        |  FROM s${p.nWaves + 1} GROUP BY user_id, est, esid)
+        |SELECT user_id, ((end_ms - 1) // ${p.w}) * ${p.w} AS w_start_ms,
         |       CAST(SUM(n_events) AS BIGINT) AS n_events_w,
         |       CAST(COUNT(*) AS BIGINT) AS n_sessions
-        |FROM sess GROUP BY user_id, ((end_ms - 1) // $w) * $w
+        |FROM sess GROUP BY user_id, ((end_ms - 1) // ${p.w}) * ${p.w}
         |ORDER BY user_id, w_start_ms""".stripMargin
     SGen(seed, build, sql)
   }
 
   /** IN-SPARK batch twin of the Family V drive: family C's staged
     * session replay (value-less — the rollup only counts), closed under
-    * the tumble GROUP BY on `((end_ms - 1) DIV W) * W`. sessionTwin
-    * itself stays untouched (family C's proven rendering); the loop is
-    * cloned minus the value column because V's margin differs (it must
-    * clear 3 rollup widths too).
+    * the tumble GROUP BY on `((end_ms - 1) DIV W) * W`; V's sentinel
+    * margin also clears 3 rollup widths.
     */
   def sessRollupTwin(seed: Long): (SparkSession, String) => DataFrame =
     (spark, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val p = sessRollupP(seed)
-      val margin = p.delay + 3 * p.gap + 3 * p.w + 10000000L
-      val base = keptBase(spark, dir, p.mode, seed, p.nWaves, p.delay,
-        keyed = true)
-      val realMx: Map[Long, Long] = base.groupBy(col("wave"))
-        .agg(max(col("ms")).as("mx")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val hi = realMx.values.max
-      val mxByWave = realMx +
-        (p.nWaves.toLong -> (hi + margin)) +
-        ((p.nWaves + 1).toLong -> (hi + 2 * margin))
-      def ewm(k: Long): Long = {
-        val prior = mxByWave.filter(_._1 < k).values
-        if (prior.isEmpty) 0L else math.max(0L, prior.max - p.delay)
-      }
-      var df = base.filter(col("ms") + p.gap > col("lwm"))
-        .select(col("key"), col("ms"), col("wave"))
-        .withColumn("est", lit(null).cast("long"))
-        .withColumn("esid", lit(null).cast("long"))
-      (0L until (p.nWaves + 2L)).foreach { k =>
-        val hasBatch = mxByWave.contains(k)
-        val wOpen = Window.partitionBy(col("key"), col("open"))
-          .orderBy(col("ms"))
-        val wCum = wOpen.rowsBetween(Window.unboundedPreceding, 0)
-        val wComp = Window.partitionBy(col("key"), col("open"), col("sid"))
-        df = df
-          .withColumn("open", col("est").isNull && col("wave") <= k)
-          .withColumn("ns", when(!col("open"), lit(null))
-            .when(lag(col("ms"), 1).over(wOpen).isNull, 1)
-            .when(col("ms") - lag(col("ms"), 1).over(wOpen) > p.gap, 1)
-            .otherwise(0))
-          .withColumn("sid", sum(col("ns")).over(wCum))
-          .withColumn("comp_end", max(col("ms")).over(wComp) + p.gap)
-          .withColumn("emit",
-            col("open") && lit(hasBatch) && col("comp_end") <= ewm(k))
-          .withColumn("est", when(col("emit"), k).otherwise(col("est")))
-          .withColumn("esid", when(col("emit"), col("sid"))
-            .otherwise(col("esid")))
-          .drop("open", "ns", "sid", "comp_end", "emit")
-      }
-      df.groupBy(col("key"), col("est"), col("esid"))
+      val base = sessionIn(seed, p.nWaves, p.mode, p.delay, value = false)
+        .lagged(spark, dir)
+      sessionReplayTwin(
+        base.filter(col("ms") + p.gap > col("lwm"))
+          .select(col("user_id"), col("ms"), col("wave")),
+        base, p.delay, p.gap, p.nWaves, p.delay + 3 * p.gap + 3 * p.w + 10000000L)
+        .groupBy(col("user_id"), col("est"), col("esid"))
         .agg((max(col("ms")) + p.gap).as("end_ms"),
           count(lit(1)).as("n_events"))
-        .groupBy(col("key"),
+        .groupBy(col("user_id"),
           expr(s"((end_ms - 1) DIV ${p.w}L) * ${p.w}L").as("w_start_ms"))
         .agg(sum(col("n_events")).as("n_events_w"),
           count(lit(1)).as("n_sessions"))
-        .select(col("key").as("user_id"), col("w_start_ms"),
+        .select(col("user_id"), col("w_start_ms"),
           col("n_events_w"), col("n_sessions"))
         .orderBy(col("user_id"), col("w_start_ms"))
     }
+
+  /** One streaming fuzz family: its seed floor, its letter, and the
+    * seed's params, generator and batch twin.
+    */
+  private[graft] case class Family(floor: Long, name: String,
+      params: Long => Product, gen: (Long, DriveCfg) => SGen,
+      twin: Long => (SparkSession, String) => DataFrame)
+
+  /** THE seed→family table, in floor order: [[generate]], [[twinFor]]
+    * and [[paramsFor]] all resolve a seed through [[familyFor]] (their
+    * copies once drifted — a probe mis-dispatched sub-JoinJoin seeds).
+    */
+  private[graft] val families: Seq[Family] = Seq(
+    Family(AggSeedFloor, "A", aggP, genAgg, aggTwin),
+    Family(QuotaSeedFloor, "B", quotaP, genQuota, quotaTwin),
+    Family(SessionSeedFloor, "C", sessionP, genSession, sessionTwin),
+    Family(JoinSeedFloor, "D", joinP, genJoin, joinTwin),
+    Family(DedupSeedFloor, "E", dedupP, genDedup, dedupTwin),
+    Family(DedupWmSeedFloor, "F", dedupWmP, genDedupWm, dedupWmTwin),
+    Family(JoinExtSeedFloor, "G", joinPExt, genJoinExt, joinExtTwin),
+    Family(ChainSeedFloor, "H", chainP, genChain, chainTwin),
+    Family(UnionSeedFloor, "I", unionP, genUnion, unionTwin),
+    Family(AggAggSeedFloor, "J", aggAggP, genAggAgg, aggAggTwin),
+    Family(Chain3SeedFloor, "K", chain3P, genChain3, chain3Twin),
+    Family(TwsJoinSeedFloor, "L", twsJoinP, genTwsJoin, twsJoinTwin),
+    Family(DedupAggSeedFloor, "M", dedupAggP, genDedupAgg, dedupAggTwin),
+    Family(JoinJoinSeedFloor, "N", joinJoinP, genJoinJoin, joinJoinTwin),
+    Family(DedupJoinSeedFloor, "O", dedupJoinP, genDedupJoin, dedupJoinTwin),
+    Family(AggJoinSeedFloor, "P", aggJoinP, genAggJoin, aggJoinTwin),
+    Family(AggJoinOuterSeedFloor, "Q", aggJoinOuterP, genAggJoinOuter,
+      aggJoinOuterTwin),
+    Family(UnionJoinSeedFloor, "R", unionJoinP, genUnionJoin, unionJoinTwin),
+    Family(TwsAggSeedFloor, "S", twsAggP, genTwsAgg, twsAggTwin),
+    Family(DedupSessSeedFloor, "T", dedupSessP, genDedupSess, dedupSessTwin),
+    Family(JoinDedupSeedFloor, "U", joinDedupP, genJoinDedup, joinDedupTwin),
+    Family(SessRollupSeedFloor, "V", sessRollupP, genSessRollup,
+      sessRollupTwin))
+
+  /** The family owning `seed` (seeds below the first floor belong to
+    * family A). The [20000, 40000) gap belongs to QueryFuzz: silently
+    * routing it to family P would drive a batch-owned seed under a
+    * colliding fuzz_q name, so it is a hard error.
+    */
+  private[graft] def familyFor(seed: Long): Family =
+    if (seed >= BatchOwnedFloor && seed < AggJoinOuterSeedFloor)
+      throw new IllegalArgumentException(
+        s"seed $seed is in the QueryFuzz-owned batch range " +
+          s"[$BatchOwnedFloor, $AggJoinOuterSeedFloor); streaming seeds " +
+          "are below 20000 or at 40000+")
+    else families.takeWhile(_.floor <= seed).lastOption
+      .getOrElse(families.head)
 
   /** Deterministic per-seed rendering (same contract as
     * [[QueryFuzz.generate]]); `cfg` only varies HOW the seed is driven —
     * the oracle SQL is cfg-independent by construction.
     */
   def generate(seed: Long, cfg: DriveCfg = DriveCfg()): SGen =
-    if (seed >= SessRollupSeedFloor) genSessRollup(seed, cfg)
-    else if (seed >= JoinDedupSeedFloor) genJoinDedup(seed, cfg)
-    else if (seed >= DedupSessSeedFloor) genDedupSess(seed, cfg)
-    else if (seed >= TwsAggSeedFloor) genTwsAgg(seed, cfg)
-    else if (seed >= UnionJoinSeedFloor) genUnionJoin(seed, cfg)
-    else if (seed >= AggJoinOuterSeedFloor) genAggJoinOuter(seed, cfg)
-    // the [20000, 40000) gap belongs to QueryFuzz: silently routing it
-    // to family P would drive a batch-owned seed under a colliding
-    // fuzz_q name, so it is a hard error here
-    else if (seed >= BatchOwnedFloor) throw new IllegalArgumentException(
-      s"seed $seed is in the QueryFuzz-owned batch range " +
-        s"[$BatchOwnedFloor, $AggJoinOuterSeedFloor); streaming seeds " +
-        "are below 20000 or at 40000+")
-    else if (seed >= AggJoinSeedFloor) genAggJoin(seed, cfg)
-    else if (seed >= DedupJoinSeedFloor) genDedupJoin(seed, cfg)
-    else if (seed >= JoinJoinSeedFloor) genJoinJoin(seed, cfg)
-    else if (seed >= DedupAggSeedFloor) genDedupAgg(seed, cfg)
-    else if (seed >= TwsJoinSeedFloor) genTwsJoin(seed, cfg)
-    else if (seed >= Chain3SeedFloor) genChain3(seed, cfg)
-    else if (seed >= AggAggSeedFloor) genAggAgg(seed, cfg)
-    else if (seed >= UnionSeedFloor) genUnion(seed, cfg)
-    else if (seed >= ChainSeedFloor) genChain(seed, cfg)
-    else if (seed >= JoinExtSeedFloor) genJoinExt(seed, cfg)
-    else if (seed >= DedupWmSeedFloor) genDedupWm(seed, cfg)
-    else if (seed >= DedupSeedFloor) genDedup(seed, cfg)
-    else if (seed >= JoinSeedFloor) genJoin(seed, cfg)
-    else if (seed >= SessionSeedFloor) genSession(seed, cfg)
-    else if (seed >= QuotaSeedFloor) genQuota(seed, cfg)
-    else genAgg(seed, cfg)
+    familyFor(seed).gen(seed, cfg)
 
-  /** THE seed→batch-twin dispatch, mirroring [[generate]] exactly.
-    * Formerly hand-copied in four places (StreamFuzzSpec,
-    * RocksDbSweepSpec, FuzzSeedScan, JoinJoinProbe), which drifted —
-    * JoinJoinProbe's final else mis-dispatched sub-JoinJoin seeds. Every
-    * tool/spec resolves twins through here now.
-    */
+  /** The seed's in-Spark batch twin. */
   def twinFor(seed: Long): (SparkSession, String) => DataFrame =
-    if (seed >= SessRollupSeedFloor) sessRollupTwin(seed)
-    else if (seed >= JoinDedupSeedFloor) joinDedupTwin(seed)
-    else if (seed >= DedupSessSeedFloor) dedupSessTwin(seed)
-    else if (seed >= TwsAggSeedFloor) twsAggTwin(seed)
-    else if (seed >= UnionJoinSeedFloor) unionJoinTwin(seed)
-    else if (seed >= AggJoinOuterSeedFloor) aggJoinOuterTwin(seed)
-    else if (seed >= BatchOwnedFloor) throw new IllegalArgumentException(
-      s"seed $seed is QueryFuzz-owned; no streaming twin exists")
-    else if (seed >= AggJoinSeedFloor) aggJoinTwin(seed)
-    else if (seed >= DedupJoinSeedFloor) dedupJoinTwin(seed)
-    else if (seed >= JoinJoinSeedFloor) joinJoinTwin(seed)
-    else if (seed >= DedupAggSeedFloor) dedupAggTwin(seed)
-    else if (seed >= TwsJoinSeedFloor) twsJoinTwin(seed)
-    else if (seed >= Chain3SeedFloor) chain3Twin(seed)
-    else if (seed >= AggAggSeedFloor) aggAggTwin(seed)
-    else if (seed >= UnionSeedFloor) unionTwin(seed)
-    else if (seed >= ChainSeedFloor) chainTwin(seed)
-    else if (seed >= JoinExtSeedFloor) joinExtTwin(seed)
-    else if (seed >= DedupWmSeedFloor) dedupWmTwin(seed)
-    else if (seed >= DedupSeedFloor) dedupTwin(seed)
-    else if (seed >= JoinSeedFloor) joinTwin(seed)
-    else if (seed >= SessionSeedFloor) sessionTwin(seed)
-    else if (seed >= QuotaSeedFloor) quotaTwin(seed)
-    else aggTwin(seed)
+    familyFor(seed).twin(seed)
 
-  /** The family params for a seed (scanner/probe labeling), same
-    * dispatch as [[generate]]/[[twinFor]].
-    */
-  def paramsFor(seed: Long): Product =
-    if (seed >= SessRollupSeedFloor) sessRollupP(seed)
-    else if (seed >= JoinDedupSeedFloor) joinDedupP(seed)
-    else if (seed >= DedupSessSeedFloor) dedupSessP(seed)
-    else if (seed >= TwsAggSeedFloor) twsAggP(seed)
-    else if (seed >= UnionJoinSeedFloor) unionJoinP(seed)
-    else if (seed >= AggJoinOuterSeedFloor) aggJoinOuterP(seed)
-    else if (seed >= BatchOwnedFloor) throw new IllegalArgumentException(
-      s"seed $seed is QueryFuzz-owned; no streaming params exist")
-    else if (seed >= AggJoinSeedFloor) aggJoinP(seed)
-    else if (seed >= DedupJoinSeedFloor) dedupJoinP(seed)
-    else if (seed >= JoinJoinSeedFloor) joinJoinP(seed)
-    else if (seed >= DedupAggSeedFloor) dedupAggP(seed)
-    else if (seed >= TwsJoinSeedFloor) twsJoinP(seed)
-    else if (seed >= Chain3SeedFloor) chain3P(seed)
-    else if (seed >= AggAggSeedFloor) aggAggP(seed)
-    else if (seed >= UnionSeedFloor) unionP(seed)
-    else if (seed >= ChainSeedFloor) chainP(seed)
-    else if (seed >= JoinExtSeedFloor) joinPExt(seed)
-    else if (seed >= DedupWmSeedFloor) dedupWmP(seed)
-    else if (seed >= DedupSeedFloor) dedupP(seed)
-    else if (seed >= JoinSeedFloor) joinP(seed)
-    else if (seed >= SessionSeedFloor) sessionP(seed)
-    else if (seed >= QuotaSeedFloor) quotaP(seed)
-    else aggP(seed)
+  /** The family params for a seed (scanner/probe labeling). */
+  def paramsFor(seed: Long): Product = familyFor(seed).params(seed)
 
   /** Fixed seeds registered in SparkEntry for the driver's DuckDB
     * differential check. Chosen to cover both carvings and several
@@ -3527,8 +2412,8 @@ object StreamFuzz {
       16010L, 16502L, 17005L, 17502L, 18005L, 18503L, 19013L, 19514L,
       40004L, 40507L, 41013L, 41507L, 42012L, 42505L)
 
-  private val RestartCfg = DriveCfg(tag = "r", restart = true)
-  private val MultiCfg =
+  private[graft] val RestartCfg = DriveCfg(tag = "r", restart = true)
+  private[graft] val MultiCfg =
     DriveCfg(tag = "m", filesPerWave = 3, statePartitions = Some(2))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -49,7 +49,11 @@ final class JdbcBucketWriter(url: String, table: String, ledger: Option[String],
     var done = false
     try {
       conn.setAutoCommit(false)
-      ledger.foreach(requireLedgerKey(conn, url, _))
+      ledger.foreach(l => requireUniqueKey(conn, url, l,
+        Seq("sink", "batch_id", "partition_id"), "exactly-once ledger",
+        "racing bucket attempts abort instead of double-applying"))
+      requireUniqueKey(conn, url, table, UpsertKey, "upsert table",
+        "concurrent bucket transactions not to deadlock on its scans")
       Using.Manager { use =>
         val upd = use(conn.prepareStatement(
           s"""UPDATE $table SET "hourly_precipitation" = ?
@@ -167,31 +171,42 @@ object JdbcBucketWriter {
     if (retry) retrying(conn, attempt + 1)(txn)
   }
 
-  // one verification per (url, ledger) per JVM; a failed check is not
+  /** The sinks' upsert key on the target table. */
+  private val UpsertKey = Seq("timestamp", "lat", "lon")
+
+  // one verification per (url, table) per JVM; a failed check is not
   // cached so every task re-checks and re-throws until the DDL is fixed
-  private val ledgerVerified =
+  private val keyVerified =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Enforce the exactly-once ledger contract: a UNIQUE index (PK) on
-    * exactly ("sink", "batch_id", "partition_id"). Without it, two racing
-    * attempts for one bucket could both pass the existence check and
-    * both commit — the constraint is what turns the second mark into a
-    * transaction abort.
+  /** Require a UNIQUE index (or PK) on exactly `cols` of `table`, probed
+    * once per (url, table) per JVM.
+    *
+    *  - The exactly-once ledger needs one on ("sink", "batch_id",
+    *    "partition_id"). Without it, two racing attempts for one bucket
+    *    could both pass the existence check and both commit — the
+    *    constraint is what turns the second mark into a transaction
+    *    abort.
+    *  - The upsert table needs one on ("timestamp", "lat", "lon").
+    *    Without it every UPDATE scans the table, and the concurrent
+    *    bucket transactions deadlock on each other's row locks (embedded
+    *    Derby) instead of failing.
     *
     * The metadata probe passes a null schema (searches the connection's
-    * default/search-path scope): if the target store resolves the ledger
+    * default/search-path scope): if the target store resolves the table
     * through a search path AND another schema holds a same-named keyed
-    * table, the probe could validate the wrong one — qualify the ledger
+    * table, the probe could validate the wrong one — qualify the table
     * name (`schema.table`) in such deployments.
     */
-  private def requireLedgerKey(conn: Connection, url: String, ledger: String): Unit = {
-    val key = s"$url#$ledger"
-    if (!ledgerVerified.contains(key)) {
+  private def requireUniqueKey(conn: Connection, url: String, table: String,
+      cols: Seq[String], role: String, why: String): Unit = {
+    val key = s"$url#$table"
+    if (!keyVerified.contains(key)) {
       val md = conn.getMetaData
-      val need = Set("sink", "batch_id", "partition_id")
+      val need = cols.toSet
       // identifier case differs per store (Derby/Postgres fold unquoted
       // names differently), so probe the spellings
-      val ok = Seq(ledger, ledger.toUpperCase, ledger.toLowerCase).distinct
+      val ok = Seq(table, table.toUpperCase, table.toLowerCase).distinct
         .exists { t =>
           Using.resource(md.getIndexInfo(null, null, t, true, false)) { rs =>
             val idxCols = mutable.Map.empty[String, mutable.Set[String]]
@@ -205,10 +220,10 @@ object JdbcBucketWriter {
           }
         }
       if (!ok) throw new IllegalStateException(
-        s"exactly-once ledger '$ledger' lacks a unique key on " +
-          """("sink", "batch_id", "partition_id") — required to make """ +
-          "racing bucket attempts abort instead of double-applying")
-      ledgerVerified.add(key)
+        s"$role '$table' lacks a unique key on " +
+          cols.map(c => s""""$c"""").mkString("(", ", ", ")") +
+          s" — required for $why")
+      keyVerified.add(key)
     }
   }
 }

@@ -179,7 +179,9 @@ object WeatherStreamJob {
     * deployment wants). Runs the [[jdbcExactlyOnceSink]] task layout with
     * the ledger steps left out: one connection per task, and per hash
     * bucket an UPDATE/INSERT pair committed as one transaction — the
-    * portable upsert that needs no engine-specific MERGE syntax.
+    * portable upsert that needs no engine-specific MERGE syntax. The
+    * table must carry a unique index on ("timestamp", "lat", "lon");
+    * both upsert sinks refuse one without it before writing anything.
     */
   def jdbcUpsertSink(url: String, table: String): (DataFrame, Long) => Unit =
     (batch, _) => writeBuckets(batch, new JdbcBucketWriter(url, table, None, 0L,

@@ -51,7 +51,7 @@ class JdbcSinkLayoutSpec extends AnyFunSuite {
 
   private val Base = 1736532000L // 2025-01-10 18:00:00 UTC
 
-  private def freshDb(name: String): String = {
+  private def freshDb(name: String, keyIndex: Boolean = true): String = {
     val url = s"jdbc:derby:memory:$name;create=true"
     val c = DriverManager.getConnection(url)
     try {
@@ -60,7 +60,8 @@ class JdbcSinkLayoutSpec extends AnyFunSuite {
         """CREATE TABLE weather_data (
           |"timestamp" TIMESTAMP, "lat" DOUBLE, "lon" DOUBLE,
           |"hourly_precipitation" DOUBLE)""".stripMargin)
-      st.execute("""CREATE UNIQUE INDEX weather_key ON weather_data ("timestamp", "lat", "lon")""")
+      if (keyIndex)
+        st.execute("""CREATE UNIQUE INDEX weather_key ON weather_data ("timestamp", "lat", "lon")""")
       st.execute(
         """CREATE TABLE batch_commits (
           |"sink" VARCHAR(128), "batch_id" BIGINT, "partition_id" INT,
@@ -183,5 +184,23 @@ class JdbcSinkLayoutSpec extends AnyFunSuite {
       (Base, 52.0, 5.1) -> 0.5, (Base + 3600L, 52.0, 5.1) -> 1.0,
       (Base + 7200L, 52.0, 5.1) -> 2.0))
     assert(marks(url) == Set(3, 5))
+  }
+
+  test("both upsert sinks refuse a table without a unique index on the key " +
+      "and write no row and no mark") {
+    val batch = keys(50)
+    Seq[(String, String => (DataFrame, Long) => Unit)](
+      "sinknokeyxo" -> (WeatherStreamJob.jdbcExactlyOnceSink(_, "weather_data")),
+      "sinknokeyup" -> (WeatherStreamJob.jdbcUpsertSink(_, "weather_data"))
+    ).foreach { case (db, sinkFor) =>
+      val url = freshDb(db, keyIndex = false)
+      val e = intercept[org.apache.spark.SparkException](sinkFor(url)(batch, 0L))
+      def chain(t: Throwable): Seq[Throwable] =
+        if (t == null) Nil else t +: chain(t.getCause)
+      assert(chain(e).exists(t => t.getMessage != null &&
+        t.getMessage.contains("lacks a unique key")), s"$db: expected the key error, got $e")
+      assert(table(url).isEmpty, s"$db wrote rows")
+      assert(marks(url).isEmpty, s"$db wrote marks")
+    }
   }
 }

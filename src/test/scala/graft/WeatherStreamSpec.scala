@@ -179,12 +179,15 @@ class WeatherStreamSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val url = "jdbc:derby:memory:weatherup;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
-    try conn.createStatement().execute(
-      """CREATE TABLE weather_data (
-        |"id" INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
-        |"timestamp" TIMESTAMP, "lat" DOUBLE, "lon" DOUBLE,
-        |"hourly_precipitation" DOUBLE)""".stripMargin)
-    finally conn.close()
+    try {
+      val st = conn.createStatement()
+      st.execute(
+        """CREATE TABLE weather_data (
+          |"id" INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
+          |"timestamp" TIMESTAMP, "lat" DOUBLE, "lon" DOUBLE,
+          |"hourly_precipitation" DOUBLE)""".stripMargin)
+      st.execute("""CREATE UNIQUE INDEX weather_key ON weather_data ("timestamp", "lat", "lon")""")
+    } finally conn.close()
 
     val stream = MemoryStream[String]
     val ckpt = Files.createTempDirectory("weather_upsert_ckpt").toString
@@ -217,6 +220,7 @@ class WeatherStreamSpec extends AnyFunSuite {
           |"id" INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
           |"timestamp" TIMESTAMP, "lat" DOUBLE, "lon" DOUBLE,
           |"hourly_precipitation" DOUBLE)""".stripMargin)
+      st.execute("""CREATE UNIQUE INDEX weather_key ON weather_data ("timestamp", "lat", "lon")""")
       st.execute(
         """CREATE TABLE batch_commits (
           |"sink" VARCHAR(128), "batch_id" BIGINT, "partition_id" INT,
@@ -269,6 +273,7 @@ class WeatherStreamSpec extends AnyFunSuite {
           |"id" INT GENERATED ALWAYS AS IDENTITY PRIMARY KEY,
           |"timestamp" TIMESTAMP, "lat" DOUBLE, "lon" DOUBLE,
           |"hourly_precipitation" DOUBLE)""".stripMargin)
+      st.execute("""CREATE UNIQUE INDEX weather_key ON weather_data ("timestamp", "lat", "lon")""")
       st.execute(
         """CREATE TABLE batch_commits (
           |"sink" VARCHAR(128), "batch_id" BIGINT, "partition_id" INT,

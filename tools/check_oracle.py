@@ -112,7 +112,12 @@ def main(sf_dir, out_dir):
                 print(f"         spark-only: {only_g}")
             if only_e:
                 print(f"         oracle-only: {only_e}")
-    n_checked = len([n for n in names if n in oracle])
+    # an oracle name with no dump is a failure: a Verify run that died
+    # halfway must not read as a pass over the queries it did write
+    missing = sorted(set(oracle) - set(names))
+    for name in missing:
+        print(f"[MISS ] {name}: no dump under {out_dir}")
+    n_checked = len([n for n in names if n in oracle]) + len(missing)
     print(f"== {n_ok}/{n_checked} oracle-checked queries match ==")
     if n_typed_bad:
         print(f"== {n_typed_bad} oracle(s) with int128-backed columns — driver would hash-fail ==")

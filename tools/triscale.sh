@@ -17,14 +17,23 @@ for sf in sf0.001 sf0.01; do
   dir="/root/testdata/$sf"
   out="$OUT/$sf"
   echo "== $sf: verify dump =="
-  sbt -batch "runMain graft.Verify $dir $out" >"$OUT.$sf.verify.log" 2>&1
+  if ! sbt -batch "runMain graft.Verify $dir $out" >"$OUT.$sf.verify.log" 2>&1; then
+    echo "!! $sf: graft.Verify exited non-zero (see $OUT.$sf.verify.log)"
+    fail=1
+  fi
   if grep -q "\[verify\].*failed\|\[verify\].*TIMED OUT" "$OUT.$sf.verify.log"; then
     echo "!! $sf: query failures in $OUT.$sf.verify.log"
     grep "\[verify\]" "$OUT.$sf.verify.log" | head
     fail=1
   fi
   echo "== $sf: DuckDB oracle compare =="
-  if ! python3 tools/check_oracle.py "$dir" "$out" | tail -5; then
+  # the compare's own exit status, not tail's: a pipeline reports its
+  # last command unless pipefail is set
+  python3 tools/check_oracle.py "$dir" "$out" >"$OUT.$sf.oracle.log" 2>&1
+  rc=$?
+  grep -E "^\[(FAIL |ERROR|MISS |TYPE )\]" "$OUT.$sf.oracle.log" | head -20
+  tail -2 "$OUT.$sf.oracle.log"
+  if [ $rc -ne 0 ]; then
     fail=1
   fi
 done
